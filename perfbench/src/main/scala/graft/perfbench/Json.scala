@@ -1,0 +1,21 @@
+package graft.perfbench
+
+/** The few JSON shapes the benchmark prints (no JSON writer on the classpath
+  * is needed for flat objects of numbers and strings).
+  */
+object Json {
+  def num(v: Double): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
+    else v.toString
+
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
+}
