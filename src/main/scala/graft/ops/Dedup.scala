@@ -48,14 +48,17 @@ import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
   * sparse rep-level pair graph and members inherit their rep's component
   * through one join.
   *
-  * Caching: no `persist`, no caller contract. The multiply-consumed
-  * shingle/signature relations are materialized exactly once via
-  * [[materializedOnce]] (localCheckpoint — evictable block storage,
+  * Caching: no `persist`, no caller contract. The single-action pair
+  * operators materialize their multiply-consumed shingle/signature relation
+  * once via [[materializedOnce]] (localCheckpoint — evictable block storage,
   * auto-released by the ContextCleaner; see its scaladoc for why
   * ReuseExchange alone was measured insufficient, and for the size-aware
-  * skip below which the checkpoint is pure overhead). CacheHygieneSpec asserts
-  * the cache manager stays empty after every dedup action, so library
-  * callers cannot leak cached plans.
+  * skip below which the checkpoint is pure overhead). The two-action
+  * decision [[dupClusters]] pins its one per-doc relation
+  * ([[decisionBase]]) UNCONDITIONALLY — exchange reuse cannot cross its
+  * CC-materialization/decision action boundary at any input size.
+  * CacheHygieneSpec asserts the cache manager stays empty after every dedup
+  * action, so library callers cannot leak cached plans.
   */
 object Dedup {
 
@@ -148,10 +151,10 @@ object Dedup {
   }
 
   /** Materialize a multiply-consumed expensive relation exactly once, as
-    * block-manager storage (`localCheckpoint`). Why not rely on AQE
-    * ReuseExchange: (a) it cannot cross ACTIONS, and the dedup decision is
-    * inherently multi-action (the iterative CC materialization and the final
-    * survivor join are separate jobs over the same shingle relation); (b)
+    * block-manager storage (`localCheckpoint`), for the single-action pair
+    * operators ([[ngramJaccard]], [[minhashLsh]], [[simhashPairs]]). Why not
+    * rely on AQE ReuseExchange: (a) it cannot cross ACTIONS (which is why
+    * the multi-action [[dupClusters]] pins unconditionally instead); (b)
     * measured on the 600k-doc scaling corpus, the shingle derivation's
     * exchange was NOT deduplicated even within one action — the identical
     * 0.41 GB exchange was written THREE times (verify side a, verify side b,
@@ -194,10 +197,26 @@ object Dedup {
       df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
     else df
 
-  /** Distinct n-gram token shingles: (doc_id, s). Docs shorter than n tokens
-    * emit none — the size guard matters because `sequence(1, size-n+1)`
-    * DESCENDS when size < n (Spark defaults to step -1 when start > stop) and
-    * the slice at index 0 then throws INVALID_PARAMETER_VALUE.START.
+  /** The n-gram token shingles of the token-array column `ts`, one per
+    * position (duplicates kept). Docs shorter than n tokens yield none — the
+    * size guard matters because `sequence(1, size-n+1)` DESCENDS when
+    * size < n (Spark defaults to step -1 when start > stop) and the slice at
+    * index 0 then throws INVALID_PARAMETER_VALUE.START.
+    *
+    * `ts` is PROJECTED by the caller so the lambda slices a bound column:
+    * higher-order functions evaluate interpreted with no loop-invariant
+    * hoisting, so a `split(text, ' ')` INSIDE the lambda body re-splits the
+    * document once per shingle position — O(tokens²) work per row (guide
+    * §1.2 step 2 / §4: fix the per-task expression work).
+    */
+  private def grams(n: Int): Column =
+    when(size(col("ts")) >= n, expr(
+      s"transform(sequence(1, size(ts) - ${n - 1}), " +
+        s"i -> array_join(slice(ts, i, $n), ' '))"))
+      .otherwise(expr("cast(array() as array<string>)"))
+
+  /** Distinct n-gram token shingles: (doc_id, s) ([[grams]] of the text's
+    * space-split tokens).
     *
     * Partitioned BY doc_id before the distinct: HashPartitioning(doc_id)
     * satisfies the clustered distributions of the distinct (keys doc_id, s),
@@ -207,19 +226,9 @@ object Dedup {
     * old persist-and-clearCache contract).
     */
   def shingles(corpus: DataFrame, n: Int = 3): DataFrame = {
-    // `ts` is PROJECTED first so the lambda slices a bound column: higher-
-    // order functions evaluate interpreted with no loop-invariant hoisting,
-    // so a `split(text, ' ')` INSIDE the lambda body re-splits the document
-    // once per shingle position — O(tokens²) work per row (guide §1.2 step
-    // 2 / §4: fix the per-task expression work). One split per row, same
-    // shingle strings.
-    val grams = when(size(col("ts")) >= n, expr(
-      s"transform(sequence(1, size(ts) - ${n - 1}), " +
-        s"i -> array_join(slice(ts, i, $n), ' '))"))
-      .otherwise(expr("cast(array() as array<string>)"))
     val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     corpus.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode(grams).as("s"))
+      .select(col("doc_id"), explode(grams(n)).as("s"))
       // explicit np: same rationale as exactCollapse — AQE would coalesce
       // the small-input exchange to one partition and serialize the
       // signature/verify consumers hanging off this ONE shared exchange
@@ -235,13 +244,23 @@ object Dedup {
     sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       .select(col("doc_id").as("rep_id"), col("n"))
 
-  /** Exact verify shared by the candidate-generating dedup plans: intersect
-    * full shingle sets only for candidate pairs (a, b), keep pairs with
-    * Jaccard >= numer/denom; integer arithmetic only
-    * (denom*common >= numer*union). Output: (a, b, common, union_).
+  /** Exact verify shared by the candidate-generating dedup plans over a
+    * (doc_id, s) shingle relation, which must be DISTINCT per (doc_id, s)
+    * ([[shingles]] is): each doc's shingles fold into one array and
+    * [[verifyArrays]] intersects them. Output: (a, b, common, union_).
     */
   private[graft] def verifyJaccard(
-      cands: DataFrame, sh: DataFrame, numer: Int, denom: Int): DataFrame = {
+      cands: DataFrame, sh: DataFrame, numer: Int, denom: Int): DataFrame =
+    verifyArrays(cands,
+      sh.groupBy(col("doc_id")).agg(collect_list(col("s")).as("ss")), numer, denom)
+
+  /** Intersect full shingle sets only for candidate pairs (a, b), keep
+    * pairs with Jaccard >= numer/denom; integer arithmetic only
+    * (denom*common >= numer*union). `arr` is (doc_id, ss) with ss each
+    * doc's DISTINCT shingles. Output: (a, b, common, union_).
+    */
+  private def verifyArrays(
+      cands: DataFrame, arr: DataFrame, numer: Int, denom: Int): DataFrame = {
     // Candidate verification as ONE row per (pair, side), not one row per
     // (pair, shingle): the old shape joined cands against the shingle
     // relation on each side and hash-joined (b, s) keys — ~2·|sh_doc| rows
@@ -254,7 +273,6 @@ object Dedup {
     // union_ = |sa| + |sb| − common are exactly the old count/count-sum
     // values; intersection cardinality is order-free, so the nondeterminism
     // of collect_list order never reaches the output.
-    val arr = sh.groupBy(col("doc_id")).agg(collect_list(col("s")).as("ss"))
     cands
       .join(arr.select(col("doc_id").as("a"), col("ss").as("sa")), "a")
       .join(arr.select(col("doc_id").as("b"), col("ss").as("sb")), "b")
@@ -637,21 +655,55 @@ object Dedup {
         when(col("vec_id") =!= col("keep_id"), 1L).otherwise(0L).as("is_dup"))
   }
 
-  /** Representative-level LSH pairs (the CC input of [[dupClusters]]):
-    * collapse → shingles → capped candidates → exact verify, WITHOUT the
-    * member expansion. Its size depends only on the number of near-dup
-    * DISTINCT-text pairs — never on duplicate-cluster sizes (OpsSpec pins
-    * that a 1000-copy cluster leaves it unchanged). Output: (a, b) rep ids.
+  /** The one relation the dedup decision reads, pinned: the corpus
+    * exchanged ONCE by its content key, one row per doc as
+    * (doc_id, rep_id, has_sh, ss).
+    *  - rep_id = the exact group's min doc_id, a window min over that
+    *    exchange (as in [[exact]]);
+    *  - ss = the representative's DISTINCT 3-gram shingles as an array
+    *    (`array_distinct` over [[grams]] — no explode, shuffle, distinct),
+    *    null on member rows;
+    *  - has_sh = the doc has >= 3 tokens, i.e. its group has shingles (a
+    *    member's text equals its rep's, so the zero-shingle guard needs no
+    *    join to shingle sizes).
+    * Null-text docs are dropped: they have no content key, exactly as
+    * [[exactCollapse]]'s inner member join drops them.
+    */
+  private def decisionBase(corpus: DataFrame): DataFrame = {
+    val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    graft.kg.graph.GraphOps.pin(corpus
+      .where(col("text").isNotNull)
+      .select(col("doc_id"), col("text"), contentKey(col("text")).as("gh"))
+      // explicit np: same rationale as exactCollapse
+      .repartition(np, col("gh"))
+      .select(col("doc_id"), split(col("text"), " ").as("ts"),
+        min(col("doc_id")).over(Window.partitionBy(col("gh"))).as("rep_id"))
+      .select(col("doc_id"), col("rep_id"), (size(col("ts")) >= 3).as("has_sh"),
+        when(col("doc_id") === col("rep_id"), array_distinct(grams(3))).as("ss")))
+  }
+
+  /** Verified rep-level LSH pairs over [[decisionBase]]: signatures and
+    * capped candidates from [[lshCandidates]] over the exploded arrays,
+    * verify over the arrays themselves. Output: (a, b, common, union_).
+    */
+  private def baseRepPairs(base: DataFrame, numer: Int, denom: Int,
+      bands: Int, rows: Int, maxBucket: Int): DataFrame = {
+    val arr = base.where(col("ss").isNotNull).select(col("rep_id").as("doc_id"), col("ss"))
+    val sh = arr.select(col("doc_id"), explode(col("ss")).as("s"))
+    verifyArrays(lshCandidates(sh, bands, rows, portable = false, maxBucket), arr, numer, denom)
+  }
+
+  /** Representative-level LSH pairs (the CC input of [[dupClusters]], by
+    * the same derivation): pinned collapse → capped candidates → exact
+    * verify, WITHOUT the member expansion. Its size depends only on the
+    * number of near-dup DISTINCT-text pairs — never on duplicate-cluster
+    * sizes (OpsSpec pins that a 1000-copy cluster leaves it unchanged).
+    * Output: (a, b) rep ids.
     */
   private[graft] def lshRepPairs(corpus: DataFrame, numer: Int = 1, denom: Int = 2,
-      bands: Int = 32, rows: Int = 1, maxBucket: Int = 1000): DataFrame = {
-    val (reps, _) = exactCollapse(corpus)
-    val sh = materializedOnce(
-      shingles(reps.select(col("rep_id").as("doc_id"), col("text"))),
-      checkpointWorthwhile(corpus))
-    verifyJaccard(lshCandidates(sh, bands, rows, portable = false, maxBucket), sh, numer, denom)
+      bands: Int = 32, rows: Int = 1, maxBucket: Int = 1000): DataFrame =
+    baseRepPairs(decisionBase(corpus), numer, denom, bands, rows, maxBucket)
       .select(col("a"), col("b"))
-  }
 
   /** The dedup DECISION: near-dup pairs are only half the operator — a
     * training-data pipeline must pick one survivor per duplicate CLUSTER
@@ -669,29 +721,27 @@ object Dedup {
     * minimum doc_id (rep = min of its exact group; component = min rep);
     * docs in no pair keep themselves, and members of sub-n-token (zero-
     * shingle) exact groups keep themselves, mirroring the pair operators'
-    * no-signature behavior. Output: (doc_id, keep_id, is_dup).
+    * no-signature behavior. Docs with null text get NO decision row (they
+    * have no content key — the [[exactCollapse]] behavior the incremental
+    * path shares). Output: (doc_id, keep_id, is_dup).
+    *
+    * The corpus is scanned, hashed and shingled ONCE, into [[decisionBase]],
+    * pinned at every input size because two actions read it: the CC
+    * materialization and the caller's decision action (that relation ⋈
+    * components, no corpus re-scan — PlanShapeSpec pins it).
     */
   def dupClusters(corpus: DataFrame, numer: Int = 1, denom: Int = 2,
       bands: Int = 32, rows: Int = 1, maxBucket: Int = 1000): DataFrame = {
-    val (reps, members) = exactCollapse(corpus)
-    // materialized once: consumed by signatures + both verify sides during
-    // the CC materialization action AND by the survivor join's shingle sizes
-    // in the caller's final action — reuse across actions is impossible for
-    // ReuseExchange by construction
-    val sh = materializedOnce(
-      shingles(reps.select(col("rep_id").as("doc_id"), col("text"))),
-      checkpointWorthwhile(corpus))
-    val repPairs =
-      verifyJaccard(lshCandidates(sh, bands, rows, portable = false, maxBucket), sh, numer, denom)
+    val base = decisionBase(corpus)
     val comps = graft.kg.canon.ConnectedComponents
-      .run(repPairs.select(col("a").as("src"), col("b").as("dst")))
+      .run(baseRepPairs(base, numer, denom, bands, rows, maxBucket)
+        .select(col("a").as("src"), col("b").as("dst")))
       .select(col("node").as("rep_id"), col("component"))
-    members
-      .join(repShingleSizes(sh), Seq("rep_id"), "left")
+    base.select(col("doc_id"), col("rep_id"), col("has_sh"))
       .join(comps, Seq("rep_id"), "left")
       .select(col("doc_id"),
-        when(col("n").isNull, col("doc_id")) // zero-shingle group: keep self
-          .otherwise(coalesce(col("component"), col("rep_id"))).as("keep_id"))
+        when(col("has_sh"), coalesce(col("component"), col("rep_id")))
+          .otherwise(col("doc_id")).as("keep_id")) // zero-shingle group: keep self
       .select(col("doc_id"), col("keep_id"),
         when(col("doc_id") =!= col("keep_id"), 1L).otherwise(0L).as("is_dup"))
   }

@@ -190,6 +190,52 @@ class OpsSpec extends SparkTestBase {
     assert(rows.forall { case (d, k, dup) => (dup == 1L) == (k != d) })
   }
 
+  test("dup clusters == the collapse/shingles/LSH/verify/CC composition, row for row") {
+    val s = spark
+    import s.implicits._
+    // the decision rebuilt from the public helpers, one relation per layer
+    def composed(c: DataFrame, bands: Int, rows: Int): DataFrame = {
+      val (reps, members) = Dedup.exactCollapse(c)
+      val sh = Dedup.shingles(reps.select(col("rep_id").as("doc_id"), col("text")))
+      val pairs = Dedup.verifyJaccard(
+        Dedup.lshCandidates(sh, bands, rows, portable = false, maxBucket = 1000), sh, 1, 2)
+      val comps = graft.kg.canon.ConnectedComponents
+        .run(pairs.select(col("a").as("src"), col("b").as("dst")))
+        .select(col("node").as("rep_id"), col("component"))
+      members
+        .join(Dedup.repShingleSizes(sh), Seq("rep_id"), "left")
+        .join(comps, Seq("rep_id"), "left")
+        .select(col("doc_id"), when(col("n").isNull, col("doc_id"))
+          .otherwise(coalesce(col("component"), col("rep_id"))).as("keep_id"))
+        .select(col("doc_id"), col("keep_id"),
+          when(col("doc_id") =!= col("keep_id"), 1L).otherwise(0L).as("is_dup"))
+    }
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val adversarial = Seq[(Long, String)](
+      (3000001L, null), (3000002L, null),            // no content key
+      (3000003L, ""), (3000004L, ""),
+      (3000005L, "solo"), (3000006L, "solo"),        // 1- and 2-token copies
+      (3000007L, "two words"), (3000008L, "two words"),
+      (3000009L, "a  b c"), (3000010L, "a  b c"),    // double spaces: empty tokens
+      (3000011L, "a b  c"),
+      (3000012L, "x y x y x y x y"),                 // repeated shingles within a doc;
+      (3000013L, "x y x y x y x y x")                // J = 1 only over DISTINCT shingles
+    ).toDF("doc_id", "text")
+    val copyText = corpus.where(col("doc_id") === 0L).head().getString(1)
+    val cluster = spark.range(1000)
+      .select((col("id") + 4000000L).as("doc_id"), lit(copyText).as("text"))
+    val c = corpus.unionByName(adversarial).unionByName(cluster)
+    for ((bands, rws) <- Seq((16, 2), (32, 1))) {
+      val got = rows(Dedup.dupClusters(c, bands = bands, rows = rws))
+      assert(got === rows(composed(c, bands, rws)), s"${bands}x$rws")
+      assert(!got.exists(r => r._1 == 3000001L || r._1 == 3000002L),
+        "null-text docs get no decision row")
+      assert(got.contains((3000013L, 3000012L, 1L)), "repeated-token near-dup missed")
+      assert(got.contains((3000006L, 3000006L, 0L)), "zero-shingle copies keep themselves")
+    }
+  }
+
   test("hot-bucket guard: a 1000-copy cluster never inflates the CC pair graph") {
     val base = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))

@@ -116,6 +116,18 @@ class PlanShapeSpec extends SparkTestBase {
       "shingle derivation must not be recomputed downstream of the checkpoint")
   }
 
+  test("dedup decision action reads only the pinned collapse and the components") {
+    val corpus = graft.ops.Dedup.derivedCorpus(spark.read.parquet(s"$sf/documents.parquet"))
+    // dupClusters runs the CC materialization while it builds the frame it
+    // returns; collecting that frame is the decision action
+    val df = graft.ops.Dedup.dupClusters(corpus, bands = 16, rows = 2)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    for (rederived <- Seq("Scan parquet", "sha2(", "slice(split("))
+      assert(!p.contains(rederived),
+        s"decision action re-derives the collapse or shingles ($rederived):\n${p.take(4000)}")
+  }
+
   test("batch top-k plans as two windows: per-(query,salt) pre-top-k then final") {
     val p = plan("sim_batch_topk")
     val windows = p.linesIterator.count(_.contains("Window ["))
