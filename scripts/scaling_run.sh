@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Alternating N/4N scaling evidence (BASELINE.md methodology): runs
-# graft.ScalingBench in interleaved (local[8], local[2]) pairs so VM
-# "weather" decorrelates, and prints the per-level walls. Median per level
+# graft.ScalingBench in interleaved (local[4N], local[N]) pairs so VM
+# "weather" decorrelates, and prints the per-level walls. 4N = nproc and
+# N = max(1, nproc/4) (local[4]/local[1] on a 4-core box). Median per level
 # and efficiency = (thru_4N / thru_N) / 4 are computed by the caller.
 #
 # Per-invocation sbt output is kept in /tmp/scaling-inv-<phase>-<pair>-<cpus>.log
@@ -20,8 +21,10 @@ export SPARK_GRAFT_PHASE="$PHASE"
 export SPARK_GRAFT_REPL="$REPL"
 export SPARK_GRAFT_RUNS="$RUNS"
 export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-8g}"
+HI="$(nproc)"
+LO=$(( HI / 4 > 0 ? HI / 4 : 1 ))
 for i in $(seq 1 "$PAIRS"); do
-  for CPUS in 8 2; do
+  for CPUS in "$HI" "$LO"; do
     echo "=== pair $i cpus=$CPUS phase=$PHASE repl=$REPL" >&2
     LOG="/tmp/scaling-inv-$PHASE-$i-$CPUS.log"
     SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.ScalingBench" >"$LOG" 2>&1

@@ -103,9 +103,9 @@ object BenchExtra {
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      // listener events drain asynchronously; give the bus a moment so the
+      // listener events arrive asynchronously; drain the bus so the
       // counters cover this query's tail
-      Thread.sleep(300)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
       println(f"[extra] $name%-36s wall=$wall%7.2f s rows=$n%7d " +
         f"jobs=${jobs.get}%3d stages=${stages.get}%4d tasks=${tasks.get}%5d " +
         f"taskSum=${taskTimeMs.get / 1000.0}%8.2f s gc=${gcTimeMs.get / 1000.0}%6.2f s " +

@@ -220,18 +220,17 @@ object Pipeline {
   def allTriplesRaw(postings: DataFrame, gaz: Gazetteers): DataFrame = {
     val prep = gaz.prep // prep-pass facts + validation, once per gaz instance
     val spans = Extractors.textSpans(postings)
-    val cands = graft.kg.graph.GraphOps.pin(Extractors
+    val cands = graft.Pin(Extractors
       .candidates(spans, prep.mentionTwoGramKinds, gaz.mentionDims.map(_._1)))
-    // pin (eager DISK_ONLY localCheckpoint), not persist: an
-    // InMemoryRelation keeps its full child plan under every one of the
-    // four consuming branches, so each downstream stage's task closure
-    // carried the whole scan+explode subtree — measured ~25% of worker CPU
-    // on this query family was java.io.ObjectInputStream deserializing
-    // those task binaries. The checkpoint truncates lineage to a LogicalRDD
-    // (small closures for every consumer and every follow-up action), costs
-    // one eager job over the same ~10-short-rows/doc relation the cache
-    // held anyway, and is auto-released by the ContextCleaner — the same
-    // trade as the graph family's pin.
+    // pin ([[graft.Pin]], which also states the cluster caveat), not
+    // persist: an InMemoryRelation keeps its full child plan under every
+    // one of the four consuming branches, so each downstream stage's task
+    // closure carried the whole scan+explode subtree — measured ~25% of
+    // worker CPU on this query family was java.io.ObjectInputStream
+    // deserializing those task binaries. The pin truncates lineage to a
+    // LogicalRDD (small closures for every consumer and every follow-up
+    // action) and costs one eager job over the same ~10-short-rows/doc
+    // relation the cache held anyway.
 
     val workload = cands.where(col("ctype") === "workload")
       .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), col("payload").as("obj"),

@@ -3,6 +3,8 @@ package graft.kg.canon
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** R13 — canonicalization of surface forms via iterative DataFrame connected
   * components (SURVEY.md §2.1, BASELINE.json:6: "iterative DataFrame
   * connected-components clustering").
@@ -11,11 +13,10 @@ import org.apache.spark.sql.functions._
   * "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
   * O(log n) rounds on any graph, using only groupBy-min and equi-joins (no
   * collect_list, no per-node neighborhood materialization, no RDDs, no
-  * GraphX). Each round is localCheckpoint'ed to cut the Catalyst lineage —
-  * without that the re-planned plan tree grows exponentially with iterations
-  * (SURVEY.md §4, the one place a naive build dies at scale; on a real
-  * cluster swap localCheckpoint for reliable checkpoint to also drop the
-  * executor-memory pin).
+  * GraphX). The input and each round are pinned ([[graft.Pin]]) to cut the
+  * Catalyst lineage — without that the re-planned plan tree grows
+  * exponentially with iterations (SURVEY.md §4, the one place a naive build
+  * dies at scale; [[graft.Pin]] states what changes on a cluster).
   *
   * Node ids are any Catalyst-orderable column type — the engine only uses
   * min/least/greatest/comparisons, so surface canonicalization runs it over
@@ -82,14 +83,13 @@ object ConnectedComponents {
     * cost nothing (the loop exits at the exact fixpoint).
     */
   def run(edges: DataFrame, maxIter: Int = 64): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
+    var e = Pin(edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
+      val next = Pin(smallStar(largeStar(e)))
       // EXACT set-equality fixpoint test, not a hash signature (a summed
       // per-edge hash can collide or cancel across a delta and declare
       // convergence mid-iteration — the unsound genre GraphOps's WSP fix

@@ -3,6 +3,8 @@ package graft.kg.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Graph analytics over the MATERIALIZED knowledge graph — the consumption
   * side of KG construction (SURVEY.md §2: once (subj, pred, obj) triples are
   * emitted, ranking/structure queries over the entity graph are what users
@@ -137,7 +139,7 @@ object GraphOps {
     * Output: (entity, rank_e6).
     */
   def pagerankWeighted(triples: DataFrame, iters: Int = 3): DataFrame =
-    pagerankWeightedOnEdges(pin(coocEdgesWeighted(triples)), iters)
+    pagerankWeightedOnEdges(Pin(coocEdgesWeighted(triples)), iters)
 
   /** [[pagerankWeighted]] over an already-materialized symmetric weighted
     * edge relation (x, y, w) — the [[materializedWeightedEdgeTable]]
@@ -160,13 +162,9 @@ object GraphOps {
     * iteration / three times in the triangle join). Without pinning, every
     * consumer re-derives edges from the corpus-sized triple relation —
     * measured on the unpinned plan: 1080 physical nodes, the triple
-    * pipeline replicated ~8× inside one action. An eager DISK_ONLY
-    * localCheckpoint (the [[graft.ops.Dedup]] materializedOnce pattern —
-    * auto-released blocks, no caller cache contract) cuts the re-derivation:
-    * the checkpoint is GRAPH-sized (distinct entity pairs), far below the
-    * corpus-sized input it would otherwise recompute, so unlike the
-    * size-aware shingle checkpoint this one is the right trade at every
-    * scale.
+    * pipeline replicated ~8× inside one action. [[graft.Pin]] cuts the
+    * re-derivation: the pin is GRAPH-sized (distinct entity pairs), far
+    * below the corpus-sized input it would otherwise recompute.
     *
     * SCOPE: this is the EXPLORATION-scale entry (one-shot sessions, no
     * standing tables). Every ITERATED consumer — pagerank/LPA/BFS/walk
@@ -178,15 +176,7 @@ object GraphOps {
     * workload 3). The registered `kg_entity_*` iterated queries read the
     * table; single-pass consumers (triangles, support, lift) stay here.
     */
-  def pinnedEdges(triples: DataFrame): DataFrame = pin(coocEdges(triples))
-
-  /** The materializedOnce primitive the graph family shares: eager
-    * DISK_ONLY localCheckpoint (auto-released blocks, no caller cache
-    * contract). Use it on any GRAPH-sized relation consumed more than
-    * once inside one plan — iterated joins, self-joins, peel rounds.
-    */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+  def pinnedEdges(triples: DataFrame): DataFrame = Pin(coocEdges(triples))
 
   /** Integer PageRank over the co-occurrence graph, `iters` synchronous
     * iterations statically unrolled (damping 85/100, jump mass 0.15e6;
@@ -307,7 +297,7 @@ object GraphOps {
     while (!converged && round < maxRounds) {
       val surv = e.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("x"))
-      val next = pin(e.join(surv, Seq("x"), "left_semi")
+      val next = Pin(e.join(surv, Seq("x"), "left_semi")
         .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"))
       val m = next.count()
       converged = m == n || m == 0L
@@ -406,7 +396,7 @@ object GraphOps {
     */
   def shortestPaths(triples: DataFrame, seeds: Seq[String],
       maxRounds: Int = 1024): DataFrame =
-    shortestPathsOnWeightedEdges(pin(coocEdgesWeighted(triples)), seeds, maxRounds)
+    shortestPathsOnWeightedEdges(Pin(coocEdgesWeighted(triples)), seeds, maxRounds)
 
   /** [[shortestPaths]] over an already-materialized symmetric weighted
     * edge relation (x, y, w) — the [[materializedWeightedEdgeTable]]
@@ -416,7 +406,7 @@ object GraphOps {
       maxRounds: Int = 1024): DataFrame = {
     require(seeds.nonEmpty, "shortestPaths needs a seed set")
     val edges = wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
-    var dist = pin(edges.select(col("x").as("n")).distinct()
+    var dist = Pin(edges.select(col("x").as("n")).distinct()
       .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")))
     def signature(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(
@@ -432,7 +422,7 @@ object GraphOps {
     while (!converged && round < maxRounds) {
       val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
         .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
-      val next = pin(dist.join(prop, col("n") === col("y"), "left")
+      val next = Pin(dist.join(prop, col("n") === col("y"), "left")
         .select(col("n"), least(col("d"), col("nd")).as("d")))
       val nextSig = signature(next)
       converged = nextSig == sig
@@ -457,7 +447,7 @@ object GraphOps {
   def hopBoundedShortestPaths(triples: DataFrame, seeds: Seq[String],
       rounds: Int = 4): DataFrame = {
     require(seeds.nonEmpty, "hopBoundedShortestPaths needs a seed set")
-    val edges = pin(coocEdgesWeighted(triples)
+    val edges = Pin(coocEdgesWeighted(triples)
       .select(col("x"), col("y"), expr("1000000 div w").as("c")))
     val init = edges.select(col("x").as("n")).distinct()
       .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d"))
@@ -697,7 +687,7 @@ object GraphOps {
     var labeled: DataFrame = null
     var round = 0
     while (labeled == null && round < maxRounds) {
-      val withSupp = pin(
+      val withSupp = Pin(
         half.join(edgeTriangleSupport(sym(half)), Seq("x", "y"), "left")
           .select(col("x"), col("y"),
             coalesce(col("supp"), lit(0L)).as("supp")))
@@ -839,11 +829,11 @@ object GraphOps {
         .where(col("l").isNull || col("r").isNull)
         .isEmpty
     var prev2: DataFrame = null
-    var cur = pin(lpaInit(edges))
+    var cur = Pin(lpaInit(edges))
     var result: DataFrame = null
     var round = 0
     while (result == null && round < maxRounds) {
-      val next = pin(lpaStep(edges, cur))
+      val next = Pin(lpaStep(edges, cur))
       if (same(next, cur)) result = next
       else if (prev2 != null && same(next, prev2))
         result = cur.select(col("n"), col("lab").as("la"))
@@ -972,10 +962,10 @@ object GraphOps {
         .agg(slice(array_sort(collect_set(col("h"))), 1, k).as("hs"))
         .select(col("node"), explode(col("hs")).as("h"))
     // r = 0: every node holds the sketch of {itself}
-    var r = pin(edges.select(col("x")).distinct()
+    var r = Pin(edges.select(col("x")).distinct()
       .select(col("x").as("node"), hash60(col("x")).as("h")))
     (1 to radius).map { _ =>
-      r = pin(bottomK(r.unionByName(
+      r = Pin(bottomK(r.unionByName(
         edges.join(r, col("x") === col("node"))
           .select(col("y").as("node"), col("h")))))
       r

@@ -105,14 +105,14 @@ object EmbeddingData {
     * Shape: ONE self-equi-join on walk_id (per-walk fan-out bounded by
     * (steps+1)·2·window, never corpus-quadratic) → count hash-agg
     * (partial-aggregatable map-side: hot pairs collapse before the
-    * shuffle). The walks input is eagerly checkpointed first (the
-    * pinnedEdges discipline) — load-bearing, not hygiene: walks are an
+    * shuffle). The walks input is pinned first ([[graft.Pin]])
+    * — load-bearing, not hygiene: walks are an
     * ITERATIVE derivation and the self-join references them twice, so an
     * un-materialized input would execute the whole walk computation once
     * per side.
     */
   def skipGramPairs(walks: DataFrame, window: Int = 2): DataFrame = {
-    val w = graft.kg.graph.GraphOps.pin(walks)
+    val w = graft.Pin(walks)
     w.select(col("walk_id"), col("step").as("i"), col("node").as("center"))
       .join(w.select(col("walk_id"), col("step").as("j"),
         col("node").as("context")), "walk_id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import graft.kg.expr.SignBands.signBands
 import graft.kg.expr.SignBandsAlgo
 import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
@@ -48,17 +49,13 @@ import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
   * sparse rep-level pair graph and members inherit their rep's component
   * through one join.
   *
-  * Caching: no `persist`, no caller contract. The single-action pair
-  * operators materialize their multiply-consumed shingle/signature relation
-  * once via [[materializedOnce]] (localCheckpoint — evictable block storage,
-  * auto-released by the ContextCleaner; see its scaladoc for why
-  * ReuseExchange alone was measured insufficient, and for the size-aware
-  * skip below which the checkpoint is pure overhead). The two-action
-  * decision [[dupClusters]] pins its one per-doc relation
-  * ([[decisionBase]]) UNCONDITIONALLY — exchange reuse cannot cross its
-  * CC-materialization/decision action boundary at any input size.
-  * CacheHygieneSpec asserts the cache manager stays empty after every dedup
-  * action, so library callers cannot leak cached plans.
+  * Caching: no `persist`, no caller contract. Every relation more than one
+  * consumer reads is materialized once through [[graft.Pin]] (see there for
+  * why a DISK_ONLY local checkpoint): the pair operators pin their shingle
+  * or signature relation, and the two-action decision [[dupClusters]] pins
+  * its one per-doc relation ([[decisionBase]]). CacheHygieneSpec asserts
+  * the cache manager stays empty after every dedup action, so library
+  * callers cannot leak cached plans.
   */
 object Dedup {
 
@@ -149,53 +146,6 @@ object Dedup {
       .select(col("doc_id"), col("rep_id"))
     (reps.select(col("rep_id"), col("text")), members)
   }
-
-  /** Materialize a multiply-consumed expensive relation exactly once, as
-    * block-manager storage (`localCheckpoint`), for the single-action pair
-    * operators ([[ngramJaccard]], [[minhashLsh]], [[simhashPairs]]). Why not
-    * rely on AQE ReuseExchange: (a) it cannot cross ACTIONS (which is why
-    * the multi-action [[dupClusters]] pins unconditionally instead); (b)
-    * measured on the 600k-doc scaling corpus, the shingle derivation's
-    * exchange was NOT deduplicated even within one action — the identical
-    * 0.41 GB exchange was written THREE times (verify side a, verify side b,
-    * signatures), 53% of the operator's total task time. Why not `persist`:
-    * that was round 2's design and it required a caller-side
-    * clearCache contract (round-2 verdict, "What's missing" #5);
-    * localCheckpoint blocks are evictable (MEMORY_AND_DISK) and are released
-    * automatically by the ContextCleaner when the relation becomes
-    * unreachable — no contract, CacheHygieneSpec-clean. At cluster scale
-    * this is one extra write of the relation to executor-local storage —
-    * strictly cheaper than recomputing a corpus-wide derivation 2–4×.
-    * localCheckpoint preserves the physical partitioning in the LogicalRDD,
-    * so downstream per-doc aggs/joins keep the clustering they relied on.
-    * DISK_ONLY storage: the relation can exceed the storage-memory pool at
-    * any scale (a 1M-doc run holds ~47M shingle rows), and an evicting
-    * MEMORY_AND_DISK checkpoint would compete with join/agg execution
-    * memory; executor-local disk behaves like one extra shuffle write and
-    * the OS page cache serves the re-reads.
-    *
-    * SIZE-AWARE: below [[CheckpointMinBytesKey]] (Catalyst's estimate of the
-    * source corpus relation, default 16 MB) the checkpoint is SKIPPED — for a
-    * small corpus the recompute being avoided costs less than the extra
-    * eager job + disk round-trip, and the measured 3×-recompute win only
-    * appears once the shingle relation is exchange-scale (600k-doc corpus:
-    * task time 1048→557 s WITH the checkpoint; sf0.1's 4250-doc corpus: the
-    * checkpoint is pure constant-factor overhead). The decision reads the
-    * CORPUS plan estimate, not the derived relation's — file sources give
-    * accurate bytes, so the branch is deterministic per input.
-    */
-  private[graft] val CheckpointMinBytesKey = "spark.graft.dedup.checkpointMinBytes"
-
-  private def checkpointWorthwhile(corpus: DataFrame): Boolean = {
-    val minBytes = BigInt(corpus.sparkSession.conf
-      .get(CheckpointMinBytesKey, (16L << 20).toString).toLong)
-    corpus.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
-  }
-
-  private def materializedOnce(df: DataFrame, checkpoint: Boolean): DataFrame =
-    if (checkpoint)
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    else df
 
   /** The n-gram token shingles of the token-array column `ts`, one per
     * position (duplicates kept). Docs shorter than n tokens yield none — the
@@ -332,12 +282,11 @@ object Dedup {
     // and reused (an aggregate+anti-join variant was measured ~45% slower:
     // its groupBy(s) is an extra full shuffle the window avoids)
     val w = Window.partitionBy(col("s"))
-    val sh = materializedOnce(
+    val sh = Pin(
       shingles(reps.select(col("rep_id").as("doc_id"), col("text")))
         .withColumn("df", count(lit(1)).over(w))
         .where(col("df") <= maxDf)
-        .drop("df"),
-      checkpointWorthwhile(corpus))
+        .drop("df"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common = sh.as("x").join(sh.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
@@ -509,9 +458,7 @@ object Dedup {
       bands: Int = 32, rows: Int = 1, portable: Boolean = false,
       maxBucket: Int = 1000): DataFrame = {
     val (reps, members) = exactCollapse(corpus)
-    val sh = materializedOnce(
-      shingles(reps.select(col("rep_id").as("doc_id"), col("text"))),
-      checkpointWorthwhile(corpus))
+    val sh = Pin(shingles(reps.select(col("rep_id").as("doc_id"), col("text"))))
     val repPairs =
       verifyJaccard(lshCandidates(sh, bands, rows, portable, maxBucket), sh, numer, denom)
     expandJaccardPairs(repPairs, members, repShingleSizes(sh), numer, denom)
@@ -557,9 +504,8 @@ object Dedup {
     val (reps, members) = exactCollapse(corpus)
     // one row per distinct text (small); both sides of the band self-join
     // re-derive it otherwise
-    val sigs = materializedOnce(
-      simhashSignatures(reps.select(col("rep_id").as("doc_id"), col("text"))),
-      checkpointWorthwhile(corpus))
+    val sigs = Pin(
+      simhashSignatures(reps.select(col("rep_id").as("doc_id"), col("text"))))
     val subsets = (0 until 6).combinations(3).toSeq
     val bandCols = subsets.zipWithIndex.map { case (blks, bi) =>
       val key = blks.zipWithIndex.map { case (blk, j) =>
@@ -671,7 +617,7 @@ object Dedup {
     */
   private def decisionBase(corpus: DataFrame): DataFrame = {
     val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    graft.kg.graph.GraphOps.pin(corpus
+    Pin(corpus
       .where(col("text").isNotNull)
       .select(col("doc_id"), col("text"), contentKey(col("text")).as("gh"))
       // explicit np: same rationale as exactCollapse

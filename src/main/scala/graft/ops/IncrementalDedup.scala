@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pin
+
 /** Incremental deduplication: given a COMMITTED deduped corpus and a newly
   * arrived shard, compute the updated dedup DECISION over (base ∪ shard)
   * without ever re-comparing base-vs-base — the job a real 100 TB pipeline
@@ -61,14 +63,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
-  /** Eager DISK_ONLY materialization (the [[graft.kg.graph.GraphOps.pin]]
-    * primitive) — shared by the commit/fold paths, which all write or
-    * consume their relations across SEVERAL actions where exchange reuse
-    * cannot reach.
-    */
-  private def pinned(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-
   /** Hard ceiling on a single fold's DISTINCT shard texts. The fold
     * broadcasts shard-derived key relations (content keys, matched ids,
     * candidate ids) so the committed corpus is never shuffled; an explicit
@@ -90,15 +84,14 @@ object IncrementalDedup {
       numer: Int = 1, denom: Int = 2, bands: Int = 32, rows: Int = 1,
       maxBucket: Int = 1000): Unit = {
     // the commit is FOUR write actions over shared derivations (reps feeds
-    // three of them, shingles two + the verify) — materialize both once,
-    // unconditionally: unlike the query-side size-aware skip, multi-action
+    // three of them, shingles two + the verify) — pin both once: multi-action
     // reuse is impossible for ReuseExchange at ANY size (measured at sf0.1:
     // the un-checkpointed commit re-derived collapse+shingles per action,
     // ~29 s vs ~20 s for the whole dedup_incremental query)
     val (rawReps, members0) = Dedup.exactCollapse(corpus)
-    val reps = pinned(rawReps)
+    val reps = Pin(rawReps)
     val members = members0
-    val sh = pinned(shinglesOf(reps))
+    val sh = Pin(shinglesOf(reps))
     val sizes = Dedup.repShingleSizes(sh)
     // gh (the sha2 content key) is STORED: the shard fold's attach join
     // then reads only (rep_id, gh) — no per-fold re-hash of the committed
@@ -138,7 +131,7 @@ object IncrementalDedup {
     buckets.repartition(np, col("band"), col("bucket"))
       .write.mode("overwrite").parquet(s"$stateDir/buckets")
     val cands = Dedup.lshCandidates(sh, bands, rows, portable = false, maxBucket)
-    val pairs = pinned(Dedup.verifyJaccard(cands, sh, numer, denom)
+    val pairs = Pin(Dedup.verifyJaccard(cands, sh, numer, denom)
       .select(col("a"), col("b")))
     pairs.repartition(np, col("a"))
       .write.mode("overwrite").parquet(s"$stateDir/pairs")
@@ -400,12 +393,12 @@ object IncrementalDedup {
       val f = foldShard(st.reps, st.buckets, shard, numer, denom, bands, rows, maxBucket)
       // pin each increment once: four write actions would otherwise re-run
       // the fold's base-side joins per action (same rationale as commitState)
-      val reps = pinned(f.newReps.join(f.newSizes, Seq("rep_id"), "left")
+      val reps = Pin(f.newReps.join(f.newSizes, Seq("rep_id"), "left")
         .select(col("rep_id"), col("text"), col("gh"),
           coalesce(col("n"), lit(0L)).as("n_shingles")))
-      val members = pinned(f.matchedMembers.unionByName(f.newMembers))
-      val buckets = pinned(f.newBuckets)
-      val pairs = pinned(f.newPairs)
+      val members = Pin(f.matchedMembers.unionByName(f.newMembers))
+      val buckets = Pin(f.newBuckets)
+      val pairs = Pin(f.newPairs)
       // overwrite: a half-written previous attempt under this tag is
       // replaced wholesale; nothing is visible until the marker lands
       reps.write.mode("overwrite").parquet(s"$incDir/reps")
@@ -445,7 +438,7 @@ object IncrementalDedup {
     // the pair chain, then the final decision action) — pin it once.
     // sMembers is only read by the single final action (member union), so
     // it stays lazy: one shard-sized recompute beats an eager job.
-    val sReps = pinned(sReps0)
+    val sReps = Pin(sReps0)
     // enforce the broadcast-sized-shard contract stated below: one
     // metadata-scale count over the eager checkpoint, failing fast with
     // the documented remediation instead of an opaque broadcast error
@@ -461,7 +454,7 @@ object IncrementalDedup {
     // three consumers across separate actions (member attach, new-rep anti
     // join, decision tail) and each un-pinned broadcast rebuild would
     // re-scan the committed reps — pin it so the base is scanned ONCE here
-    val matched = pinned(bKeyed
+    val matched = Pin(bKeyed
       .join(broadcast(sKeyed.select(col("gh"), col("rep_id").as("s_rep"))), "gh")
       .select(col("s_rep"), col("b_rep")))
     // shard members of a matched group become members of the EXISTING rep
@@ -470,7 +463,7 @@ object IncrementalDedup {
       .select(col("doc_id"), col("b_rep").as("rep_id"))
     // pinned for the same reason: consumed by the shingle chain, the member
     // semi join, the decision's size relation, and the state write
-    val newReps = pinned(sKeyed.join(
+    val newReps = Pin(sKeyed.join(
       broadcast(matched.select(col("s_rep").as("rep_id"))),
       Seq("rep_id"), "left_anti").select(col("rep_id"), col("text"), col("gh")))
     val newMembers = sMembers.join(broadcast(newReps.select("rep_id")),
@@ -508,9 +501,9 @@ object IncrementalDedup {
     //  - verifySh UNPINNED: the array-intersection verify folds it into
     //    per-rep arrays ONCE (single consumer — the old row-level verify
     //    read it three times, which is what justified the pin).
-    val newSh = pinned(shinglesOf(newReps).repartition(np, col("doc_id")))
+    val newSh = Pin(shinglesOf(newReps).repartition(np, col("doc_id")))
     val newSizes = Dedup.repShingleSizes(newSh)
-    val newBuckets = pinned(Dedup.bandBuckets(newSh, bands, rows, portable = false)
+    val newBuckets = Pin(Dedup.bandBuckets(newSh, bands, rows, portable = false)
       .withColumnRenamed("doc_id", "rep_id")
       .repartition(np, col("band"), col("bucket")))
     val touched = bBuckets.withColumn("is_new", lit(false))
@@ -549,7 +542,7 @@ object IncrementalDedup {
     // actions (the touched-component resolution inside the iterations and
     // the untouched-label passthrough in the decision action) — unpinned,
     // each would re-run the whole verify chain
-    val newPairs = pinned(Dedup.verifyJaccard(cands, verifySh, numer, denom)
+    val newPairs = Pin(Dedup.verifyJaccard(cands, verifySh, numer, denom)
       .select(col("a"), col("b")))
     ShardFold(matchedMembers, newReps, newMembers, newSizes, newBuckets, newPairs)
   }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * literal centroids → min_by assignment agg → posexplode sum/count agg →
   * collect k·d rows). Every iteration's plan starts flat from the source
   * relation + literal centroids: no lineage growth, so none of the
-  * localCheckpoint discipline the edge-state CC loop needs. This is the same
+  * [[graft.Pin]] discipline the edge-state CC loop needs. This is the same
   * "driver holds only metadata" rationale as CC's convergence signature and
   * the salt-measurement prep pass.
   */

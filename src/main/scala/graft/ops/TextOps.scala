@@ -410,15 +410,13 @@ object TextOps {
     val corpus = Dedup.derivedCorpus(docs)
     val stats = quality(corpus).select("doc_id", "n_tokens", "quality_e4")
     val lang = predLang(corpus).select("doc_id", "pred_lang")
-    // the gate output is PINNED (eager DISK_ONLY localCheckpoint — the
-    // GraphOps.pin primitive): it is read by TWO actions (dupClusters' own
-    // pin of its collapse, and the keepers join below), and un-pinned each
-    // re-ran the whole gate — quality scan, predLang trigram explode +
-    // broadcast join + two hash-aggs. The checkpoint is gate-OUTPUT-sized
-    // (survivors only), always smaller than the corpus passes it avoids, so
-    // unlike the size-aware shingle checkpoint this is the right trade at
-    // every scale.
-    val kept = graft.kg.graph.GraphOps.pin(
+    // the gate output is pinned ([[graft.Pin]]): it is read by TWO actions
+    // (dupClusters' own pin of its collapse, and the keepers join below),
+    // and un-pinned each re-ran the whole gate — quality scan, predLang
+    // trigram explode + broadcast join + two hash-aggs. The pin is
+    // gate-OUTPUT-sized (survivors only), always smaller than the corpus
+    // passes it avoids.
+    val kept = graft.Pin(
       corpus.select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .join(stats, "doc_id")
       .join(lang, Seq("doc_id"), "left")

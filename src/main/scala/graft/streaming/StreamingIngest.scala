@@ -155,7 +155,7 @@ object StreamingIngest {
         val storedTriples = existing(triplesDir).getOrElse(batch.limit(0))
         val storedWide = existing(wideDir).getOrElse(
           graft.kg.query.TripleStore.propertyTable(batch.limit(0)))
-        val next = graft.kg.graph.GraphOps.pin(
+        val next = graft.Pin(
           graft.kg.query.TripleStore.propertyTableIncrement(
             storedWide, storedTriples, batch))
         next.write.mode("overwrite").parquet(wideDir)

@@ -7,8 +7,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge into `private[sql]` Catalyst glue (Spark 4 removed the
   * public `new Column(expr)` constructor in the Column-node refactor). This
   * is the standard extension-library pattern: one file inside the
-  * `org.apache.spark.sql` package exposing exactly the two conversions our
-  * custom expressions need — nothing else from the private surface is used.
+  * `org.apache.spark.sql` package exposing exactly the private calls the
+  * library needs: the two Column/Expression conversions our custom
+  * expressions use, function registration, and the listener-bus drain.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -31,4 +32,11 @@ object Bridge {
       spark: SparkSession,
       ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
+
+  /** Block until every event posted so far has reached every listener
+    * (the `private[spark]` listener bus drain) — so a listener's counters
+    * cover the tail of the action that just returned.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

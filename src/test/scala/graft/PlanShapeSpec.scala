@@ -91,29 +91,29 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("dedup shingle relation is computed once and SHARED by all consumers") {
-    // the shingle relation feeds the signature agg, both verify sides, and
-    // the size agg; it is materialized exactly once (localCheckpoint — see
-    // Dedup.materializedOnce for why ReuseExchange alone was measured
-    // insufficient) and every consumer must scan the SAME checkpointed RDD:
-    // the plan shows multiple ExistingRDD scans and ZERO re-derivations of
-    // the shingle explode (no Generate node above a documents scan).
-    // the checkpoint is size-aware (skipped below CheckpointMinBytesKey —
-    // test inputs are tiny); force it so the big-corpus plan shape is what
-    // this test pins
-    spark.conf.set(graft.ops.Dedup.CheckpointMinBytesKey, "0")
-    spark.sharedState.cacheManager.clearCache()
-    val df = try SparkEntry.queries("dedup_minhash_lsh")(spark, sf)
-    finally spark.conf.unset(graft.ops.Dedup.CheckpointMinBytesKey)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    val rddScans = p.linesIterator.count(_.contains("Scan ExistingRDD"))
-    assert(rddScans >= 2,
-      s"expected the checkpointed shingle relation to be scanned by multiple consumers, got $rddScans:\n${p.take(4000)}")
-    // the shingle gram construction (slice of the token split) must appear
-    // NOWHERE in the final plan — every consumer reads the checkpoint (the
-    // band-key Generate is a different, legitimate explode)
-    assert(!p.contains("slice(split("),
-      "shingle derivation must not be recomputed downstream of the checkpoint")
+    // each pair operator's multiply-consumed relation (shingles for
+    // minhash/ngram, simhash signatures) is pinned once (graft.Pin — see
+    // there for why ReuseExchange alone was measured insufficient), at
+    // every input size, and every consumer must scan the SAME checkpointed
+    // RDD: the plan shows multiple ExistingRDD scans and ZERO re-derivations
+    // of the relation (its derivation marker appears nowhere in the plan;
+    // the band-key Generate is a different, legitimate explode). The
+    // shingle marker is the gram lambda's body: `split` is projected out
+    // of the lambda, so the plan renders `array_join(slice(ts, ...))`.
+    for ((query, marker) <- Seq(
+        "dedup_minhash_lsh" -> "array_join(slice(",
+        "dedup_ngram_jaccard" -> "array_join(slice(",
+        "dedup_simhash" -> "md5(")) {
+      spark.sharedState.cacheManager.clearCache()
+      val df = SparkEntry.queries(query)(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      val rddScans = p.linesIterator.count(_.contains("Scan ExistingRDD"))
+      assert(rddScans >= 2,
+        s"$query: expected the pinned relation to be scanned by multiple consumers, got $rddScans:\n${p.take(4000)}")
+      assert(!p.contains(marker),
+        s"$query: derivation ($marker) must not be recomputed downstream of the pin")
+    }
   }
 
   test("dedup decision action reads only the pinned collapse and the components") {
@@ -123,7 +123,7 @@ class PlanShapeSpec extends SparkTestBase {
     val df = graft.ops.Dedup.dupClusters(corpus, bands = 16, rows = 2)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    for (rederived <- Seq("Scan parquet", "sha2(", "slice(split("))
+    for (rederived <- Seq("Scan parquet", "sha2(", "slice(split(", "array_join(slice("))
       assert(!p.contains(rederived),
         s"decision action re-derives the collapse or shingles ($rederived):\n${p.take(4000)}")
   }
