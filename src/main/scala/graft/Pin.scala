@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** The one way this library materializes a relation that several consumers
@@ -39,4 +42,19 @@ import org.apache.spark.storage.StorageLevel
 private[graft] object Pin {
   def apply(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+
+  /** [[apply]], plus aggregate `metrics` over the pinned rows computed by
+    * the pin's own job (`Dataset.observe`), for iterated loops whose
+    * convergence test would otherwise be one more action per round. The
+    * observation sits on top of `df`, so it is evaluated in the pin's
+    * result stage and merges each partition's update once. Returns the
+    * pinned relation and the metrics row (fields in `metrics` order). An
+    * aggregate over zero rows can come back null (e.g. `sum`); callers
+    * read null as "nothing observed".
+    */
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val pinned = apply(df.observe(obs, metrics.head, metrics.tail: _*))
+    (pinned, Await.result(obs.future, Duration.Inf))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.kg.canon
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Pin
@@ -11,12 +12,15 @@ import graft.Pin
   *
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
-  * O(log n) rounds on any graph, using only groupBy-min and equi-joins (no
-  * collect_list, no per-node neighborhood materialization, no RDDs, no
-  * GraphX). The input and each round are pinned ([[graft.Pin]]) to cut the
-  * Catalyst lineage — without that the re-planned plan tree grows
-  * exponentially with iterations (SURVEY.md §4, the one place a naive build
-  * dies at scale; [[graft.Pin]] states what changes on a cluster).
+  * O(log n) rounds on any graph, using only windowed mins and one
+  * aggregation per round (no collect_list, no per-node neighborhood
+  * materialization, no RDDs, no GraphX). A round is three exchanges (the
+  * large-star window, the small-star window, the distinct) and one pin
+  * ([[graft.Pin]]) that cuts the Catalyst lineage — without it the
+  * re-planned plan tree grows exponentially with iterations (SURVEY.md §4,
+  * the one place a naive build dies at scale; [[graft.Pin]] states what
+  * changes on a cluster). The convergence test rides the pin's own job, so
+  * a round costs four Spark jobs (ConnectedComponentsSpec counts them).
   *
   * Node ids are any Catalyst-orderable column type — the engine only uses
   * min/least/greatest/comparisons, so surface canonicalization runs it over
@@ -27,48 +31,38 @@ import graft.Pin
   */
 object ConnectedComponents {
 
+  private val bySrc = Window.partitionBy("src")
+
   /** Large-star: for every node u, connect all strictly-larger neighbors to
-    * m(u) = min(N(u) ∪ {u}).
+    * m(u) = min(N(u) ∪ {u}). The min is a window over the neighbor union,
+    * so the rows and their group's min come out of one exchange. The output
+    * keeps duplicates: the round's distinct is the only set operation.
     */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val nbrs = edges.select(col("src"), col("dst"))
+  private def largeStar(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val mins = nbrs.groupBy("src").agg(min(col("dst")).as("mn"))
-      .select(col("src"), least(col("src"), col("mn")).as("m"))
-    nbrs.join(mins, "src")
+      .select(col("src"), col("dst"),
+        least(col("src"), min(col("dst")).over(bySrc)).as("m"))
       .where(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
-      .where(col("src") =!= col("dst"))
-    // no distinct here: [[smallStar]] (the only consumer) starts with its
-    // own orient+distinct over the same keys, so this one bought set
-    // semantics nobody reads at the cost of one extra Exchange+agg PER
-    // ROUND (×O(log n) rounds ×every CC caller); volume is bounded at |e|
-    // rows either way (each large-endpoint orientation emits one row)
-  }
 
   /** Small-star: orient edges from larger to smaller endpoint; for every node
-    * u connect all its (smaller-or-equal) neighbors and u itself to
-    * m(u) = min(N(u) ∪ {u}).
+    * u connect all its (smaller) neighbors and u itself to
+    * m(u) = min(N(u) ∪ {u}) = min of u's oriented neighbors. The same window
+    * as [[largeStar]]; each row emits its relinked edge `(dst, m)` and the
+    * self edge `(src, m)`, so no per-node min relation is joined back.
     */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    // no input distinct (same rationale as [[largeStar]]'s dropped output
-    // distinct): duplicate oriented edges change neither the groupBy-min
-    // nor the final output set — the ONE distinct on the round's output
-    // below provides the set semantics the convergence probe needs, and
-    // dropping the input-side one removes another Exchange+agg per round.
-    // Duplicate volume is bounded by largeStar's ≤|e| output.
-    val dir = edges
+  private def smallStar(edges: DataFrame): DataFrame =
+    edges
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
-    val mins = dir.groupBy("src").agg(min(col("dst")).as("m"))
-    val relinked = dir.join(mins, "src")
-      .select(col("dst").as("src"), col("m").as("dst"))
-    val self = mins.select(col("src"), col("m").as("dst"))
-    relinked.union(self)
+      .select(col("src"), col("dst"), min(col("dst")).over(bySrc).as("m"))
+      .select(explode(array(
+        struct(col("dst").as("src"), col("m").as("dst")),
+        struct(col("src"), col("m").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-  }
 
   /** Run CC over an undirected edge list `edges(src, dst)` (any orderable
     * id type — string, long, …).
@@ -89,29 +83,33 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = Pin(smallStar(largeStar(e)))
-      // EXACT set-equality fixpoint test, not a hash signature (a summed
+      // One aggregation is both the round's distinct and its EXACT
+      // set-equality fixpoint test, not a hash signature (a summed
       // per-edge hash can collide or cancel across a delta and declare
       // convergence mid-iteration — the unsound genre GraphOps's WSP fix
-      // documents). Both relations are distinct sets, so a full-outer
-      // join with no one-sided row ⇔ next = prev, for ANY orderable id
-      // type (CC runs over strings for surface canonicalization, longs
-      // for dedup — a monotone numeric label-sum would not be
-      // type-generic). Cost: ONE emptiness probe per round over the two
-      // checkpointed edge sets, O(log n) rounds total.
-      converged = next.withColumn("l", lit(1))
-        .join(e.withColumn("r", lit(1)), Seq("src", "dst"), "full_outer")
-        .where(col("l").isNull || col("r").isNull)
-        .isEmpty
-      e = next
+      // documents). Grouping this round's edges (l) with the previous set
+      // (r) by (src, dst), a group with only one side is an edge in
+      // exactly one of the two sets, so none ⇔ next = prev, for ANY
+      // orderable id type (a monotone numeric label-sum would not be
+      // type-generic). The count of one-sided groups is observed on the
+      // pin's own job; zero rows observe null, which is also "no change".
+      val (tagged, changed) = Pin.observed(
+        smallStar(largeStar(e))
+          .select(col("src"), col("dst"), lit(1).as("l"), lit(null).cast("int").as("r"))
+          .union(e.select(col("src"), col("dst"), lit(null).cast("int").as("l"), lit(1).as("r")))
+          .groupBy("src", "dst").agg(max(col("l")).as("l"), max(col("r")).as("r")),
+        sum(when(col("l").isNull || col("r").isNull, 1L).otherwise(0L)))
+      converged = changed.isNullAt(0) || changed.getLong(0) == 0L
+      e = tagged.where(col("l").isNotNull).select(col("src"), col("dst"))
       iter += 1
     }
     require(converged,
       s"ConnectedComponents not converged after $maxIter rounds — " +
         "raise maxIter; refusing to return a truncated (under-merged) forest")
-    // At the fixed point every edge points child -> component root.
+    // At the fixed point every edge points child -> component root; the
+    // groupBy drops the roots' repeats.
     val members = e.select(col("src").as("node"), col("dst").as("component"))
-    val roots = e.select(col("dst").as("node"), col("dst").as("component")).distinct()
+    val roots = e.select(col("dst").as("node"), col("dst").as("component"))
     members.union(roots)
       .groupBy("node").agg(min(col("component")).as("component"))
   }

@@ -266,8 +266,9 @@ object GraphOps {
     * truncation (the defect class a statically-unrolled peel has: a 100×
     * corpus with longer tendrils would quietly return a superset). A peel
     * never adds edges, so an unchanged edge COUNT is a sound fixpoint test
-    * — one metadata-scale count action per round, each round's survivor
-    * set pinned (graph-sized, referenced 3× by the next round).
+    * — each round's survivor set is pinned (graph-sized, referenced 3× by
+    * the next round) and its count observed on the pin's own job, so the
+    * test costs no extra action.
     * `maxRounds` is a runaway bound, not a semantic knob: exceeding it
     * THROWS rather than returning the truncated superset (a peel halves
     * nothing per round in the worst case, but real graphs converge in ≤
@@ -297,9 +298,9 @@ object GraphOps {
     while (!converged && round < maxRounds) {
       val surv = e.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("x"))
-      val next = Pin(e.join(surv, Seq("x"), "left_semi")
-        .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"))
-      val m = next.count()
+      val (next, size) = Pin.observed(e.join(surv, Seq("x"), "left_semi")
+        .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"), count(lit(1)))
+      val m = if (size.isNullAt(0)) 0L else size.getLong(0)
       converged = m == n || m == 0L
       n = m
       e = next
@@ -385,9 +386,9 @@ object GraphOps {
     * the sum (a hash-based signature would not be: colliding or
     * cancelling hash deltas could declare convergence mid-relaxation);
     * the sum is DECIMAL(38,0) so no distance scale can overflow it.
-    * One metadata-scale agg action per round, the
-    * node-cardinality distance relation pinned per round to cut the
-    * iterated lineage. Unlike BFS there is no static frontier predicate —
+    * The node-cardinality distance relation is pinned per round to cut
+    * the iterated lineage, and its signature is observed on the pin's own
+    * job (no extra action). Unlike BFS there is no static frontier predicate —
     * a cheaper path can re-relax an already-reached node, so each round
     * joins edges against the full reached set: one equi-join + min
     * hash-agg + left join, edges loop-invariant
@@ -406,25 +407,21 @@ object GraphOps {
       maxRounds: Int = 1024): DataFrame = {
     require(seeds.nonEmpty, "shortestPaths needs a seed set")
     val edges = wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
-    var dist = Pin(edges.select(col("x").as("n")).distinct()
-      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")))
-    def signature(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(
-        count(col("d")).as("n"),
-        coalesce(sum(col("d").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)).as("s"))
-        .head()
-      (r.getLong(0), r.getDecimal(1))
+    // (reached count, distance sum), observed on each pin's own job
+    def pinSigned(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+      val (pinned, r) = Pin.observed(df, count(col("d")),
+        coalesce(sum(col("d").cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)))
+      (pinned, (if (r.isNullAt(0)) 0L else r.getLong(0), r.getDecimal(1)))
     }
-    var sig = signature(dist)
+    var (dist, sig) = pinSigned(edges.select(col("x").as("n")).distinct()
+      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
         .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
-      val next = Pin(dist.join(prop, col("n") === col("y"), "left")
+      val (next, nextSig) = pinSigned(dist.join(prop, col("n") === col("y"), "left")
         .select(col("n"), least(col("d"), col("nd")).as("d")))
-      val nextSig = signature(next)
       converged = nextSig == sig
       sig = nextSig
       dist = next

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
+
 import graft.kg.canon.ConnectedComponents
 
 /** SURVEY.md §5.4 — CC correctness vs a union-find oracle on seeded random
@@ -69,6 +74,38 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(ex.getMessage.contains("not converged"))
     // empty input converges trivially (no edges → no rows, no throw)
     assert(ConnectedComponents.run(edges.limit(0)).collect().isEmpty)
+  }
+
+  test("a round costs at most four Spark jobs: the convergence test rides the pin") {
+    val s = spark
+    import s.implicits._
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // Both graphs take exactly two rounds (round 1 points every node at its
+    // component's min, round 2 finds the fixpoint): maxIter = 1 throws,
+    // maxIter = 2 returns.
+    val rounds = 2
+    val graphs = Seq(
+      "single edge" -> Seq((1, 2)),
+      "disjoint triangles" -> Seq((1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)))
+    spark.sparkContext.addSparkListener(listener)
+    try graphs.foreach { case (name, es) =>
+      val edges = es.toDF("src", "dst")
+      intercept[IllegalArgumentException](ConnectedComponents.run(edges, maxIter = rounds - 1))
+      Bridge.drainListeners(spark)
+      jobs.set(0)
+      val out = ConnectedComponents.run(edges, maxIter = rounds)
+      Bridge.drainListeners(spark)
+      val n = jobs.get
+      info(s"$name: $n jobs")
+      // the input pin (exchange + result: 2 jobs) plus at most 4 a round
+      assert(n <= 4 * rounds + 2, s"$name: $n jobs for $rounds rounds")
+      val want = es.flatMap(e => Seq(e._1, e._2)).distinct
+        .map(v => v -> (if (v < 10) 1 else 10)).toMap
+      assert(out.as[(Int, Int)].collect().toMap == want, name)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("self-loops and duplicate edges are harmless") {

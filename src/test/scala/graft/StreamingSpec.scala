@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.kg.io.SyntheticCorpus
 import graft.streaming.StreamingIngest
@@ -12,6 +14,39 @@ import graft.streaming.StreamingIngest
   * reconcile with the batch answer.
   */
 class StreamingSpec extends SparkTestBase {
+
+  /** Rows `q` has read so far, summed over its progress reports. */
+  private def consumed(q: StreamingQuery): Long =
+    q.recentProgress.map(_.numInputRows).sum
+
+  /** Block until `q` has read `rows` input rows in total. A bare
+    * `processAllAvailable` can return before a fresh append is read: a
+    * trigger whose file listing ran before the write can report "no new
+    * data" after the call reset that flag, which ends its wait early.
+    */
+  private def awaitConsumed(q: StreamingQuery, rows: Long): Unit = {
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    q.processAllAvailable()
+    while (consumed(q) < rows) {
+      assert(System.nanoTime() < deadline,
+        s"stream read ${consumed(q)} of $rows rows within 120 s")
+      Thread.sleep(20)
+      q.processAllAvailable()
+    }
+  }
+
+  /** Append `df` to the stream's parquet source `dir` as ONE file, then
+    * wait until `q` has read it. One file because the job commit moves its
+    * files into `dir` one by one: a listing between two moves splits the
+    * append over two micro-batches, and a document whose triples are split
+    * breaks the per-batch contract of `maintainCoocEdges` (its cross-batch
+    * pairs are never formed).
+    */
+  private def appendAndAwait(q: StreamingQuery, df: DataFrame, dir: String): Unit = {
+    val target = consumed(q) + df.count()
+    df.coalesce(1).write.mode("append").parquet(dir)
+    awaitConsumed(q, target)
+  }
 
   test("streamed co-occurrence maintenance == from-scratch edges") {
     import spark.implicits._
@@ -26,9 +61,8 @@ class StreamingSpec extends SparkTestBase {
       spark.readStream.schema("subj string, pred string, obj string")
         .parquet(srcDir), edgeDir)
     try {
-      q.processAllAvailable()
-      b2.toDF("subj", "pred", "obj").write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
+      awaitConsumed(q, b1.size)
+      appendAndAwait(q, b2.toDF("subj", "pred", "obj"), srcDir)
     } finally q.stop()
     val folded = spark.read.parquet(edgeDir).collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -55,9 +89,8 @@ class StreamingSpec extends SparkTestBase {
       spark.readStream.schema("subj string, pred string, obj string")
         .parquet(srcDir), wideDir, triplesDir)
     try {
-      q.processAllAvailable()
-      b2.toDF("subj", "pred", "obj").write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
+      awaitConsumed(q, b1.size)
+      appendAndAwait(q, b2.toDF("subj", "pred", "obj"), srcDir)
     } finally q.stop()
     val folded = spark.read.parquet(wideDir).collect()
       .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)),
@@ -104,11 +137,9 @@ class StreamingSpec extends SparkTestBase {
 
     val q = StreamingIngest.runFirstSeen(spark, dir, schema, "first_seen")
     try {
-      q.processAllAvailable()
+      awaitConsumed(q, batch1.count())
       // second chunk overlaps the first (docs 200-299 re-shipped)
-      postings.where(col("doc_id").cast("long") >= 200)
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
+      appendAndAwait(q, postings.where(col("doc_id").cast("long") >= 200), dir)
     } finally q.stop()
 
     val emitted = spark.table("first_seen").collect().map(_.getString(0))
@@ -123,23 +154,22 @@ class StreamingSpec extends SparkTestBase {
     def ts(minutes: Int) =
       new java.sql.Timestamp(java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
         + minutes * 60000L)
-    def write(rows: (String, Int)*): Unit =
-      rows.map { case (id, m) => (id, ts(m)) }.toDF("doc_id", "ingest_ts")
-        .write.mode("append").parquet(dir)
-    write(("A", 0), ("B", 0))
+    def rows(rs: (String, Int)*): DataFrame =
+      rs.map { case (id, m) => (id, ts(m)) }.toDF("doc_id", "ingest_ts")
+    rows(("A", 0), ("B", 0)).write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     // ttl = 30 min, watermark delay = 10 min
     val q = StreamingIngest.runFirstSeenTtl(spark, dir, schema, "first_seen_ttl",
       ttlMs = 30 * 60000L)
     try {
-      q.processAllAvailable()                    // b1: A, B emitted
-      write(("A", 1), ("C", 60)); q.processAllAvailable()
+      awaitConsumed(q, 2)                        // b1: A, B emitted
+      appendAndAwait(q, rows(("A", 1), ("C", 60)), dir)
       // b2: A re-shipped INSIDE the ttl -> suppressed; C emitted; the
       // watermark now derives from t=60
-      write(("D", 61)); q.processAllAvailable()
+      appendAndAwait(q, rows(("D", 61)), dir)
       // b3: watermark (60 - 10 = 50 min) has passed A/B's timeout
       // (1 + 30 = 31 min) -> their state is removed this batch; D emitted
-      write(("A", 62)); q.processAllAvailable()
+      appendAndAwait(q, rows(("A", 62)), dir)
       // b4: A's state is GONE -> re-emitted
     } finally q.stop()
     val emitted = spark.table("first_seen_ttl").collect().map(_.getString(0)).toSeq
