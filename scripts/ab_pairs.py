@@ -4,7 +4,7 @@
 Usage (from anywhere):
 
     python3 scripts/ab_pairs.py --base ../parent --change . \
-        --workload dedup_batch --seeds 11-20 [--seconds 20] [--log runs.jsonl]
+        --workload dedup_batch --seeds 11-20 [--seconds 20]
 
 For each seed it runs `python3 perfbench/run.py --workload W --seed S
 --seconds N --trace 0` once in each checkout, one after the other; the side
@@ -15,8 +15,9 @@ It then prints, for every end-to-end metric of the result line, each side's
 median and quartiles over the seeds and the number of pairs (same seed) the
 change won, plus whether the difference between the medians exceeds the
 spread between the base's quartiles. Which direction is better comes from
-the base checkout's BENCHMARK.json. `--log` appends every run's JSON result,
-with its side and seed, to a file.
+the base checkout's BENCHMARK.json. Every run's JSON result, with its side
+and seed, is also printed to stderr as it finishes (`2>>runs.jsonl` keeps
+them).
 """
 import argparse
 import json
@@ -53,11 +54,8 @@ def quartiles(xs):
 
 
 def directions(checkout):
-    try:
-        with open(os.path.join(checkout, "BENCHMARK.json")) as f:
-            return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-    except (OSError, KeyError, ValueError):
-        return {}
+    with open(os.path.join(checkout, "BENCHMARK.json")) as f:
+        return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
 
 
 def main():
@@ -67,7 +65,6 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=seed_range, help="e.g. 11-20 or 1,3,5-7")
     ap.add_argument("--seconds", type=int, default=20)
-    ap.add_argument("--log", help="append each run's result here (JSON lines)")
     a = ap.parse_args()
     sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
     results = {"base": {}, "change": {}}
@@ -76,11 +73,8 @@ def main():
         for side in order:
             res = run_once(sides[side], a.workload, seed, a.seconds)
             results[side][seed] = res
-            line = {"side": side, "seed": seed, "workload": a.workload, "result": res}
-            print(json.dumps(line), file=sys.stderr)
-            if a.log:
-                with open(a.log, "a") as f:
-                    f.write(json.dumps(line) + "\n")
+            print(json.dumps({"side": side, "seed": seed, "workload": a.workload,
+                              "result": res}), file=sys.stderr, flush=True)
 
     better = directions(sides["base"])
     ok = [s for s in a.seeds
@@ -97,7 +91,7 @@ def main():
           % ("metric", "better", "base p50", "base q1-q3", "change p50", "change q1-q3",
              "won", "|dp50| > base IQR"))
     for name in names:
-        lower = better.get(name, "higher" if name.endswith("_per_s") else "lower") == "lower"
+        lower = better[name] == "lower"
         b = [results["base"][s]["metrics"][name]["value"] for s in ok]
         c = [results["change"][s]["metrics"][name]["value"] for s in ok]
         won = sum((y < x) if lower else (y > x) for x, y in zip(b, c))

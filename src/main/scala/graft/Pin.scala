@@ -1,7 +1,9 @@
 package graft
 
+import java.util.concurrent.TimeoutException
+
 import scala.concurrent.Await
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.storage.StorageLevel
@@ -49,12 +51,24 @@ private[graft] object Pin {
     * observation sits on top of `df`, so it is evaluated in the pin's
     * result stage and merges each partition's update once. Returns the
     * pinned relation and the metrics row (fields in `metrics` order). An
-    * aggregate over zero rows can come back null (e.g. `sum`); callers
-    * read null as "nothing observed".
+    * aggregate over zero rows can come back null (e.g. `sum`, never
+    * `count`).
+    *
+    * The row reaches the driver through the session's asynchronous
+    * listener bus after the job ends. A lost event (a full bus queue
+    * drops events) would leave the wait with nothing to wait for, so it
+    * is bounded: past [[ObservedTimeout]] it throws, naming `what`.
     */
-  def observed(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+  def observed(what: String, df: DataFrame, metrics: Column*): (DataFrame, Row) = {
     val obs = Observation()
     val pinned = apply(df.observe(obs, metrics.head, metrics.tail: _*))
-    (pinned, Await.result(obs.future, Duration.Inf))
+    val row = try Await.result(obs.future, ObservedTimeout) catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"$what: the metrics observed on its pin job did not arrive within " +
+          s"$ObservedTimeout of the job's end (lost listener-bus event?)")
+    }
+    (pinned, row)
   }
+
+  val ObservedTimeout: FiniteDuration = 5.minutes
 }

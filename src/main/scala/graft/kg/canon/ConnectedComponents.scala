@@ -77,9 +77,10 @@ object ConnectedComponents {
     * cost nothing (the loop exits at the exact fixpoint).
     */
   def run(edges: DataFrame, maxIter: Int = 64): DataFrame = {
+    // No distinct here: round 1's group-by collapses repeated input edges,
+    // and the star windows' mins ignore them.
     var e = Pin(edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct())
+      .where(col("src") =!= col("dst")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -93,7 +94,7 @@ object ConnectedComponents {
       // orderable id type (a monotone numeric label-sum would not be
       // type-generic). The count of one-sided groups is observed on the
       // pin's own job; zero rows observe null, which is also "no change".
-      val (tagged, changed) = Pin.observed(
+      val (tagged, changed) = Pin.observed(s"ConnectedComponents round ${iter + 1}",
         smallStar(largeStar(e))
           .select(col("src"), col("dst"), lit(1).as("l"), lit(null).cast("int").as("r"))
           .union(e.select(col("src"), col("dst"), lit(null).cast("int").as("l"), lit(1).as("r")))

@@ -298,9 +298,10 @@ object GraphOps {
     while (!converged && round < maxRounds) {
       val surv = e.groupBy(col("x")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("x"))
-      val (next, size) = Pin.observed(e.join(surv, Seq("x"), "left_semi")
-        .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"), count(lit(1)))
-      val m = if (size.isNullAt(0)) 0L else size.getLong(0)
+      val (next, size) = Pin.observed("k-core peel round",
+        e.join(surv, Seq("x"), "left_semi")
+          .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"), count(lit(1)))
+      val m = size.getLong(0)
       converged = m == n || m == 0L
       n = m
       e = next
@@ -409,9 +410,9 @@ object GraphOps {
     val edges = wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
     // (reached count, distance sum), observed on each pin's own job
     def pinSigned(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val (pinned, r) = Pin.observed(df, count(col("d")),
+      val (pinned, r) = Pin.observed("shortest-path relaxation round", df, count(col("d")),
         coalesce(sum(col("d").cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)))
-      (pinned, (if (r.isNullAt(0)) 0L else r.getLong(0), r.getDecimal(1)))
+      (pinned, (r.getLong(0), r.getDecimal(1)))
     }
     var (dist, sig) = pinSigned(edges.select(col("x").as("n")).distinct()
       .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")))

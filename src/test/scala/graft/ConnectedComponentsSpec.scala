@@ -100,8 +100,8 @@ class ConnectedComponentsSpec extends SparkTestBase {
       Bridge.drainListeners(spark)
       val n = jobs.get
       info(s"$name: $n jobs")
-      // the input pin (exchange + result: 2 jobs) plus at most 4 a round
-      assert(n <= 4 * rounds + 2, s"$name: $n jobs for $rounds rounds")
+      // the input pin (one job, no exchange) plus at most 4 a round
+      assert(n <= 4 * rounds + 1, s"$name: $n jobs for $rounds rounds")
       val want = es.flatMap(e => Seq(e._1, e._2)).distinct
         .map(v => v -> (if (v < 10) 1 else 10)).toMap
       assert(out.as[(Int, Int)].collect().toMap == want, name)
