@@ -13,9 +13,10 @@ import org.apache.spark.storage.StorageLevel
   * `localCheckpoint` call in the library. The rule has no size gate: a
   * relation read by more than one consumer (two actions, both sides of a
   * self-join, every round of an iterated loop) is pinned at every input
-  * size. The one exception is a relation whose consumers all sit in one
-  * action behind one reused exchange (`IncrementalDedup.foldShard`'s pin
-  * census names them) — there the eager job buys nothing.
+  * size. The exceptions are named in `IncrementalDedup.foldShard`'s pin
+  * census: a relation whose consumers all sit in one action behind one
+  * reused exchange (there the eager job buys nothing), narrow derivations
+  * of pins, and one shard-sized join re-run by a single later action.
   *
   *  - Why a lineage-cutting checkpoint and not `persist`: the result is a
   *    LogicalRDD, so every consumer's plan (and task closure) starts at the

@@ -53,7 +53,9 @@ import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
   * consumer reads is materialized once through [[graft.Pin]] (see there for
   * why a DISK_ONLY local checkpoint): the pair operators pin their shingle
   * or signature relation, and the two-action decision [[dupClusters]] pins
-  * its one per-doc relation ([[decisionBase]]). CacheHygieneSpec asserts
+  * its one per-doc relation ([[decisionBase]]), which both
+  * [[IncrementalDedup]] writers pin too: the commit for the corpus, the
+  * fold for its shard. CacheHygieneSpec asserts
   * the cache manager stays empty after every dedup action, so library
   * callers cannot leak cached plans.
   */
@@ -209,20 +211,15 @@ object Dedup {
     * (denom*common >= numer*union). `arr` is (doc_id, ss) with ss each
     * doc's DISTINCT shingles. Output: (a, b, common, union_).
     */
-  private def verifyArrays(
+  private[graft] def verifyArrays(
       cands: DataFrame, arr: DataFrame, numer: Int, denom: Int): DataFrame = {
-    // Candidate verification as ONE row per (pair, side), not one row per
-    // (pair, shingle): the old shape joined cands against the shingle
-    // relation on each side and hash-joined (b, s) keys — ~2·|sh_doc| rows
-    // through two joins and an aggregation PER CANDIDATE (the measured 75%
-    // of minhashLsh/dupClusters wall at sf0.1: 8.9 s of 10.5). Folding each
-    // rep's distinct shingles into one array (bounded by tokens-per-doc — a
-    // per-row payload, the cutPassages precedent) turns that into two
-    // rep-keyed equi-joins moving ONE array row per side and a row-local
-    // array_intersect. common = |sa ∩ sb| over distinct-element arrays and
-    // union_ = |sa| + |sb| − common are exactly the old count/count-sum
-    // values; intersection cardinality is order-free, so the nondeterminism
-    // of collect_list order never reaches the output.
+    // ONE row per (pair, side), not per (pair, shingle): a row-per-shingle
+    // verify moved ~2·|sh_doc| rows through two joins and an aggregation
+    // PER CANDIDATE (75% of minhashLsh/dupClusters wall at sf0.1). Each
+    // array is bounded by tokens-per-doc (a per-row payload, the
+    // cutPassages precedent). common = |sa ∩ sb| over distinct-element
+    // arrays and union_ = |sa| + |sb| − common; intersection cardinality
+    // is order-free, so array element order never reaches the output.
     cands
       .join(arr.select(col("doc_id").as("a"), col("ss").as("sa")), "a")
       .join(arr.select(col("doc_id").as("b"), col("ss").as("sb")), "b")
@@ -347,16 +344,6 @@ object Dedup {
       sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     }
 
-  /** LSH candidate pairs over a (representative) shingle relation: minhash
-    * signatures → (band, bucket) explode → HOT-BUCKET CAP → self-equi-join.
-    * The cap (a window count over the join's own (band, bucket) exchange —
-    * no extra shuffle — dropping buckets with more than maxBucket members)
-    * bounds the join's hottest key at maxBucket² candidate rows; buckets
-    * that large carry a vanishing marginal-recall signal (their
-    * members are already pairwise-candidates through other bands with
-    * overwhelming probability). Package-private so OpsSpec can assert
-    * linear candidate growth directly. Output: (a, b), a < b.
-    */
   /** The uncapped (doc_id, band, bucket) relation behind [[lshCandidates]]
     * — also the signature STATE a committed corpus persists for
     * [[IncrementalDedup]] (new shards band-join against it instead of
@@ -388,27 +375,42 @@ object Dedup {
       .drop("bsz")
   }
 
+  /** LSH candidate pairs over a (representative) shingle relation: minhash
+    * signatures → (band, bucket) explode → HOT-BUCKET CAP → self-equi-join.
+    * The cap (a window count over the join's own (band, bucket) exchange —
+    * no extra shuffle — dropping buckets with more than maxBucket members)
+    * bounds the join's hottest key at maxBucket² candidate rows; buckets
+    * that large carry a vanishing marginal-recall signal (their
+    * members are already pairwise-candidates through other bands with
+    * overwhelming probability). Package-private so OpsSpec can assert
+    * linear candidate growth directly. Pairs pass [[admitted]].
+    * Output: (a, b), a < b.
+    */
   private[graft] def lshCandidates(sh: DataFrame, bands: Int, rows: Int,
       portable: Boolean, maxBucket: Int): DataFrame = {
-    // bucket size as a window count over hashpartitioning(band, bucket) —
-    // the SAME distribution the candidate self-join needs, so the exchange
-    // is built once and reused rather than adding a shuffle
     val buckets = cappedBuckets(bandBuckets(sh, bands, rows, portable), maxBucket)
-    val pairs = buckets.as("x").join(buckets.as("y"),
+    admitted(buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-    if (minBandCollisions(bands, rows) >= 2)
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")), bands, rows)
+  }
+
+  /** Candidate ADMISSION: one (a, b) row per pair of a band self-join's
+    * collision rows `pairs` that collide in at least [[minBandCollisions]]
+    * bands. The one rule of the from-scratch candidate join above and of
+    * [[IncrementalDedup]]'s fold: a pair admitted by one and not the other
+    * would break the from-scratch ≡ incremental identity.
+    */
+  private[graft] def admitted(pairs: DataFrame, bands: Int, rows: Int): DataFrame = {
+    val k = minBandCollisions(bands, rows)
+    if (k >= 2)
       pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("nb"))
-        .where(col("nb") >= minBandCollisions(bands, rows))
+        .where(col("nb") >= k)
         .select(col("a"), col("b"))
     else pairs.distinct()
   }
 
-  /** Candidate ADMISSION rule shared by the from-scratch candidate join
-    * above and [[IncrementalDedup]]'s fold (both sides MUST use the same
-    * rule or the documented from-scratch ≡ incremental identity breaks on
-    * a pair admitted by one and not the other).
+  /** The collision count [[admitted]] requires of a candidate.
     *
     * rows == 1 is the OR-of-k-singles geometry: "any ONE of k min-hashes
     * agrees" admits a candidate, and a single agreeing min-hash between
@@ -431,7 +433,7 @@ object Dedup {
     * where the old rule needed one — size k and maxBucket together when
     * tuning for a boilerplate-heavy corpus.
     */
-  private[graft] def minBandCollisions(bands: Int, rows: Int): Int =
+  private def minBandCollisions(bands: Int, rows: Int): Int =
     if (rows == 1 && bands >= 32) 2 else 1
 
   /** MinHash+LSH near-dup pairs, exact-verified at token-3-gram Jaccard >=
@@ -601,23 +603,33 @@ object Dedup {
         when(col("vec_id") =!= col("keep_id"), 1L).otherwise(0L).as("is_dup"))
   }
 
-  /** The one relation the dedup decision reads, pinned: the corpus
+  /** The DISTINCT 3-gram shingles of the token column `ts`, as one array. */
+  private def shingleSet: Column = array_distinct(grams(3))
+
+  /** (doc_id, ss): the [[shingleSet]] of each (doc_id, text) row. */
+  private[graft] def shingleArrays(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
+      .select(col("doc_id"), shingleSet.as("ss"))
+
+  /** The one per-doc relation every dedup decision derives from — the batch
+    * [[dupClusters]] and both [[IncrementalDedup]] writers. The corpus is
     * exchanged ONCE by its content key, one row per doc as
-    * (doc_id, rep_id, has_sh, ss).
+    * (doc_id, rep_id, has_sh, ss):
     *  - rep_id = the exact group's min doc_id, a window min over that
     *    exchange (as in [[exact]]);
-    *  - ss = the representative's DISTINCT 3-gram shingles as an array
-    *    (`array_distinct` over [[grams]] — no explode, shuffle, distinct),
-    *    null on member rows;
+    *  - ss = the representative's [[shingleSet]] (no explode, shuffle,
+    *    distinct), null on member rows;
     *  - has_sh = the doc has >= 3 tokens, i.e. its group has shingles (a
     *    member's text equals its rep's, so the zero-shingle guard needs no
     *    join to shingle sizes).
     * Null-text docs are dropped: they have no content key, exactly as
-    * [[exactCollapse]]'s inner member join drops them.
+    * [[exactCollapse]]'s inner member join drops them. Every caller pins
+    * it ([[graft.Pin]]). It carries no text and no content key: the daily
+    * writers that store them join their own input by doc_id.
     */
-  private def decisionBase(corpus: DataFrame): DataFrame = {
+  private[graft] def decisionBase(corpus: DataFrame): DataFrame = {
     val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    Pin(corpus
+    corpus
       .where(col("text").isNotNull)
       .select(col("doc_id"), col("text"), contentKey(col("text")).as("gh"))
       // explicit np: same rationale as exactCollapse
@@ -625,16 +637,22 @@ object Dedup {
       .select(col("doc_id"), split(col("text"), " ").as("ts"),
         min(col("doc_id")).over(Window.partitionBy(col("gh"))).as("rep_id"))
       .select(col("doc_id"), col("rep_id"), (size(col("ts")) >= 3).as("has_sh"),
-        when(col("doc_id") === col("rep_id"), array_distinct(grams(3))).as("ss")))
+        when(col("doc_id") === col("rep_id"), shingleSet).as("ss"))
   }
 
-  /** Verified rep-level LSH pairs over [[decisionBase]]: signatures and
-    * capped candidates from [[lshCandidates]] over the exploded arrays,
-    * verify over the arrays themselves. Output: (a, b, common, union_).
+  /** (doc_id, ss) of a [[decisionBase]]'s representative rows. */
+  private[graft] def repArrays(base: DataFrame): DataFrame =
+    base.where(col("ss").isNotNull).select(col("rep_id").as("doc_id"), col("ss"))
+
+  /** Verified rep-level LSH pairs over a pinned [[decisionBase]] — the CC
+    * input of [[dupClusters]] and of [[IncrementalDedup.commitState]]:
+    * signatures and capped candidates from [[lshCandidates]] over the
+    * exploded arrays, verify over the arrays themselves.
+    * Output: (a, b, common, union_).
     */
-  private def baseRepPairs(base: DataFrame, numer: Int, denom: Int,
+  private[graft] def baseRepPairs(base: DataFrame, numer: Int, denom: Int,
       bands: Int, rows: Int, maxBucket: Int): DataFrame = {
-    val arr = base.where(col("ss").isNotNull).select(col("rep_id").as("doc_id"), col("ss"))
+    val arr = repArrays(base)
     val sh = arr.select(col("doc_id"), explode(col("ss")).as("s"))
     verifyArrays(lshCandidates(sh, bands, rows, portable = false, maxBucket), arr, numer, denom)
   }
@@ -648,7 +666,7 @@ object Dedup {
     */
   private[graft] def lshRepPairs(corpus: DataFrame, numer: Int = 1, denom: Int = 2,
       bands: Int = 32, rows: Int = 1, maxBucket: Int = 1000): DataFrame =
-    baseRepPairs(decisionBase(corpus), numer, denom, bands, rows, maxBucket)
+    baseRepPairs(Pin(decisionBase(corpus)), numer, denom, bands, rows, maxBucket)
       .select(col("a"), col("b"))
 
   /** The dedup DECISION: near-dup pairs are only half the operator — a
@@ -678,7 +696,7 @@ object Dedup {
     */
   def dupClusters(corpus: DataFrame, numer: Int = 1, denom: Int = 2,
       bands: Int = 32, rows: Int = 1, maxBucket: Int = 1000): DataFrame = {
-    val base = decisionBase(corpus)
+    val base = Pin(decisionBase(corpus))
     val comps = graft.kg.canon.ConnectedComponents
       .run(baseRepPairs(base, numer, denom, bands, rows, maxBucket)
         .select(col("a").as("src"), col("b").as("dst")))

@@ -23,17 +23,25 @@ import graft.Pin
   *     the pair graph (base generation only; increments append pairs, and
   *     readers fold them in via [[graft.kg.canon.ConnectedComponents.incremental]])
   *
+  * Both writers derive from the relation [[Dedup.dupClusters]] reads:
+  * [[commitState]] pins [[Dedup.decisionBase]] of the corpus and takes
+  * members, shingle counts, band buckets and (by [[Dedup.baseRepPairs]],
+  * the batch CC input) the pair graph from it; the fold below pins the same
+  * relation of the shard. Candidate admission ([[Dedup.admitted]]) and
+  * verify ([[Dedup.verifyArrays]]) are Dedup's own, so the two paths share
+  * every rule that decides a pair.
+  *
   * Incremental step ([[incrementalClusters]]):
-  *   1. exact-collapse the shard alone; shard groups whose text already
-  *      exists in base (sha2 content-key join) just JOIN the existing rep —
-  *      no new signatures, no new pairs (identical text ⇒ identical
-  *      everything).
-  *   2. genuinely new texts are shingled + signatured ALONE; their band
-  *      buckets join the UNION of stored + new buckets, and only pairs with
-  *      at least one NEW side survive — old-old candidates never form, and
-  *      verification shingles base texts ONLY for the reps that are
-  *      candidates with a new doc (semi-join on the candidate ids; proven
-  *      behaviorally by OpsSpec's corrupted-state test).
+  *   1. derive the shard's per-doc relation alone ([[Dedup.decisionBase]]);
+  *      shard groups whose text already exists in base (sha2 content-key
+  *      join against the stored `gh`) just JOIN the existing rep — no new
+  *      signatures, no new pairs (identical text ⇒ identical everything).
+  *   2. genuinely new texts' shingle arrays are signatured ALONE; their
+  *      band buckets join the UNION of stored + new buckets, and only pairs
+  *      with at least one NEW side survive — old-old candidates never form,
+  *      and verify builds base texts' shingle arrays ONLY for the reps that
+  *      are candidates with a new doc (semi-join on the candidate ids;
+  *      proven behaviorally by OpsSpec's corrupted-state test).
   *   3. the cluster decision folds INCREMENTALLY too: committed component
   *      labels (`comps/`) pass through untouched, and only components
   *      touched by a not-yet-compacted or new pair re-enter the CC
@@ -75,28 +83,24 @@ object IncrementalDedup {
     */
   val MaxShardReps: Long = 20000000L
 
-  /** Write the dedup state of `corpus` under `stateDir` (parquet subdirs).
-    * One collapse + one shingle pass + one signature pass + one capped
-    * candidate join + one verify — exactly the from-scratch derivation cost,
-    * paid ONCE at commit time.
+  /** Write the dedup state of `corpus` under `stateDir` (parquet subdirs),
+    * derived exactly as [[Dedup.dupClusters]] derives its decision: one
+    * pinned [[Dedup.decisionBase]], its pair graph by the same
+    * [[Dedup.baseRepPairs]], and connected components over those pairs —
+    * the from-scratch cost, paid ONCE at commit time.
     */
   def commitState(spark: SparkSession, corpus: DataFrame, stateDir: String,
       numer: Int = 1, denom: Int = 2, bands: Int = 32, rows: Int = 1,
       maxBucket: Int = 1000): Unit = {
-    // the commit is FOUR write actions over shared derivations (reps feeds
-    // three of them, shingles two + the verify) — pin both once: multi-action
-    // reuse is impossible for ReuseExchange at ANY size (measured at sf0.1:
-    // the un-checkpointed commit re-derived collapse+shingles per action,
-    // ~29 s vs ~20 s for the whole dedup_incremental query)
-    val (rawReps, members0) = Dedup.exactCollapse(corpus)
-    val reps = Pin(rawReps)
-    val members = members0
-    val sh = Pin(shinglesOf(reps))
-    val sizes = Dedup.repShingleSizes(sh)
+    // five actions (four writes and the CC input) read the per-doc
+    // relation: pinned once, as dupClusters pins it
+    val base = Pin(Dedup.decisionBase(corpus))
+    val arr = Dedup.repArrays(base)
     // gh (the sha2 content key) is STORED: the shard fold's attach join
     // then reads only (rep_id, gh) — no per-fold re-hash of the committed
     // corpus and, more importantly at 100 TB, no scan of the wide `text`
-    // column just to recompute a key the commit already derived.
+    // column just to recompute a key the commit already derived. The pin
+    // carries neither text nor gh: the rep rows join the input by doc_id.
     //
     // Each relation is REPARTITIONED by its fold-side access key before the
     // write. Without it AQE coalesces these writes to one file with one
@@ -118,20 +122,19 @@ object IncrementalDedup {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(stateDir, "_VERSION"), StateVersion.toString)
-    reps.join(sizes, Seq("rep_id"), "left")
-      .select(col("rep_id"), col("text"),
-        Dedup.contentKey(col("text")).as("gh"),
-        coalesce(col("n"), lit(0L)).as("n_shingles"))
+    arr.join(corpus.select(col("doc_id"), col("text")), "doc_id")
+      .select(col("doc_id").as("rep_id"), col("text"),
+        Dedup.contentKey(col("text")).as("gh"), size(col("ss")).cast("long").as("n_shingles"))
       .repartition(np, col("rep_id"))
       .write.mode("overwrite").parquet(s"$stateDir/reps")
-    members.repartition(np, col("doc_id"))
+    base.select(col("doc_id"), col("rep_id")).repartition(np, col("doc_id"))
       .write.mode("overwrite").parquet(s"$stateDir/members")
-    val buckets = Dedup.bandBuckets(sh, bands, rows, portable = false)
+    Dedup.bandBuckets(arr.select(col("doc_id"), explode(col("ss")).as("s")),
+        bands, rows, portable = false)
       .withColumnRenamed("doc_id", "rep_id")
-    buckets.repartition(np, col("band"), col("bucket"))
+      .repartition(np, col("band"), col("bucket"))
       .write.mode("overwrite").parquet(s"$stateDir/buckets")
-    val cands = Dedup.lshCandidates(sh, bands, rows, portable = false, maxBucket)
-    val pairs = Pin(Dedup.verifyJaccard(cands, sh, numer, denom)
+    val pairs = Pin(Dedup.baseRepPairs(base, numer, denom, bands, rows, maxBucket)
       .select(col("a"), col("b")))
     pairs.repartition(np, col("a"))
       .write.mode("overwrite").parquet(s"$stateDir/pairs")
@@ -145,9 +148,6 @@ object IncrementalDedup {
       .repartition(np, col("node"))
       .write.mode("overwrite").parquet(s"$stateDir/comps")
   }
-
-  private def shinglesOf(reps: DataFrame): DataFrame =
-    Dedup.shingles(reps.select(col("rep_id").as("doc_id"), col("text")))
 
   /** The four state relations as of now: the base tables ∪ every COMMITTED
     * increment. An increment is visible ONLY once its `_COMMITTED` marker
@@ -391,83 +391,69 @@ object IncrementalDedup {
         !foldedTagsOf(stateDir).contains(shardTag)) {
       val st = stateRelations(spark, stateDir)
       val f = foldShard(st.reps, st.buckets, shard, numer, denom, bands, rows, maxBucket)
-      // pin each increment once: four write actions would otherwise re-run
-      // the fold's base-side joins per action (same rationale as commitState)
-      val reps = Pin(f.newReps.join(f.newSizes, Seq("rep_id"), "left")
-        .select(col("rep_id"), col("text"), col("gh"),
-          coalesce(col("n"), lit(0L)).as("n_shingles")))
-      val members = Pin(f.matchedMembers.unionByName(f.newMembers))
-      val buckets = Pin(f.newBuckets)
-      val pairs = Pin(f.newPairs)
+      // each write reads only the fold's pins (and, for the new reps' text,
+      // the shard): none re-runs a base-side join, so none is pinned again.
       // overwrite: a half-written previous attempt under this tag is
       // replaced wholesale; nothing is visible until the marker lands
-      reps.write.mode("overwrite").parquet(s"$incDir/reps")
-      members.write.mode("overwrite").parquet(s"$incDir/members")
-      buckets.write.mode("overwrite").parquet(s"$incDir/buckets")
-      pairs.write.mode("overwrite").parquet(s"$incDir/pairs")
+      f.newReps.write.mode("overwrite").parquet(s"$incDir/reps")
+      f.members.write.mode("overwrite").parquet(s"$incDir/members")
+      f.newBuckets.write.mode("overwrite").parquet(s"$incDir/buckets")
+      f.newPairs.write.mode("overwrite").parquet(s"$incDir/pairs")
       Files.createFile(incDir.resolve("_COMMITTED"))
     }
   }
 
   /** Everything a shard fold derives before (and besides) the decision:
     * the shard-side increments that [[incrementalClusters]] combines with
-    * stored state and that [[commitIncrement]] appends TO the state.
+    * stored state and that [[commitIncrement]] appends TO the state, each
+    * in its state layout. `members` covers every shard doc (matched groups
+    * attached to their committed rep); the rest cover new texts only.
     */
-  private final case class ShardFold(matchedMembers: DataFrame,
-      newReps: DataFrame, newMembers: DataFrame, newSizes: DataFrame,
+  private final case class ShardFold(members: DataFrame, newReps: DataFrame,
       newBuckets: DataFrame, newPairs: DataFrame)
 
-  /** Steps 1–2 of the fold (collapse + content-key attach, signatures and
-    * verified pairs for NEW texts only), against already-loaded state
-    * relations — shared by the decision and the state update.
+  /** Steps 1–2 of the fold (the shard's per-doc relation + content-key
+    * attach, signatures and verified pairs for NEW texts only), against
+    * already-loaded state relations — shared by the decision and the state
+    * update.
     */
   private def foldShard(bReps: DataFrame, bBuckets: DataFrame,
       shard: DataFrame, numer: Int, denom: Int, bands: Int, rows: Int,
       maxBucket: Int): ShardFold = {
-    // 1. collapse the shard alone, then split its groups by whether the
-    // text already exists in base (content-key equi-join against the
-    // STORED gh column — the base side reads two narrow columns, never
-    // re-hashes and never scans `text` here). The shard side of the
-    // attach is BROADCAST: state-side relations stay map-side, so the
-    // committed corpus is never shuffled by this join. Contract: a fold's
-    // shard must be broadcast-sized (distinct-text keys only — ~50 B/key);
-    // a jumbo backfill that isn't should be split into several folds, the
-    // same way it would be split into commit batches anyway.
-    val (sReps0, sMembers0) = Dedup.exactCollapse(shard)
-    // sReps is consumed by BOTH downstream actions (the CC checkpoint via
-    // the pair chain, then the final decision action) — pin it once.
-    // sMembers is only read by the single final action (member union), so
-    // it stays lazy: one shard-sized recompute beats an eager job.
-    val sReps = Pin(sReps0)
-    // enforce the broadcast-sized-shard contract stated below: one
-    // metadata-scale count over the eager checkpoint, failing fast with
-    // the documented remediation instead of an opaque broadcast error
-    val nShardReps = sReps.count()
+    // 1. the shard's per-doc relation, derived and pinned as dupClusters
+    // does the corpus's. The pin job also counts the shard's distinct
+    // texts (one `ss` per rep row), enforcing the broadcast-sized-shard
+    // contract below with the documented remediation instead of an opaque
+    // broadcast error.
+    val (sBase, obs) = Pin.observed("dedup fold",
+      Dedup.decisionBase(shard), count(col("ss")))
+    val nShardReps = obs.getLong(0)
     require(nShardReps <= MaxShardReps,
       s"shard has $nShardReps distinct texts (> MaxShardReps=$MaxShardReps)" +
         " — the fold broadcasts shard-derived key relations; split the " +
         "backfill into smaller commit batches")
-    val sMembers = sMembers0
-    val sKeyed = sReps.withColumn("gh", Dedup.contentKey(col("text")))
-    val bKeyed = bReps.select(col("rep_id").as("b_rep"), col("gh"))
-    // matched is metadata-scale but DERIVED from a base-reps scan; it feeds
-    // three consumers across separate actions (member attach, new-rep anti
-    // join, decision tail) and each un-pinned broadcast rebuild would
-    // re-scan the committed reps — pin it so the base is scanned ONCE here
-    val matched = Pin(bKeyed
-      .join(broadcast(sKeyed.select(col("gh"), col("rep_id").as("s_rep"))), "gh")
+    val sArr = Dedup.repArrays(sBase)
+    // The shard's reps take text and gh from the shard by doc_id (the pin
+    // carries neither), then split by whether the text already exists in
+    // base: a content-key equi-join against the STORED gh column (the base
+    // side reads two narrow columns, never re-hashes, never scans `text`).
+    // The shard side is BROADCAST, so the committed corpus is never
+    // shuffled by this join. Contract: a fold's shard must be
+    // broadcast-sized (distinct-text keys only — ~50 B/key); a jumbo
+    // backfill should be split into several folds, as it would be split
+    // into commit batches anyway.
+    val keyed = sArr.select(col("doc_id"))
+      .join(shard.select(col("doc_id"), col("text")), "doc_id")
+      .withColumn("gh", Dedup.contentKey(col("text")))
+    val matched = Pin(bReps.select(col("rep_id").as("b_rep"), col("gh"))
+      .join(broadcast(keyed.select(col("gh"), col("doc_id").as("s_rep"))), "gh")
       .select(col("s_rep"), col("b_rep")))
     // shard members of a matched group become members of the EXISTING rep
-    val matchedMembers = sMembers
-      .join(broadcast(matched.withColumnRenamed("s_rep", "rep_id")), "rep_id")
-      .select(col("doc_id"), col("b_rep").as("rep_id"))
-    // pinned for the same reason: consumed by the shingle chain, the member
-    // semi join, the decision's size relation, and the state write
-    val newReps = Pin(sKeyed.join(
-      broadcast(matched.select(col("s_rep").as("rep_id"))),
-      Seq("rep_id"), "left_anti").select(col("rep_id"), col("text"), col("gh")))
-    val newMembers = sMembers.join(broadcast(newReps.select("rep_id")),
-      Seq("rep_id"), "left_semi")
+    val members = sBase
+      .join(broadcast(matched), col("rep_id") === col("s_rep"), "left")
+      .select(col("doc_id"), coalesce(col("b_rep"), col("rep_id")).as("rep_id"))
+    val newArr = sArr.join(broadcast(matched.select(col("s_rep").as("doc_id"))),
+      Seq("doc_id"), "left_anti")
 
     // 2. signatures + candidates for NEW texts only. The stored bucket
     // index is probed, not shuffled: only buckets TOUCHED by a shard rep
@@ -478,32 +464,15 @@ object IncrementalDedup {
     // set. Cap semantics are unchanged: bucket size is still counted over
     // stored ∪ new membership (within touched buckets; untouched buckets
     // can produce no candidate under any cap).
-    // pins below are repartitioned to the session's shuffle parallelism
-    // first: AQE coalesces their small exchanges to ONE partition, and a
-    // 1-partition checkpoint serializes every CPU-dense consumer stage
-    // downstream (measured: a 2.6 s single-task map over the 1-partition
-    // bucket pin on the sf0.1 critical path)
+    // newBuckets is repartitioned to the session's shuffle parallelism
+    // before its pin: AQE coalesces the small signature exchange to ONE
+    // partition, and a 1-partition checkpoint serializes every CPU-dense
+    // consumer stage downstream (measured: a 2.6 s single-task map over
+    // the 1-partition bucket pin on the sf0.1 critical path)
     val np = bReps.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    // pin census, re-measured after the round-7 verify/shingle rework
-    // (each pin is an eager job on the fold's SEQUENTIAL critical path, so
-    // a pin earns its keep only while the recompute it avoids costs more):
-    //  - newSh stays pinned: three consumers (sizes in the decision
-    //    action, buckets and the verify union in the pin chain), and the
-    //    shingle explode is still the chain's densest map work;
-    //  - newBuckets stays pinned: the signature agg (k hashes per
-    //    shingle) would otherwise materialize under both the broadcast-key
-    //    future and the candidate join;
-    //  - cands UNPINNED: its two consumers (verify probe, candIds
-    //    broadcast) sit in the SAME action as the newPairs pin, and the
-    //    explicit repartition exchange below is reused within that action
-    //    — the pin bought nothing but its own eager job;
-    //  - verifySh UNPINNED: the array-intersection verify folds it into
-    //    per-rep arrays ONCE (single consumer — the old row-level verify
-    //    read it three times, which is what justified the pin).
-    val newSh = Pin(shinglesOf(newReps).repartition(np, col("doc_id")))
-    val newSizes = Dedup.repShingleSizes(newSh)
-    val newBuckets = Pin(Dedup.bandBuckets(newSh, bands, rows, portable = false)
+    val newBuckets = Pin(Dedup.bandBuckets(
+        newArr.select(col("doc_id"), explode(col("ss")).as("s")), bands, rows, portable = false)
       .withColumnRenamed("doc_id", "rep_id")
       .repartition(np, col("band"), col("bucket")))
     val touched = bBuckets.withColumn("is_new", lit(false))
@@ -511,40 +480,48 @@ object IncrementalDedup {
         Seq("band", "bucket"), "left_semi")
       .unionByName(newBuckets.withColumn("is_new", lit(true)))
     val capped = Dedup.cappedBuckets(touched, maxBucket)
-    val candPairs = capped.as("x").join(capped.as("y"),
+    // Dedup's admission rule; its collision count is complete although
+    // only TOUCHED buckets are joined: every admissible pair has a new-rep
+    // side, and each of its co-buckets holds that new rep's key. The
+    // explicit np keeps AQE from coalescing the two-long candidate rows to
+    // one partition, which would run the whole verify in one task.
+    val cands = Dedup.admitted(capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.rep_id") < col("y.rep_id") &&
           (col("x.is_new") || col("y.is_new")))
-      .select(col("x.rep_id").as("a"), col("y.rep_id").as("b"))
-    // candidate ADMISSION must match the from-scratch rule exactly
-    // (Dedup.minBandCollisions — ≥2 agreeing bands for the 32x1 geometry):
-    // a pair admitted by one side and not the other would break the
-    // documented incremental ≡ from-scratch decision identity. The count
-    // is complete here even though only TOUCHED buckets are joined: every
-    // admissible pair has a new-rep side, and every one of its co-buckets
-    // contains that new rep's key — so all of them are in the touched set.
-    val minColl = Dedup.minBandCollisions(bands, rows)
-    val cands = (if (minColl >= 2)
-        candPairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("nb"))
-          .where(col("nb") >= minColl).select(col("a"), col("b"))
-      else candPairs.distinct())
+      .select(col("x.rep_id").as("a"), col("y.rep_id").as("b")), bands, rows)
       .repartition(np, col("a"))
-    // verify needs shingle sets for both sides: new reps have them already;
-    // base reps are shingled ONLY if they are candidates (semi-join) — the
-    // base corpus is never re-derived wholesale
-    val candIds = cands.select(col("a").as("rep_id"))
-      .unionByName(cands.select(col("b").as("rep_id"))).distinct()
-    val baseCandSh = shinglesOf(
-      bReps.join(broadcast(candIds), Seq("rep_id"), "left_semi")
-        .select("rep_id", "text"))
-    val verifySh = newSh.unionByName(baseCandSh)
-    // pinned: the incremental-CC consumer reads the pair delta in two
-    // actions (the touched-component resolution inside the iterations and
-    // the untouched-label passthrough in the decision action) — unpinned,
-    // each would re-run the whole verify chain
-    val newPairs = Pin(Dedup.verifyJaccard(cands, verifySh, numer, denom)
+    // verify needs shingle sets for both sides: new reps have them in the
+    // pin; base reps get theirs from the stored text ONLY if they are
+    // candidates (semi-join) — the base corpus is never re-derived wholesale
+    val candIds = cands.select(col("a").as("doc_id"))
+      .unionByName(cands.select(col("b").as("doc_id"))).distinct()
+    val baseArr = Dedup.shingleArrays(
+      bReps.select(col("rep_id").as("doc_id"), col("text"))
+        .join(broadcast(candIds), Seq("doc_id"), "left_semi"))
+    // pin census (each pin is an eager job on the fold's SEQUENTIAL
+    // critical path, so a relation is pinned only where a later action
+    // would re-derive it at more than a pin's cost):
+    //  - sBase: read by the matched, newBuckets and newPairs pin jobs and
+    //    by the decision action (or the members and reps writes);
+    //  - matched: read by the member attach and the new-rep anti join in
+    //    every later action; pinned, the committed reps are scanned ONCE;
+    //  - newBuckets: read by the touched-key broadcast and the candidate
+    //    join and by the buckets write; unpinned, the signature agg (k
+    //    hashes per shingle) would run per consumer;
+    //  - newPairs: read by the incremental CC in two actions (the touched-
+    //    component resolution, the untouched-label passthrough) or written.
+    // Unpinned: cands (verify and the candIds broadcast sit in the newPairs
+    // pin job behind its one repartition exchange); keyed (read by the
+    // matched pin job, then its shard-sized join re-runs once for newReps);
+    // newArr and members (narrow derivations of pins).
+    val newPairs = Pin(Dedup.verifyArrays(cands, newArr.unionByName(baseArr), numer, denom)
       .select(col("a"), col("b")))
-    ShardFold(matchedMembers, newReps, newMembers, newSizes, newBuckets, newPairs)
+    ShardFold(members,
+      newArr.join(keyed, "doc_id")
+        .select(col("doc_id").as("rep_id"), col("text"), col("gh"),
+          size(col("ss")).cast("long").as("n_shingles")),
+      newBuckets, newPairs)
   }
 
   /** The incremental decision over base-state ∪ shard.
@@ -571,11 +548,8 @@ object IncrementalDedup {
         st.incPairs.unionByName(f.newPairs)
           .select(col("a").as("src"), col("b").as("dst")))
       .select(col("node").as("rep_id"), col("component"))
-    val allMembers = st.members.unionByName(f.matchedMembers).unionByName(f.newMembers)
-    val repN = st.reps.select(col("rep_id"), col("n_shingles"))
-      .unionByName(f.newReps.join(f.newSizes, Seq("rep_id"), "left")
-        .select(col("rep_id"), coalesce(col("n"), lit(0L)).as("n_shingles")))
-    decide(allMembers, repN, comps)
+    decide(st.members.unionByName(f.members),
+      st.reps.unionByName(f.newReps).select(col("rep_id"), col("n_shingles")), comps)
   }
 
   /** The decision tail shared by [[incrementalClusters]] and

@@ -17,6 +17,30 @@ class OpsSpec extends SparkTestBase {
   private lazy val corpus =
     Dedup.derivedCorpus(spark.read.parquet(s"$sf/documents.parquet")).cache()
 
+  /** The sf0.001 derived corpus plus the rows that break naive dedup: null
+    * and empty texts, 1- and 2-token copies, double spaces (empty tokens),
+    * repeated tokens (J = 1 only over DISTINCT shingles) and a 1000-copy
+    * cluster of doc 0's text.
+    */
+  private lazy val adversarialCorpus: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val adversarial = Seq[(Long, String)](
+      (3000001L, null), (3000002L, null),            // no content key
+      (3000003L, ""), (3000004L, ""),
+      (3000005L, "solo"), (3000006L, "solo"),        // 1- and 2-token copies
+      (3000007L, "two words"), (3000008L, "two words"),
+      (3000009L, "a  b c"), (3000010L, "a  b c"),    // double spaces: empty tokens
+      (3000011L, "a b  c"),
+      (3000012L, "x y x y x y x y"),                 // repeated shingles within a doc;
+      (3000013L, "x y x y x y x y x")                // J = 1 only over DISTINCT shingles
+    ).toDF("doc_id", "text")
+    val copyText = corpus.where(col("doc_id") === 0L).head().getString(1)
+    val cluster = spark.range(1000)
+      .select((col("id") + 4000000L).as("doc_id"), lit(copyText).as("text"))
+    corpus.unionByName(adversarial).unionByName(cluster)
+  }
+
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -191,8 +215,6 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("dup clusters == the collapse/shingles/LSH/verify/CC composition, row for row") {
-    val s = spark
-    import s.implicits._
     // the decision rebuilt from the public helpers, one relation per layer
     def composed(c: DataFrame, bands: Int, rows: Int): DataFrame = {
       val (reps, members) = Dedup.exactCollapse(c)
@@ -212,20 +234,7 @@ class OpsSpec extends SparkTestBase {
     }
     def rows(df: DataFrame): Seq[(Long, Long, Long)] = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-    val adversarial = Seq[(Long, String)](
-      (3000001L, null), (3000002L, null),            // no content key
-      (3000003L, ""), (3000004L, ""),
-      (3000005L, "solo"), (3000006L, "solo"),        // 1- and 2-token copies
-      (3000007L, "two words"), (3000008L, "two words"),
-      (3000009L, "a  b c"), (3000010L, "a  b c"),    // double spaces: empty tokens
-      (3000011L, "a b  c"),
-      (3000012L, "x y x y x y x y"),                 // repeated shingles within a doc;
-      (3000013L, "x y x y x y x y x")                // J = 1 only over DISTINCT shingles
-    ).toDF("doc_id", "text")
-    val copyText = corpus.where(col("doc_id") === 0L).head().getString(1)
-    val cluster = spark.range(1000)
-      .select((col("id") + 4000000L).as("doc_id"), lit(copyText).as("text"))
-    val c = corpus.unionByName(adversarial).unionByName(cluster)
+    val c = adversarialCorpus
     for ((bands, rws) <- Seq((16, 2), (32, 1))) {
       val got = rows(Dedup.dupClusters(c, bands = bands, rows = rws))
       assert(got === rows(composed(c, bands, rws)), s"${bands}x$rws")
@@ -709,6 +718,59 @@ class OpsSpec extends SparkTestBase {
       .write.parquet(s"$dir3/comps")
     val planted = rows(IncrementalDedup.incrementalClusters(spark, dir3, shard))
     assert(planted != intact)
+  }
+
+  test("incremental dedup == dupClusters on adversarial rows split across base and shard") {
+    import java.nio.file.Files
+    import graft.ops.IncrementalDedup
+    // odd/even doc ids put one of each adversarial pair (null, "", 1- and
+    // 2-token copies, double spaces, repeated tokens) on each side, and the
+    // 1000-copy cluster straddles base and shard; 32x1 runs the 2-of-k
+    // admission on both sides
+    val c = adversarialCorpus
+    val base = c.where(pmod(col("doc_id"), lit(2)) === 0)
+    val shard = c.where(pmod(col("doc_id"), lit(2)) === 1)
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    for ((bands, rws) <- Seq((16, 2), (32, 1))) {
+      val scratch = rows(Dedup.dupClusters(c, bands = bands, rows = rws))
+      val dir = Files.createTempDirectory("graft-inc-adv").toString
+      IncrementalDedup.commitState(spark, base, dir, bands = bands, rows = rws)
+      assert(rows(IncrementalDedup.incrementalClusters(spark, dir, shard,
+        bands = bands, rows = rws)) === scratch, s"incrementalClusters ${bands}x$rws")
+      IncrementalDedup.commitIncrement(spark, dir, shard, "day-1", bands = bands, rows = rws)
+      assert(rows(IncrementalDedup.decisionAsOf(spark, dir)) === scratch,
+        s"commitIncrement + decisionAsOf ${bands}x$rws")
+    }
+  }
+
+  test("one commitIncrement costs at most 36 Spark jobs") {
+    import java.nio.file.Files
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    import graft.ops.IncrementalDedup
+    val part = (r: Int) => corpus.where(pmod(col("doc_id"), lit(3)) === r)
+    val dir = Files.createTempDirectory("graft-inc-jobs").toString
+    IncrementalDedup.commitState(spark, part(0), dir)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      IncrementalDedup.commitIncrement(spark, dir, part(1), "day-1")
+      Bridge.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val n = jobs.get
+    info(s"commitIncrement: $n jobs")
+    // the fold's four pins (the shard's per-doc relation with its
+    // distinct-text count observed, matched keys, new buckets, new pairs),
+    // their exchanges and broadcasts, and four writes
+    assert(n <= 36, s"commitIncrement took $n jobs")
+    assert(IncrementalDedup.decisionAsOf(spark, dir).count() ===
+      part(0).unionByName(part(1)).where(col("text").isNotNull).count())
   }
 
   test("exact dedup flags exactly the planted copies") {
