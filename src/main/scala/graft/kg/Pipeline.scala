@@ -137,20 +137,7 @@ object Pipeline {
     */
   def skillTriplesSalted(spans: DataFrame, skillsGaz: DataFrame,
       salts: Option[Int] = None): DataFrame = {
-    val li = spans.where(col("kind") === "li")
-    // tokens projected before the gram lambdas (the Extractors.ngramMentions
-    // hoist: no split() inside an interpreted lambda body)
-    val tokens = col("ts")
-    val grams: Seq[org.apache.spark.sql.Column] = (1 to 2).map { n =>
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)), k =>
-          array_join(slice(tokens, k, lit(n)), " ")))
-        .otherwise(typedLit(Seq.empty[String]))
-    }
-    val gramRows = li
-      .select(col("doc_id"), col("offset"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), col("offset"),
-        explode(flatten(array(grams: _*))).as("gram"))
+    val gramRows = Extractors.gramRows(spans.where(col("kind") === "li"), maxN = 2)
     val s = salts.getOrElse {
       val parts = spans.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
       saltMemo.getOrElseUpdate(

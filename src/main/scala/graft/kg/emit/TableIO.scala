@@ -122,17 +122,27 @@ object TableIO {
     */
   def writeTriples(spark: SparkSession, triples: DataFrame, root: String,
       buckets: Int = BucketsDefault, inputLineage: String = ""): Seq[PartitionManifest] = {
-    val pending = resumeFilter(spark, triples, root, buckets)
-      // one output file per partition dir keeps the file count bounded at
-      // high bucket counts; at cluster scale raise buckets, not files/bucket
-      .repartition(col("pred"), col("bucket"))
+    val pending = layout(resumeFilter(spark, triples, root, buckets))
     commitPending(spark, pending, root)(inputLineage)
+  }
+
+  /** The write layout: hash-distribute by (pred, bucket), so each partition
+    * dir gets exactly one output file (this keeps the file count bounded at
+    * high bucket counts; at cluster scale raise buckets, not files/bucket).
+    * The explicit partition count is the repo's rule for exchanges AQE must
+    * not coalesce: an expression-only repartition of a small triple relation
+    * becomes ONE partition, and one task then aggregates and writes every
+    * file while the other task threads idle.
+    */
+  private def layout(df: DataFrame): DataFrame = {
+    val np = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    df.repartition(np, col("pred"), col("bucket"))
   }
 
   /** Fused dedup + layout for PRE-AGGREGATION triple rows (the hot write
     * path): because `bucket` is a pure function of `subj`, hash-distributing
     * by (pred, bucket) already co-locates every (subj, pred, obj) group, so
-    * the dedup aggregation after `repartition(pred, bucket)` needs NO second
+    * the dedup aggregation after the [[layout]] exchange needs NO second
     * exchange (HashPartitioning(pred, bucket) satisfies the agg's clustered
     * distribution as a key subset) and its output partitioning feeds
     * `partitionBy(pred, bucket)` directly — ONE shuffle of the triple
@@ -149,8 +159,7 @@ object TableIO {
     */
   def dedupedPending(spark: SparkSession, rawTriples: DataFrame, root: String,
       buckets: Int = BucketsDefault): DataFrame =
-    resumeFilter(spark, rawTriples, root, buckets)
-      .repartition(col("pred"), col("bucket"))
+    layout(resumeFilter(spark, rawTriples, root, buckets))
       .groupBy(col("pred"), col("bucket"), col("subj"), col("obj"))
       .agg(max(col("score")).as("score"),
         min(col("src_offset")).cast("int").as("src_offset"))
@@ -166,7 +175,6 @@ object TableIO {
       .mode("append")
       .partitionBy("pred", "bucket")
       .parquet(root)
-    val tWrite = System.nanoTime()
     // lineage/metrics per freshly written partition (read back what we wrote:
     // the manifest must describe the bytes on disk, not the plan). The stats
     // scan is restricted to THIS run's fresh (pred, bucket) dirs via a
@@ -181,9 +189,6 @@ object TableIO {
       .map(r => ((r.getString(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
       .toMap
     val wallSec = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(f"[tableio] compute+write ${(tWrite - t0) / 1e9}%.1f s, " +
-        f"stats ${(System.nanoTime() - tWrite) / 1e9}%.1f s")
     val manifests = fresh.map { case (pred, bucket) =>
       val (rows, checksum) = stats((pred, bucket))
       PartitionManifest(pred, bucket, rows, checksum, wallSec, inputLineage)

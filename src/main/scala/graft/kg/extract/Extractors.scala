@@ -3,13 +3,17 @@ package graft.kg.extract
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.kg.expr.TokenGrams
 import graft.kg.io.GazetteerIO
 import graft.kg.schema.Schemas.Pred
 
 /** Span-level extraction stages (SURVEY.md §2.1 R2–R9). All pure
   * org.apache.spark.sql.functions built-ins — codegen'd, no UDFs — except
   * where a custom Catalyst expression is explicitly the point (Jaro-Winkler,
-  * Aho-Corasick; see graft.kg.expr).
+  * Aho-Corasick, and the R4 gram kernel [[TokenGrams]]; see graft.kg.expr).
+  * No gram is spelled with `transform`/`filter` lambdas: those evaluate
+  * interpreted and pull the Generate that explodes them out of whole-stage
+  * codegen.
   */
 object Extractors {
 
@@ -66,24 +70,30 @@ object Extractors {
     * interchangeable trie plan is [[graft.kg.expr.AhoCorasickMatches]].
     * Output: (doc_id, surface, entity_id, canonical, offset).
     */
-  def ngramMentions(spans: DataFrame, gaz: DataFrame, maxN: Int = 2): DataFrame = {
-    // tokens are PROJECTED before the gram lambdas (separate select): HOF
-    // lambdas evaluate interpreted with no loop-invariant hoisting, so a
-    // split() inside the lambda body re-splits the span once per gram
-    // position — O(tokens²) per row. One split per row, identical grams.
-    val tokens = col("ts")
-    val grams: Seq[Column] = (1 to maxN).map { n =>
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)), k =>
-          array_join(slice(tokens, k, lit(n)), " ")))
-        .otherwise(typedLit(Seq.empty[String]))
-    }
-    spans
-      .select(col("doc_id"), col("offset"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), col("offset"), explode(flatten(array(grams: _*))).as("gram"))
+  def ngramMentions(spans: DataFrame, gaz: DataFrame, maxN: Int = 2): DataFrame =
+    gramRows(spans, maxN)
       .join(broadcast(gaz), col("gram") === col("surface"))
       .select(col("doc_id"), col("surface"), col("entity_id"), col("canonical"), col("offset"))
-  }
+
+  /** (doc_id, offset, gram): every 1..maxN-token gram of each span's text,
+    * unfiltered — the gram side of [[ngramMentions]] and of the salted skill
+    * join ([[graft.kg.Pipeline.skillTriplesSalted]]).
+    */
+  private[graft] def gramRows(spans: DataFrame, maxN: Int): DataFrame =
+    spans.select(col("doc_id"), col("offset"),
+      explode(spanGrams(lit(maxN), upperFirst = false)).as("gram"))
+
+  /** The grams of the span's `text` split on single spaces, through the one
+    * codegen'd gram kernel ([[TokenGrams]]) every R4 path shares. `maxN` is
+    * per row: the mention paths emit 2-grams only for kinds whose gazetteer
+    * has multi-token surfaces.
+    */
+  private def spanGrams(maxN: Column, upperFirst: Boolean, tag: Option[String] = None): Column =
+    TokenGrams.tokenGrams(split(col("text"), " "), maxN, upperFirst, tag)
+
+  /** 2 for the `twoGramKinds`, else 1 (also for a null kind). */
+  private def gramWidth(twoGramKinds: Seq[String]): Column =
+    when(col("kind").isin(twoGramKinds.map(x => x: Any): _*), 2).otherwise(1)
 
   /** Single-pass candidate generation (the scan-once hot path of
     * Pipeline.allTriples): one projection over the exploded spans emits every
@@ -128,25 +138,14 @@ object Extractors {
       col("kind") === "footer" && col("text").rlike("\\b(AG|GmbH|SA)$"),
       array(cand("company", trim(col("text"))))).otherwise(emptyCands)
 
-    // tokens projected before the gram lambdas (the [[ngramMentions]]
-    // hoist): a split() inside the interpreted 2-gram lambda would re-split
-    // the span once per gram position — O(tokens²) per row on the single
-    // corpus-scan hot path of Pipeline.allTriples
-    val tokens = col("ts")
-    val oneGrams = transform(filter(tokens, t => GazetteerIO.upperStart(t)),
-      t => cand("gram", t))
-    val twoGrams = when(col("kind").isin(twoGramKinds.map(x => x: Any): _*) && size(tokens) >= 2,
-      transform(
-        filter(transform(sequence(lit(1), size(tokens) - 1), k =>
-          array_join(slice(tokens, k, lit(2)), " ")), g => GazetteerIO.upperStart(g)),
-        g => cand("gram", g)))
-      .otherwise(emptyCands)
+    // upper-first 1-grams, plus 2-grams for the twoGramKinds, from the
+    // codegen'd kernel: no lambda is left in the explode, so the whole
+    // Generate (regexes, CASE, IN) compiles into one whole-stage stage
     val grams = when(col("kind").isin(mentionKinds.map(x => x: Any): _*),
-      concat(oneGrams, twoGrams)).otherwise(emptyCands)
+      spanGrams(gramWidth(twoGramKinds), upperFirst = true, tag = Some("gram")))
+      .otherwise(emptyCands)
 
     spans
-      .select(col("doc_id"), col("kind"), col("offset"), col("text"),
-        split(col("text"), " ").as("ts"))
       .select(col("doc_id"), col("kind"), col("offset"),
         explode(concat(title, workload, company, grams)).as("c"))
       .select(col("doc_id"), col("c.ctype").as("ctype"), col("c.payload").as("payload"),
@@ -183,21 +182,10 @@ object Extractors {
     // lowercase — filtering tokens by first char before the gram explode
     // drops ~95% of gram rows (and the memory traffic that dominates this
     // stage) without changing results.
-    // tokens projected before the gram lambdas (the [[ngramMentions]]
-    // hoist: no split() inside an interpreted lambda body)
-    val tokens = col("ts")
-    val oneGrams = filter(tokens, t => GazetteerIO.upperStart(t))
-    val twoGrams = when(col("kind").isin(multiTokenKinds.map(x => x: Any): _*) &&
-        size(tokens) >= 2,
-      filter(transform(sequence(lit(1), size(tokens) - 1), k =>
-        array_join(slice(tokens, k, lit(2)), " ")), g => GazetteerIO.upperStart(g)))
-      .otherwise(typedLit(Seq.empty[String]))
     spans
       .where(col("kind").isin(gazByKind.map(_._1: Any): _*))
       .select(col("doc_id"), col("kind"), col("offset"),
-        split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), col("kind"), col("offset"),
-        explode(concat(oneGrams, twoGrams)).as("gram"))
+        explode(spanGrams(gramWidth(multiTokenKinds), upperFirst = true)).as("gram"))
       .join(broadcast(dim),
         col("gram") === col("surface") && col("kind") === col("gkind"))
       .select(col("doc_id"), col("pred"), col("entity_id"), col("offset"))

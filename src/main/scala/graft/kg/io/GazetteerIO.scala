@@ -64,7 +64,9 @@ object GazetteerIO {
   /** The gram pre-filter implied by [[validated]]'s contract: a token can
     * only match a gazetteer surface if its first char is [A-Z0-9]. ONE
     * definition next to the contract it encodes — extraction operators must
-    * use this, not private copies that could drift.
+    * use this, not private copies that could drift. The one other spelling
+    * is the gram kernel's byte form, [[graft.kg.expr.TokenGramsAlgo.upperStart]];
+    * GramKernelSpec holds the two equal on generated tokens.
     */
   def upperStart(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val h = substring(c, 1, 1)

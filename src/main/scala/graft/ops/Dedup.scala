@@ -387,8 +387,15 @@ object Dedup {
     * Output: (a, b), a < b.
     */
   private[graft] def lshCandidates(sh: DataFrame, bands: Int, rows: Int,
-      portable: Boolean, maxBucket: Int): DataFrame = {
-    val buckets = cappedBuckets(bandBuckets(sh, bands, rows, portable), maxBucket)
+      portable: Boolean, maxBucket: Int): DataFrame =
+    bucketCandidates(bandBuckets(sh, bands, rows, portable), bands, rows, maxBucket)
+
+  /** The candidate half of [[lshCandidates]] over a given (doc_id, band,
+    * bucket) relation: cap, band self-join, [[admitted]]. Output: (a, b).
+    */
+  private[graft] def bucketCandidates(bandBuckets: DataFrame, bands: Int, rows: Int,
+      maxBucket: Int): DataFrame = {
+    val buckets = cappedBuckets(bandBuckets, maxBucket)
     admitted(buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -644,18 +651,31 @@ object Dedup {
   private[graft] def repArrays(base: DataFrame): DataFrame =
     base.where(col("ss").isNotNull).select(col("rep_id").as("doc_id"), col("ss"))
 
+  /** The (doc_id, band, bucket) relation of a [[repArrays]] relation: its
+    * minhash signatures over the exploded arrays, banded.
+    */
+  private[graft] def repBuckets(arr: DataFrame, bands: Int, rows: Int): DataFrame =
+    bandBuckets(arr.select(col("doc_id"), explode(col("ss")).as("s")), bands, rows,
+      portable = false)
+
   /** Verified rep-level LSH pairs over a pinned [[decisionBase]] — the CC
-    * input of [[dupClusters]] and of [[IncrementalDedup.commitState]]:
-    * signatures and capped candidates from [[lshCandidates]] over the
-    * exploded arrays, verify over the arrays themselves.
+    * input of [[dupClusters]]: [[repBuckets]], then [[verifiedRepPairs]].
     * Output: (a, b, common, union_).
     */
   private[graft] def baseRepPairs(base: DataFrame, numer: Int, denom: Int,
       bands: Int, rows: Int, maxBucket: Int): DataFrame = {
     val arr = repArrays(base)
-    val sh = arr.select(col("doc_id"), explode(col("ss")).as("s"))
-    verifyArrays(lshCandidates(sh, bands, rows, portable = false, maxBucket), arr, numer, denom)
+    verifiedRepPairs(repBuckets(arr, bands, rows), arr, numer, denom, bands, rows, maxBucket)
   }
+
+  /** Capped candidates from the given [[repBuckets]] of `arr`
+    * ([[bucketCandidates]]), verified over the arrays themselves — so
+    * [[IncrementalDedup.commitState]], which also writes the buckets, signs
+    * the corpus once. Output: (a, b, common, union_).
+    */
+  private[graft] def verifiedRepPairs(buckets: DataFrame, arr: DataFrame, numer: Int,
+      denom: Int, bands: Int, rows: Int, maxBucket: Int): DataFrame =
+    verifyArrays(bucketCandidates(buckets, bands, rows, maxBucket), arr, numer, denom)
 
   /** Representative-level LSH pairs (the CC input of [[dupClusters]], by
     * the same derivation): pinned collapse → capped candidates → exact

@@ -25,8 +25,9 @@ import graft.Pin
   *
   * Both writers derive from the relation [[Dedup.dupClusters]] reads:
   * [[commitState]] pins [[Dedup.decisionBase]] of the corpus and takes
-  * members, shingle counts, band buckets and (by [[Dedup.baseRepPairs]],
-  * the batch CC input) the pair graph from it; the fold below pins the same
+  * members, shingle counts, band buckets ([[Dedup.repBuckets]]) and (by
+  * [[Dedup.verifiedRepPairs]] over those buckets, the batch CC input's
+  * derivation) the pair graph from it; the fold below pins the same
   * relation of the shard. Candidate admission ([[Dedup.admitted]]) and
   * verify ([[Dedup.verifyArrays]]) are Dedup's own, so the two paths share
   * every rule that decides a pair.
@@ -86,14 +87,14 @@ object IncrementalDedup {
   /** Write the dedup state of `corpus` under `stateDir` (parquet subdirs),
     * derived exactly as [[Dedup.dupClusters]] derives its decision: one
     * pinned [[Dedup.decisionBase]], its pair graph by the same
-    * [[Dedup.baseRepPairs]], and connected components over those pairs —
-    * the from-scratch cost, paid ONCE at commit time.
+    * derivation as [[Dedup.baseRepPairs]], and connected components over
+    * those pairs — the from-scratch cost, paid ONCE at commit time.
     */
   def commitState(spark: SparkSession, corpus: DataFrame, stateDir: String,
       numer: Int = 1, denom: Int = 2, bands: Int = 32, rows: Int = 1,
       maxBucket: Int = 1000): Unit = {
-    // five actions (four writes and the CC input) read the per-doc
-    // relation: pinned once, as dupClusters pins it
+    // four actions (two writes and the bucket and pair pins) read the
+    // per-doc relation: pinned once, as dupClusters pins it
     val base = Pin(Dedup.decisionBase(corpus))
     val arr = Dedup.repArrays(base)
     // gh (the sha2 content key) is STORED: the shard fold's attach join
@@ -129,13 +130,15 @@ object IncrementalDedup {
       .write.mode("overwrite").parquet(s"$stateDir/reps")
     base.select(col("doc_id"), col("rep_id")).repartition(np, col("doc_id"))
       .write.mode("overwrite").parquet(s"$stateDir/members")
-    Dedup.bandBuckets(arr.select(col("doc_id"), explode(col("ss")).as("s")),
-        bands, rows, portable = false)
-      .withColumnRenamed("doc_id", "rep_id")
+    // the signatures are computed once: the pinned buckets feed both the
+    // buckets/ write and the pair graph's candidate join
+    val buckets = Pin(Dedup.repBuckets(arr, bands, rows))
+    buckets.withColumnRenamed("doc_id", "rep_id")
       .repartition(np, col("band"), col("bucket"))
       .write.mode("overwrite").parquet(s"$stateDir/buckets")
-    val pairs = Pin(Dedup.baseRepPairs(base, numer, denom, bands, rows, maxBucket)
-      .select(col("a"), col("b")))
+    val pairs = Pin(
+      Dedup.verifiedRepPairs(buckets, arr, numer, denom, bands, rows, maxBucket)
+        .select(col("a"), col("b")))
     pairs.repartition(np, col("a"))
       .write.mode("overwrite").parquet(s"$stateDir/pairs")
     // the committed COMPONENT LABELS of the pair graph: paid once here so

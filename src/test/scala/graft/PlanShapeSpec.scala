@@ -90,6 +90,48 @@ class PlanShapeSpec extends SparkTestBase {
       s"fused plan has $fused shuffles, two-step has $twoStep — expected exactly one saved")
   }
 
+  test("candidate explode compiles: its Generate sits in whole-stage codegen, no lambda") {
+    val gaz = graft.kg.Pipeline.defaultGazetteers(spark)
+    val spans = graft.kg.extract.Extractors.textSpans(graft.kg.io.SyntheticCorpus.postings(spark, sf))
+    val df = graft.kg.extract.Extractors
+      .candidates(spans, gaz.prep.mentionTwoGramKinds, gaz.mentionDims.map(_._1))
+    df.collect() // the final (adaptive) plan carries the codegen stage ids
+    val p = df.queryExecution.executedPlan.toString
+    val gen = p.linesIterator.filter(_.contains("Generate explode(concat(")).toSeq
+    assert(gen.size == 1, s"candidate Generate not found:\n${p.take(3000)}")
+    // `*(n) Generate` = inside WholeStageCodegen stage n; a CodegenFallback
+    // child (a lambda) renders it without the marker
+    assert(gen.head.matches(".*\\*\\(\\d+\\) Generate explode\\(concat\\(.*"),
+      s"candidate Generate runs interpreted:\n${gen.head.take(300)}")
+    // the candidates' own operators: everything above the span explode (the
+    // synthetic corpus below it is built with lambdas of its own)
+    val own = p.linesIterator.takeWhile(!_.contains("Generate explode(spans")).mkString("\n")
+    assert(!own.toLowerCase.contains("lambdafunction"), s"lambda in the plan:\n${own.take(3000)}")
+  }
+
+  test("fused dedup write runs on more than one task: the layout exchange is not coalesced") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val postings = graft.kg.io.SyntheticCorpus.postings(spark, sf)
+    // pinned input: the only stage that reads a shuffle is the write stage
+    val raw = Pin(graft.kg.Pipeline.allTriplesRaw(postings, graft.kg.Pipeline.defaultGazetteers(spark)))
+    val root = java.nio.file.Files.createTempDirectory("graft-write-tasks").toString
+    val postShuffleTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.parentIds.nonEmpty) postShuffleTasks.add(e.stageInfo.numTasks)
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.kg.emit.TableIO.dedupedPending(spark, raw, root)
+        .write.mode("append").partitionBy("pred", "bucket").parquet(root)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tasks = postShuffleTasks.toArray.toSeq
+    assert(tasks.size == 1 && tasks.head.asInstanceOf[Int] > 1,
+      s"write stage task counts: $tasks (one coalesced task writes every file)")
+  }
+
   test("dedup shingle relation is computed once and SHARED by all consumers") {
     // each pair operator's multiply-consumed relation (shingles for
     // minhash/ngram, simhash signatures) is pinned once (graft.Pin — see

@@ -105,6 +105,20 @@ class ResumeSpec extends SparkTestBase {
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4)))
       .toSet
     assert(full(a) == full(b))
+    // the layout exchange puts each (pred, bucket) key in one partition:
+    // one data file per partition dir on both write paths
+    import scala.jdk.CollectionConverters._
+    for (root <- Seq(a, b)) {
+      val dirs = Files.walk(Paths.get(root)).iterator().asScala
+        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("bucket="))
+        .toList
+      assert(dirs.nonEmpty)
+      for (d <- dirs) {
+        val files = Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+        assert(files == 1, s"$d holds $files parquet files")
+      }
+    }
   }
 
   test("manifests carry lineage and row counts that match the data") {
