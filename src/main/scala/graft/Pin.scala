@@ -47,8 +47,9 @@ private[graft] object Pin {
     df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
 
   /** [[apply]], plus aggregate `metrics` over the pinned rows computed by
-    * the pin's own job (`Dataset.observe`), for iterated loops whose
-    * convergence test would otherwise be one more action per round. The
+    * the pin's own job (`Dataset.observe`), for a test that would otherwise
+    * be one more action: [[Fixpoint]]'s per-round convergence test (the
+    * loop of every iterative operator) and the dedup fold's shard guard. The
     * observation sits on top of `df`, so it is evaluated in the pin's
     * result stage and merges each partition's update once. Returns the
     * pinned relation and the metrics row (fields in `metrics` order). An

@@ -1137,7 +1137,7 @@ object SparkEntry {
       .map { case (c, p) => s"('$c', '$p')" }.mkString(", ")
 
   /** Transitive closure of the is_a taxonomy stated as a recursive CTE —
-    * verifies the statically-unrolled extension joins of
+    * verifies the convergence-checked extension joins of
     * [[graft.kg.query.Ontology.transitiveClosure]] against the declarative
     * reachability definition.
     */

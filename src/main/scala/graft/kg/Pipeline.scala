@@ -232,17 +232,10 @@ object Pipeline {
       .select(col("doc_id"), col("pred"), col("entity_id").as("obj"),
         lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
 
-    val titles = {
-      val tc = cands.where(col("ctype") === "title")
-        .select(col("doc_id"), col("payload").as("candidate"), col("offset"))
-      val linked = Linking.linkCandidates(tc, gaz.titles)
-      linked.groupBy(col("doc_id"))
-        .agg(min_by(
-          struct(col("entity_id"), col("score"), col("offset")),
-          struct((-col("score")).as("ns"), col("entity_id"), col("offset"))).as("best"))
-        .select(col("doc_id"), lit(Pred.hasTitle).as("pred"), col("best.entity_id").as("obj"),
-          col("best.score").as("score"), col("best.offset").cast("int").as("src_offset"))
-    }
+    val titles = bestTitle(Linking.linkCandidates(
+      cands.where(col("ctype") === "title")
+        .select(col("doc_id"), col("payload").as("candidate"), col("offset")),
+      gaz.titles))
 
     val companies = {
       val cc = cands.where(col("ctype") === "company")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Pin
+import graft.{Fixpoint, Pin}
 
 /** R13 — canonicalization of surface forms via iterative DataFrame connected
   * components (SURVEY.md §2.1, BASELINE.json:6: "iterative DataFrame
@@ -19,8 +19,9 @@ import graft.Pin
   * ([[graft.Pin]]) that cuts the Catalyst lineage — without it the
   * re-planned plan tree grows exponentially with iterations (SURVEY.md §4,
   * the one place a naive build dies at scale; [[graft.Pin]] states what
-  * changes on a cluster). The convergence test rides the pin's own job, so
-  * a round costs four Spark jobs (ConnectedComponentsSpec counts them).
+  * changes on a cluster). The loop is [[graft.Fixpoint]]: the convergence
+  * test rides the pin's own job, so a round costs the pin job and the jobs
+  * of its exchanges, at most four (ConnectedComponentsSpec counts them).
   *
   * Node ids are any Catalyst-orderable column type — the engine only uses
   * min/least/greatest/comparisons, so surface canonicalization runs it over
@@ -70,20 +71,20 @@ object ConnectedComponents {
     * component = min node of the connected component.
     *
     * `maxIter` is a THROWING runaway bound, never a silent truncation (the
-    * kcore/ktruss/WSP discipline): a truncated star forest would silently
+    * [[graft.Fixpoint]] discipline): a truncated star forest would silently
     * under-merge components — at 10^12-row scale that is a wrong dedup
     * decision with no error. Large-star/small-star needs O(log n) rounds,
     * so 64 covers any physically storable graph; rounds past convergence
     * cost nothing (the loop exits at the exact fixpoint).
     */
   def run(edges: DataFrame, maxIter: Int = 64): DataFrame = {
-    // No distinct here: round 1's group-by collapses repeated input edges,
-    // and the star windows' mins ignore them.
-    var e = Pin(edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // The state is a tagged edge set: `l` marks the edges of the latest
+    // round, `r` those of the round before. No distinct on the input:
+    // round 1's group-by collapses repeated edges, and the star windows'
+    // mins ignore them.
+    def live(t: DataFrame) = t.where(col("l").isNotNull).select(col("src"), col("dst"))
+    val fin = Fixpoint("ConnectedComponents", maxIter,
+      Pin(edges.select(col("src"), col("dst"), lit(1).as("l")).where(col("src") =!= col("dst"))),
       // One aggregation is both the round's distinct and its EXACT
       // set-equality fixpoint test, not a hash signature (a summed
       // per-edge hash can collide or cancel across a delta and declare
@@ -92,23 +93,17 @@ object ConnectedComponents {
       // (r) by (src, dst), a group with only one side is an edge in
       // exactly one of the two sets, so none ⇔ next = prev, for ANY
       // orderable id type (a monotone numeric label-sum would not be
-      // type-generic). The count of one-sided groups is observed on the
-      // pin's own job; zero rows observe null, which is also "no change".
-      val (tagged, changed) = Pin.observed(s"ConnectedComponents round ${iter + 1}",
-        smallStar(largeStar(e))
-          .select(col("src"), col("dst"), lit(1).as("l"), lit(null).cast("int").as("r"))
-          .union(e.select(col("src"), col("dst"), lit(null).cast("int").as("l"), lit(1).as("r")))
-          .groupBy("src", "dst").agg(max(col("l")).as("l"), max(col("r")).as("r")),
-        sum(when(col("l").isNull || col("r").isNull, 1L).otherwise(0L)))
-      converged = changed.isNullAt(0) || changed.getLong(0) == 0L
-      e = tagged.where(col("l").isNotNull).select(col("src"), col("dst"))
-      iter += 1
-    }
-    require(converged,
-      s"ConnectedComponents not converged after $maxIter rounds — " +
-        "raise maxIter; refusing to return a truncated (under-merged) forest")
+      // type-generic). Zero rows observe null, which is also "no change".
+      Seq(sum(when(col("l").isNull || col("r").isNull, 1L).otherwise(0L)))) { t =>
+      val e = live(t)
+      smallStar(largeStar(e))
+        .select(col("src"), col("dst"), lit(1).as("l"), lit(null).cast("int").as("r"))
+        .union(e.select(col("src"), col("dst"), lit(null).cast("int").as("l"), lit(1).as("r")))
+        .groupBy("src", "dst").agg(max(col("l")).as("l"), max(col("r")).as("r"))
+    } { changed => changed.isNullAt(0) || changed.getLong(0) == 0L }
     // At the fixed point every edge points child -> component root; the
     // groupBy drops the roots' repeats.
+    val e = live(fin)
     val members = e.select(col("src").as("node"), col("dst").as("component"))
     val roots = e.select(col("dst").as("node"), col("dst").as("component"))
     members.union(roots)

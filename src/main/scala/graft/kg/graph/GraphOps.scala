@@ -3,7 +3,7 @@ package graft.kg.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Pin
+import graft.{Fixpoint, Pin}
 
 /** Graph analytics over the MATERIALIZED knowledge graph — the consumption
   * side of KG construction (SURVEY.md §2: once (subj, pred, obj) triples are
@@ -266,9 +266,9 @@ object GraphOps {
     * truncation (the defect class a statically-unrolled peel has: a 100×
     * corpus with longer tendrils would quietly return a superset). A peel
     * never adds edges, so an unchanged edge COUNT is a sound fixpoint test
-    * — each round's survivor set is pinned (graph-sized, referenced 3× by
-    * the next round) and its count observed on the pin's own job, so the
-    * test costs no extra action.
+    * — each round pins its input edges flagged `keep` (graph-sized, the
+    * next round reads the kept ones 3×) and observes (edges, kept edges)
+    * on the pin's own job ([[peel]]), so the test costs no extra action.
     * `maxRounds` is a runaway bound, not a semantic knob: exceeding it
     * THROWS rather than returning the truncated superset (a peel halves
     * nothing per round in the worst case, but real graphs converge in ≤
@@ -287,32 +287,32 @@ object GraphOps {
     * relation — the input is deliberately NOT re-pinned, which would copy
     * a whole bucketed table per run and discard its scan layout; round 1
     * re-reads it 2–3×, every later round reads the pinned survivor set).
-    * An empty survivor set converges immediately (the empty core is fully
-    * determined — it must never trip the runaway throw).
+    * An empty survivor set converges in the round that finds it (the
+    * empty core is fully determined — never a runaway throw).
     */
-  def kcoreOnEdges(edges: DataFrame, k: Int = 2, maxRounds: Int = 1024): DataFrame = {
-    var e = edges.select(col("x"), col("y"))
-    var n = e.count()
-    var converged = n == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
+  def kcoreOnEdges(edges: DataFrame, k: Int = 2, maxRounds: Int = 1024): DataFrame =
+    peel("k-core peel", maxRounds, edges.select(col("x"), col("y"))) { e =>
       val surv = e.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("x"))
-      val (next, size) = Pin.observed("k-core peel round",
-        e.join(surv, Seq("x"), "left_semi")
-          .join(surv.select(col("x").as("y")), Seq("y"), "left_semi"), count(lit(1)))
-      val m = size.getLong(0)
-      converged = m == n || m == 0L
-      n = m
-      e = next
-      round += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"k-core peel not converged after $maxRounds rounds ($n edges left) — " +
-        "raise maxRounds; refusing to return a truncated superset")
-    e.groupBy(col("x")).agg(count(lit(1)).as("deg_in_core"))
+        .where(col("deg") >= k).select(col("x"), lit(true).as("kx"))
+      e.join(surv, Seq("x"), "left")
+        .join(surv.select(col("x").as("y"), col("kx").as("ky")), Seq("y"), "left")
+        .select(col("x"), col("y"), (col("kx").isNotNull && col("ky").isNotNull).as("keep"))
+    }.groupBy(col("x")).agg(count(lit(1)).as("deg_in_core"))
       .select(col("x").as("entity"), col("deg_in_core"))
-  }
+
+  /** The [[kcore]] / [[ktruss]] peel loop: round i pins `step` over the
+    * edges kept by round i−1 (round 1: all of `edges`), each flagged
+    * `keep`, and the [[graft.Fixpoint]] test reads (edges, kept edges) off
+    * the pin's job — all kept is the fixpoint, none kept the empty result.
+    * Returns the kept rows of the last round.
+    */
+  private def peel(what: String, maxRounds: Int, edges: DataFrame)(
+      step: DataFrame => DataFrame): DataFrame =
+    Fixpoint(what, maxRounds, edges.withColumn("keep", lit(true)),
+      Seq(count(lit(1)), count_if(col("keep")))) { t =>
+      step(t.where(col("keep")).select(col("x"), col("y")))
+    } { r => r.getLong(1) == r.getLong(0) || r.getLong(1) == 0L }
+      .where(col("keep"))
 
   /** Log2-bucketed DEGREE HISTOGRAM of the co-occurrence graph — the skew
     * diagnostic run before the iterated analytics (how heavy are the hub
@@ -388,8 +388,9 @@ object GraphOps {
     * cancelling hash deltas could declare convergence mid-relaxation);
     * the sum is DECIMAL(38,0) so no distance scale can overflow it.
     * The node-cardinality distance relation is pinned per round to cut
-    * the iterated lineage, and its signature is observed on the pin's own
-    * job (no extra action). Unlike BFS there is no static frontier predicate —
+    * the iterated lineage ([[graft.Fixpoint]]); the pin keeps the round's
+    * input distances next to its output, so both signatures are observed
+    * on the pin's own job (no extra action). Unlike BFS there is no static frontier predicate —
     * a cheaper path can re-relax an already-reached node, so each round
     * joins edges against the full reached set: one equi-join + min
     * hash-agg + left join, edges loop-invariant
@@ -408,29 +409,19 @@ object GraphOps {
       maxRounds: Int = 1024): DataFrame = {
     require(seeds.nonEmpty, "shortestPaths needs a seed set")
     val edges = wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
-    // (reached count, distance sum), observed on each pin's own job
-    def pinSigned(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val (pinned, r) = Pin.observed("shortest-path relaxation round", df, count(col("d")),
-        coalesce(sum(col("d").cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO)))
-      (pinned, (r.getLong(0), r.getDecimal(1)))
-    }
-    var (dist, sig) = pinSigned(edges.select(col("x").as("n")).distinct()
-      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")))
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
+    // (reached count, distance sum) of a distance column
+    def signature(d: Column) = Seq(count(d), sum(d.cast("decimal(38,0)")))
+    // each round's pin carries the distances before the round (p) next to
+    // those after it (d), so its job observes both signatures
+    val dist = Fixpoint("shortest-path relaxation", maxRounds,
+      edges.select(col("x").as("n")).distinct()
+        .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")),
+      signature(col("p")) ++ signature(col("d"))) { dist =>
       val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
         .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
-      val (next, nextSig) = pinSigned(dist.join(prop, col("n") === col("y"), "left")
-        .select(col("n"), least(col("d"), col("nd")).as("d")))
-      converged = nextSig == sig
-      sig = nextSig
-      dist = next
-      round += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"shortest-path relaxation not converged after $maxRounds rounds — " +
-        "raise maxRounds; refusing to return hop-truncated distances")
+      dist.join(prop, col("n") === col("y"), "left")
+        .select(col("n"), least(col("d"), col("nd")).as("d"), col("d").as("p"))
+    } { r => r.getLong(0) == r.getLong(2) && r.get(1) == r.get(3) }
     dist.where(col("d").isNotNull)
       .select(col("n").as("entity"), col("d").as("dist_e6"))
   }
@@ -653,10 +644,10 @@ object GraphOps {
     * CONVERGENCE-CHECKED like [[kcore]]: support-filter rounds run until
     * one removes no edge — the result IS the k-truss at any cascade depth,
     * never a fixed-round truncated superset; `maxRounds` is a runaway
-    * bound that THROWS when exceeded. The fixpoint round's support relation
-    * doubles as the survivor labeling (the set didn't change, so its
-    * within-truss supports are already computed) — convergence costs no
-    * extra triangle pass over the old truncated unroll.
+    * bound that THROWS when exceeded. Each round pins its input edges
+    * with their supports ([[peel]]); when all are kept, those supports
+    * are the survivor labeling (the set didn't change, so its
+    * within-truss supports are already computed).
     * Each round is one degree-ordered triangle enumeration over the
     * surviving edges (the [[triangles]] join, O(√m)-bounded hot groups) +
     * one explode/hash-agg + one left-join filter — all equi-keyed.
@@ -667,7 +658,7 @@ object GraphOps {
     ktrussOnEdges(pinnedEdges(triples), k, maxRounds)
 
   /** [[ktruss]] over an already-materialized symmetric edge relation.
-    * Each round's surviving half (with supports) is eagerly checkpointed
+    * Each round's half (with supports) is eagerly checkpointed
     * (graph-sized, the [[pinnedEdges]] discipline) — load-bearing, not
     * hygiene: the triangle enumeration self-joins its input 3×, so an
     * un-materialized round-i half would re-execute the whole round-(i−1)
@@ -679,32 +670,13 @@ object GraphOps {
       half.union(half.select(col("y").as("x"), col("x").as("y")))
     // input deliberately not re-pinned (the kcoreOnEdges contract): round 1
     // re-reads the caller's materialized relation a few times, later rounds
-    // read the pinned per-round survivor relation
-    var half = edges.where(col("x") < col("y")).select(col("x"), col("y"))
-    var n = half.count()
-    var labeled: DataFrame = null
-    var round = 0
-    while (labeled == null && round < maxRounds) {
-      val withSupp = Pin(
-        half.join(edgeTriangleSupport(sym(half)), Seq("x", "y"), "left")
-          .select(col("x"), col("y"),
-            coalesce(col("supp"), lit(0L)).as("supp")))
-      val next = withSupp.where(col("supp") >= k - 2)
-      val m = next.count()
-      // m == n: fixpoint, supports already counted within it; m == 0: the
-      // empty truss is fully determined — converge now, don't burn a
-      // confirmation round (or the runaway throw at the cap boundary)
-      if (m == n || m == 0L) labeled = next
-      else {
-        half = next.select(col("x"), col("y")) // filter over the pinned relation
-        n = m
-      }
-      round += 1
-    }
-    if (labeled == null) throw new IllegalStateException(
-      s"k-truss peel not converged after $maxRounds rounds ($n edges left) — " +
-        "raise maxRounds; refusing to return a truncated superset")
-    labeled
+    // read the pinned per-round relation
+    val half = edges.where(col("x") < col("y")).select(col("x"), col("y"))
+    peel("k-truss peel", maxRounds, half) { h =>
+      h.join(edgeTriangleSupport(sym(h)), Seq("x", "y"), "left")
+        .select(col("x"), col("y"), coalesce(col("supp"), lit(0L)).as("supp"))
+        .withColumn("keep", col("supp") >= k - 2)
+    }.select(col("x"), col("y"), col("supp"))
   }
 
   /** Local CLUSTERING COEFFICIENT per entity — how interlinked an entity's
@@ -799,8 +771,8 @@ object GraphOps {
     * oscillate between two label states forever (a single edge already
     * does), which is why a bare "iterate until no change" loop is
     * unsound as an operator. This variant stops at the first repeated
-    * state, detected exactly (the CC full-outer set-equality probe, no
-    * hash signatures):
+    * state, detected exactly (two per-node label comparisons, no hash
+    * signatures):
     *  - next = cur         → true fixpoint, return it;
     *  - next = state TWO rounds back → 2-cycle; the two alternating
     *    states are (cur, next), and the result is their elementwise
@@ -809,8 +781,9 @@ object GraphOps {
     *    (Raghavan et al. 2007 prescribe asynchrony for the same reason).
     * Periods > 2 are not detected (rare in practice; guarded by the
     * THROWING `maxRounds` runaway bound — never a silent truncation).
-    * Per round: one labs pin + up to two emptiness probes, all
-    * node-cardinality.
+    * Per round: one pin of (node, label, label one and two rounds back),
+    * node-cardinality, whose own job counts the labels that differ from
+    * each ([[graft.Fixpoint]]); no other action.
     * Output: (entity, label).
     */
   def labelPropagationConverged(triples: DataFrame, maxRounds: Int = 64): DataFrame =
@@ -821,29 +794,17 @@ object GraphOps {
     */
   def labelPropagationConvergedOnEdges(edges: DataFrame,
       maxRounds: Int = 64): DataFrame = {
-    def same(a: DataFrame, b: DataFrame): Boolean =
-      a.withColumn("l", lit(1))
-        .join(b.withColumn("r", lit(1)), Seq("n", "lab"), "full_outer")
-        .where(col("l").isNull || col("r").isNull)
-        .isEmpty
-    var prev2: DataFrame = null
-    var cur = Pin(lpaInit(edges))
-    var result: DataFrame = null
-    var round = 0
-    while (result == null && round < maxRounds) {
-      val next = Pin(lpaStep(edges, cur))
-      if (same(next, cur)) result = next
-      else if (prev2 != null && same(next, prev2))
-        result = cur.select(col("n"), col("lab").as("la"))
-          .join(next.select(col("n"), col("lab").as("lb")), "n")
-          .select(col("n"), least(col("la"), col("lb")).as("lab"))
-      else { prev2 = cur; cur = next; round += 1 }
-    }
-    require(result != null,
-      s"labelPropagationConverged: no fixpoint or 2-cycle within $maxRounds " +
-        "rounds — raise maxRounds (a longer-period oscillation is possible " +
-        "but pathological); refusing to return a mid-oscillation state")
-    result.select(col("n").as("entity"), col("lab").as("label"))
+    // state: each node's label (lab), its label one round back (prev) and
+    // two rounds back (prev2). The initial state is its own predecessor,
+    // so round 1's 2-cycle test is its fixpoint test.
+    val fin = Fixpoint("labelPropagationConverged: no fixpoint or 2-cycle", maxRounds,
+      lpaInit(edges).withColumn("prev", col("lab")),
+      Seq(count_if(col("lab") =!= col("prev")), count_if(col("lab") =!= col("prev2")))) { t =>
+      lpaStep(edges, t.select(col("n"), col("lab")))
+        .join(t.select(col("n"), col("lab").as("prev"), col("prev").as("prev2")), "n")
+    } { r => r.getLong(0) == 0L || r.getLong(1) == 0L }
+    // at a fixpoint lab = prev; at a 2-cycle (lab, prev) are the two states
+    fin.select(col("n").as("entity"), least(col("lab"), col("prev")).as("label"))
   }
 
   /** Deterministic random-walk corpus over the co-occurrence graph — the

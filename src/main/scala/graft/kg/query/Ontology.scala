@@ -3,12 +3,14 @@ package graft.kg.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Fixpoint
+
 /** Ontology-backed inference over the emitted KG (SURVEY.md §2 consumption
   * side): a deterministic `is_a` taxonomy over the entity vocabulary, its
   * transitive closure, and RDFS-style triple entailment (`subClassOf` range
   * inference: `(s, p, o) ∧ o is_a* a ⇒ (s, p, a)`). The taxonomy is
   * metadata-sized by nature (it describes the entity VOCABULARY, not the
-  * corpus), so the closure is computed in one tiny job and BROADCAST into
+  * corpus), so the closure is computed in a few tiny jobs and BROADCAST into
   * the corpus-scale entailment join — the corpus-side triple relation is
   * scanned exactly once, never shuffled.
   *
@@ -49,39 +51,34 @@ object Ontology {
 
   /** Transitive closure of an `(child, parent)` edge relation —
     * CONVERGENCE-CHECKED extension joins `r_{i+1} = r_i ∪ (r_i ⋈ edges)`
-    * (distinct), iterated until a round adds no rows. A static unroll
+    * (distinct), iterated until a round adds no pair. A static unroll
     * would silently TRUNCATE a taxonomy deeper than its round count (a
-    * schema change away from wrong entailments); the fixpoint loop costs
-    * one metadata-scale count per round — taxonomies describe the entity
-    * VOCABULARY, so the driver round-trips are catalog-sized, the same
-    * budget class as [[graft.kg.canon.ConnectedComponents]]'s convergence
-    * test. `maxRounds` bounds runaway inputs; CYCLES are rejected
-    * explicitly (a cyclic is_a closure converges but makes nodes their
-    * own ancestors — always a data bug, better thrown than entailed).
+    * schema change away from wrong entailments). The loop is
+    * [[graft.Fixpoint]]: each round pins its closure, tagging the pairs it
+    * started from, and the pin's own job counts the untagged (new) pairs
+    * and the pairs `(v, v)` — one metadata-scale job per round plus its
+    * exchanges, and no round re-executes an earlier one. `maxRounds`
+    * bounds runaway inputs; CYCLES are rejected (`require`) in the round
+    * that closes the first one (a cyclic is_a closure converges but makes
+    * nodes their own ancestors — always a data bug, better thrown than
+    * entailed; a self-pair, once present, stays in every later round).
     *
     * Output: (child, anc), NOT reflexive (a node is not its own ancestor).
     */
   def transitiveClosure(edges: DataFrame, maxRounds: Int = 8): DataFrame = {
     val step = edges.select(col("child").as("anc"), col("parent").as("anc2"))
-    var r = edges.select(col("child"), col("parent").as("anc"))
-    var n = r.count()
-    var round = 0
-    var grew = true
-    while (grew) {
-      round += 1
-      require(round <= maxRounds,
-        s"taxonomy closure did not converge within $maxRounds rounds")
-      val next = r.union(
-        r.join(step, Seq("anc")).select(col("child"), col("anc2").as("anc")))
-        .distinct()
-      val m = next.count()
-      grew = m != n
-      r = next
-      n = m
-    }
-    require(r.where(col("child") === col("anc")).isEmpty,
-      "cyclic is_a taxonomy: a node is its own ancestor")
-    r
+    Fixpoint("taxonomy closure", maxRounds,
+      edges.select(col("child"), col("parent").as("anc")),
+      Seq(count_if(col("old").isNull), count_if(col("child") === col("anc")))) { t =>
+      val r = t.select(col("child"), col("anc"))
+      r.withColumn("old", lit(1))
+        .union(r.join(step, Seq("anc"))
+          .select(col("child"), col("anc2").as("anc"), lit(null).cast("int").as("old")))
+        .groupBy("child", "anc").agg(max(col("old")).as("old"))
+    } { r =>
+      require(r.getLong(1) == 0L, "cyclic is_a taxonomy: a node is its own ancestor")
+      r.getLong(0) == 0L
+    }.select(col("child"), col("anc"))
   }
 
   /** RDFS-style entailment: the input triples PLUS, for every triple whose

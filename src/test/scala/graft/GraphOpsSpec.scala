@@ -310,7 +310,7 @@ class GraphOpsSpec extends SparkTestBase {
     assert(conv === Map("A" -> "A", "B" -> "A", "C" -> "A",
       "X" -> "C", "Y" -> "C", "Z" -> "C"))
     // the runaway bound THROWS rather than returning a mid-oscillation state
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[IllegalStateException] {
       GraphOps.labelPropagationConvergedOnEdges(osc, maxRounds = 0).collect()
     }
     assert(ex.getMessage.contains("no fixpoint or 2-cycle"))

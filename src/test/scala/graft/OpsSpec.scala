@@ -746,24 +746,12 @@ class OpsSpec extends SparkTestBase {
 
   test("one commitIncrement costs at most 36 Spark jobs") {
     import java.nio.file.Files
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graft.Bridge
     import graft.ops.IncrementalDedup
     val part = (r: Int) => corpus.where(pmod(col("doc_id"), lit(3)) === r)
     val dir = Files.createTempDirectory("graft-inc-jobs").toString
     IncrementalDedup.commitState(spark, part(0), dir)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      IncrementalDedup.commitIncrement(spark, dir, part(1), "day-1")
-      Bridge.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val n = jobs.get
+    val n = JobRecord(spark)(
+      IncrementalDedup.commitIncrement(spark, dir, part(1), "day-1"))._2.jobs
     info(s"commitIncrement: $n jobs")
     // the fold's four pins (the shard's per-doc relation with its
     // distinct-text count observed, matched keys, new buckets, new pairs),

@@ -110,25 +110,14 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("fused dedup write runs on more than one task: the layout exchange is not coalesced") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
     val postings = graft.kg.io.SyntheticCorpus.postings(spark, sf)
     // pinned input: the only stage that reads a shuffle is the write stage
     val raw = Pin(graft.kg.Pipeline.allTriplesRaw(postings, graft.kg.Pipeline.defaultGazetteers(spark)))
     val root = java.nio.file.Files.createTempDirectory("graft-write-tasks").toString
-    val postShuffleTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.parentIds.nonEmpty) postShuffleTasks.add(e.stageInfo.numTasks)
-    }
-    org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      graft.kg.emit.TableIO.dedupedPending(spark, raw, root)
-        .write.mode("append").partitionBy("pred", "bucket").parquet(root)
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val tasks = postShuffleTasks.toArray.toSeq
-    assert(tasks.size == 1 && tasks.head.asInstanceOf[Int] > 1,
+    val (_, rec) = JobRecord(spark)(graft.kg.emit.TableIO.dedupedPending(spark, raw, root)
+      .write.mode("append").partitionBy("pred", "bucket").parquet(root))
+    val tasks = rec.stages.filter(_.parentIds.nonEmpty).map(_.numTasks)
+    assert(tasks.size == 1 && tasks.head > 1,
       s"write stage task counts: $tasks (one coalesced task writes every file)")
   }
 
