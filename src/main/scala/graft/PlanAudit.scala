@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Diagnostic: dump `explain("formatted")` for the flagship queries so plan
   * regressions (lost pushdown, a join degenerating to nested-loop, a codegen
   * break in the hot path) are visible as text diffs. Curated excerpts +
-  * commentary live in PLANS.md.
+  * commentary live in PLANS.md. Expression ids (`doc_id#123` prints as
+  * `doc_id#`) and exchange plan ids are stripped: they differ from run to
+  * run, so a diff of two dumps shows only real plan changes.
   *
   * Usage: `sbt "runMain graft.PlanAudit [queryName ...]"` (default: the
   * flagship set below) against SPARK_GRAFT_SF_DIR (default sf0.001).
@@ -22,6 +25,9 @@ object PlanAudit {
     "kg_entity_lpa", "kg_walk_pairs", "curate_redact_pii",
     "kg_html_spans", "kg_reach_sketch", "kg_harmonic_centrality")
 
+  private def stripIds(plan: String): String =
+    plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder()
@@ -34,7 +40,8 @@ object PlanAudit {
     val names = if (args.nonEmpty) args.toSeq else flagship
     names.foreach { name =>
       println(s"\n======== $name ========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      println(stripIds(
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)))
     }
     spark.stop()
   }

@@ -20,6 +20,7 @@ import graft.kg.io.SyntheticCorpus
   *   SPARK_GRAFT_SF_DIR input documents dir (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_REPL   deterministic input replication factor (default 20)
   *   SPARK_GRAFT_RUNS   timed runs, median reported (default 3)
+  *   SPARK_GRAFT_PHASE  kg | dedup | graph (default kg)
   *
   * One timed run = parquet scan → span derivation → full extraction +
   * linking → triple union/dedup → partitioned write with lineage manifests
@@ -131,7 +132,7 @@ object ScalingBench {
     val repl = sys.env.getOrElse("SPARK_GRAFT_REPL", "20").toInt
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val phase = sys.env.getOrElse("SPARK_GRAFT_PHASE", "kg")
-    val waves = sys.env.getOrElse("SPARK_GRAFT_WAVES", "4").toInt
+    val scanHeavy = phase == "dedup" || phase == "graph"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-scaling-bench")
@@ -139,7 +140,7 @@ object ScalingBench {
       // (one partition per core) leave cores idle behind stragglers; waves
       // per core is identical at both parallelism levels so the comparison
       // stays fair
-      .config("spark.sql.shuffle.partitions", cpus * waves)
+      .config("spark.sql.shuffle.partitions", cpus * 4)
       // the dedup stress corpus is only ~50 MB in 64 files: at the default
       // 128m split size + 4m file-open cost the whole scan bins into ~3
       // splits, so the scan-side map stages (shingle explode, md5
@@ -149,40 +150,16 @@ object ScalingBench {
       // 4m makes every file its own split (64 splits = full waves at both
       // levels, identical files read either way). The KG phase's postings
       // table is ~40× larger and correctly split at the default — keep it.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART",
-          if (phase == "dedup" || phase == "graph") "4m" else "128m"))
+      .config("spark.sql.files.maxPartitionBytes", if (scanHeavy) "4m" else "128m")
       .config("spark.sql.adaptive.enabled", "true")
       // dedup: 16m measured ~5% better than 64m at local[8] — the coalesced
       // shingle/verify stages land at ~10 partitions under 64m, i.e. 1.2
       // ragged waves on 8 cores; 16m keeps 4 even waves at both levels
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY",
-          if (phase == "dedup" || phase == "graph") "16m" else "64m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", if (scanHeavy) "16m" else "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_STAGELOG=1: per-stage wall + task-time sums on stderr —
-    // the decomposition tool behind the efficiency analyses in BENCH.md
-    // (which stages lose N->4N efficiency: ragged waves show wall >>
-    // taskSum/cpus; memory-subsystem inflation shows taskSum itself growing
-    // with cpus; pure scheduler idle shows neither)
-    if (sys.env.get("SPARK_GRAFT_STAGELOG").contains("1"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (for {t1 <- si.completionTime; t0 <- si.submissionTime}
-            yield (t1 - t0) / 1000.0).getOrElse(-1.0)
-          System.err.println(f"[stage] id=${si.stageId} tasks=${si.numTasks} " +
-            f"wall=$wall%.1f taskSum=${si.taskMetrics.executorRunTime / 1000.0}%.1f " +
-            f"gcSum=${si.taskMetrics.jvmGCTime / 1000.0}%.1f " +
-            f"cpuSum=${si.taskMetrics.executorCpuTime / 1e9}%.1f " +
-            f"spillMB=${si.taskMetrics.memoryBytesSpilled / 1048576} " +
-            f"name=${si.name.takeWhile(_ != '(').take(50)}")
-        }
-      })
 
     if (phase == "graph") {
       // graph-scaling phase: 3-iteration integer PageRank over the scaled
@@ -220,11 +197,6 @@ object ScalingBench {
       // every iteration: measured at repl=800 it scales at 0.47 N->4N while
       // the bucketed path's iterations scale cleanly — the bench runs the
       // shape we tell users to run at scale.)
-      // SPARK_GRAFT_GRAPH_PATH=pinned times the in-session pinnedEdges
-      // entry instead (derive = eager checkpoint of the edge relation,
-      // iterations re-exchange edges per round) — the exploration-scale
-      // contrast to the bucketed-table production default
-      val graphPath = sys.env.getOrElse("SPARK_GRAFT_GRAPH_PATH", "bucketed")
       def oneRun(dir: String, tag: String): (Long, Long, Double, Double, Double) = {
         def encoded = spark.read.parquet(dir).select(
           xxhash64(col("subj")).as("subj"), col("pred"),
@@ -237,20 +209,14 @@ object ScalingBench {
         // carry ~4× less row weight through the pair-distinct and hash
         // with no string traversal.
         val tbl = s"graft_scaling_edges_$tag"
-        val pinnedPath = graphPath == "pinned"
-        val out = if (pinnedPath) "" else Files.createTempDirectory("graft-edges").toString
+        val out = Files.createTempDirectory("graft-edges").toString
         val t0 = System.nanoTime()
-        val edges =
-          if (pinnedPath)
-            graft.kg.graph.GraphOps.pinnedEdges(encoded) // eager: derive ends here
-          else {
-            spark.sql(s"DROP TABLE IF EXISTS $tbl")
-            graft.kg.graph.GraphOps.coocEdges(encoded)
-              .repartition(64, col("x"))
-              .write.bucketBy(64, "x").sortBy("x")
-              .option("path", s"$out/edges").format("parquet").saveAsTable(tbl)
-            spark.table(tbl)
-          }
+        spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        graft.kg.graph.GraphOps.coocEdges(encoded)
+          .repartition(64, col("x"))
+          .write.bucketBy(64, "x").sortBy("x")
+          .option("path", s"$out/edges").format("parquet").saveAsTable(tbl)
+        val edges = spark.table(tbl)
         val t1 = System.nanoTime()
         val ranks = graft.kg.graph.GraphOps.pagerankOnEdges(edges, iters = 3)
         // sum of final ranks forces every iteration; also a cross-run
@@ -259,13 +225,10 @@ object ScalingBench {
         val t2 = System.nanoTime()
         val (wall, derive, iterate) =
           ((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9)
-        System.err.println(f"[scaling-graph] path=$graphPath " +
-          f"nodes=${row.getLong(0)} rankMass=${row.getLong(1)} " +
+        System.err.println(f"[scaling-graph] nodes=${row.getLong(0)} rankMass=${row.getLong(1)} " +
           f"derive=$derive%.1f s iterate=$iterate%.1f s wall=$wall%.1f s")
-        if (!pinnedPath) {
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          TableIO.deleteTree(out)
-        }
+        spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        TableIO.deleteTree(out)
         spark.catalog.clearCache()
         (row.getLong(0), row.getLong(1), wall, derive, iterate)
       }
@@ -276,7 +239,7 @@ object ScalingBench {
       val median = walls(walls.length / 2)
       println(
         s"""{"metric":"graph_nodes_per_sec","value":${runs.head._1 / median},""" +
-        s""""unit":"nodes/sec","cpus":$cpus,"path":"$graphPath","nodes":${runs.head._1},""" +
+        s""""unit":"nodes/sec","cpus":$cpus,"path":"bucketed","nodes":${runs.head._1},""" +
         s""""rank_mass":${runs.head._2},"wall_sec_median":$median,""" +
         s""""derive_sec_median":${med(runs.map(_._4))},""" +
         s""""iterate_sec_median":${med(runs.map(_._5))},""" +

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.kg.canon.ConnectedComponents
@@ -11,7 +10,8 @@ import graft.kg.link.{Linking, Salting}
 import graft.kg.schema.Schemas.Pred
 
 /** End-to-end wiring of the KG-construction pipeline (SURVEY.md §3.2).
-  * Every stage returns (subj, pred, obj, score, src_offset) triples;
+  * Each extraction rule has one branch over `Extractors.candidates`, and
+  * every branch returns (doc_id, pred, obj, score, src_offset) triples;
   * [[allTriples]] unions them and deduplicates deterministically.
   */
 object Pipeline {
@@ -30,7 +30,7 @@ object Pipeline {
       languages: DataFrame,
       locations: DataFrame,
       companies: DataFrame) {
-    /** (kind, mention gazetteer, predicate) for the fused R4/R6/R9 join. */
+    /** (kind, mention gazetteer, predicate): the dims of the R4/R6/R9 `mentions` join. */
     def mentionDims: Seq[(String, DataFrame, String)] = Seq(
       ("li", skills, Pred.requiresSkill),
       ("p", languages, Pred.requiresLanguage),
@@ -65,11 +65,73 @@ object Pipeline {
       .select(col("doc_id"), lit(Pred.hasTitle).as("pred"), col("best.entity_id").as("obj"),
         col("best.score").as("score"), col("best.offset").cast("int").as("src_offset"))
 
-  /** R3+R10+R11: title candidates from h1 spans, exact + Jaro-Winkler fuzzy
-    * linking, one best title per doc.
+  // ---- the four branches over Extractors.candidates' (doc_id, ctype,
+  // payload, kind, offset) relation: allTriplesRaw runs them over its pinned
+  // candidates, each per-predicate entry over the candidates of its own
+  // spans. Output: (doc_id, pred, obj, score, src_offset).
+
+  /** R3+R10+R11: the title candidates, exact + Jaro-Winkler fuzzy linked,
+    * one best title per doc.
     */
+  private def titles(cands: DataFrame, titlesGaz: DataFrame): DataFrame =
+    bestTitle(Linking.linkCandidates(
+      cands.where(col("ctype") === "title")
+        .select(col("doc_id"), col("payload").as("candidate"), col("offset")),
+      titlesGaz))
+
+  /** R5: every workload literal is a triple. */
+  private def workloads(cands: DataFrame): DataFrame =
+    cands.where(col("ctype") === "workload")
+      .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), col("payload").as("obj"),
+        lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
+
+  /** R4/R6/R9: every gram that [[Extractors.mentionJoin]] matches in its
+    * kind's gazetteer of `dims` (span kind, gazetteer, predicate).
+    */
+  private def mentions(cands: DataFrame, dims: Seq[(String, DataFrame, String)]): DataFrame =
+    Extractors.mentionJoin(cands, dims)
+      .select(col("doc_id"), col("pred"), col("entity_id").as("obj"),
+        lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
+
+  /** R8: the candidate seen most often in a doc (ties: the smaller surface),
+    * linked exact (broadcast) to the company table; score = its frequency.
+    * The argmax is one hash-agg via min_by on (-freq, candidate), not a
+    * ranking window (R11 top-1 needs no full ranking).
+    */
+  private def companies(cands: DataFrame, companiesGaz: DataFrame): DataFrame =
+    cands.where(col("ctype") === "company")
+      .groupBy(col("doc_id"), col("payload").as("candidate"))
+      .agg(count(lit(1)).as("freq"), min(col("offset")).as("src_offset"))
+      .groupBy(col("doc_id"))
+      .agg(min_by(struct(col("candidate"), col("freq"), col("src_offset")),
+        struct((-col("freq")).as("nf"), col("candidate"))).as("best"))
+      .select(col("doc_id"), col("best.candidate").as("candidate"),
+        col("best.freq").as("freq"), col("best.src_offset").as("src_offset"))
+      .join(broadcast(companiesGaz), col("candidate") === col("surface"))
+      .select(col("doc_id"), lit(Pred.postedBy).as("pred"), col("entity_id").as("obj"),
+        col("freq").cast("double").as("score"), col("src_offset").cast("int").as("src_offset"))
+
+  /** The candidates of `kind`'s spans only (an entry's branch reads no other
+    * kind), with 1- and 2-token grams for the `mentionKinds`.
+    */
+  private def kindCandidates(spans: DataFrame, kind: String,
+      mentionKinds: Seq[String] = Nil): DataFrame =
+    Extractors.candidates(spans.where(col("kind") === kind), mentionKinds, mentionKinds)
+
+  /** One mention predicate on its own: the [[mentions]] of `kind`'s spans in
+    * `gaz`, one row per (doc, entity) at its first offset. Only upper-first
+    * grams are candidates, so `gaz` must keep GazetteerIO.validated's
+    * contract (which [[allTriplesRaw]]'s prep pass checks): a surface
+    * outside it matches nothing.
+    */
+  private def kindMentions(spans: DataFrame, kind: String, gaz: DataFrame,
+      pred: String): DataFrame =
+    dedupOn("doc_id",
+      mentions(kindCandidates(spans, kind, Seq(kind)), Seq((kind, gaz, pred))))
+
+  /** R3+R10+R11: the [[titles]] branch over the h1 spans. */
   def titleTriples(spans: DataFrame, titlesGaz: DataFrame): DataFrame =
-    bestTitle(Linking.linkCandidates(Extractors.titleCandidates(spans), titlesGaz))
+    titles(kindCandidates(spans, "h1"), titlesGaz)
 
   /** [[titleTriples]] through the R10 Levenshtein scoring path (built-in
     * `levenshtein`, normalized): same extraction, same argmax — on the
@@ -93,19 +155,8 @@ object Pipeline {
     bestTitle(linked)
   }
 
-  /** Gazetteer mention triples (R4/R6/R7/R9 share this shape). */
-  private def mentionTriples(
-      mentions: DataFrame, pred: String): DataFrame =
-    mentions
-      .groupBy(col("doc_id"), col("entity_id"))
-      .agg(min(col("offset")).as("src_offset"))
-      .select(col("doc_id"), lit(pred).as("pred"), col("entity_id").as("obj"),
-        lit(1.0).as("score"), col("src_offset").cast("int").as("src_offset"))
-
   def skillTriples(spans: DataFrame, skillsGaz: DataFrame): DataFrame =
-    mentionTriples(
-      Extractors.ngramMentions(spans.where(col("kind") === "li"), skillsGaz),
-      Pred.requiresSkill)
+    kindMentions(spans, "li", skillsGaz, Pred.requiresSkill)
 
   /** Measured salt factors memoized per (canonicalized-plan digest, key,
     * partitions): the prep-pass aggregation runs ONCE per distinct fact
@@ -146,15 +197,13 @@ object Pipeline {
     }
     val joined = Salting.saltedJoin(
       gramRows, skillsGaz.hint("shuffle_hash"), "gram", "surface", "doc_id", s)
-    mentionTriples(
-      joined.select(col("doc_id"), col("surface"), col("entity_id"), col("offset")),
-      Pred.requiresSkill)
+    dedupOn("doc_id",
+      joined.select(col("doc_id"), lit(Pred.requiresSkill).as("pred"), col("entity_id").as("obj"),
+        lit(1.0).as("score"), col("offset").cast("int").as("src_offset")))
   }
 
   def languageTriples(spans: DataFrame, languagesGaz: DataFrame): DataFrame =
-    mentionTriples(
-      Extractors.ngramMentions(spans.where(col("kind") === "p"), languagesGaz),
-      Pred.requiresLanguage)
+    kindMentions(spans, "p", languagesGaz, Pred.requiresLanguage)
 
   /** R6 depth — (doc, languageProficiency, "LANGxx=qualifier") triples. */
   def languageProficiencyTriples(spans: DataFrame, languagesGaz: DataFrame): DataFrame =
@@ -166,26 +215,21 @@ object Pipeline {
         lit(1.0).as("score"), col("src_offset").cast("int").as("src_offset"))
 
   def locationTriples(spans: DataFrame, locationsGaz: DataFrame): DataFrame =
-    mentionTriples(
-      Extractors.ngramMentions(spans.where(col("kind") === "footer"), locationsGaz),
-      Pred.locatedIn)
+    kindMentions(spans, "footer", locationsGaz, Pred.locatedIn)
 
+  /** R5: the [[workloads]] branch. A workload span may be of any kind, but
+    * every workload form holds a '%', so only those spans reach the
+    * candidate explode (and its title and company regexes).
+    */
   def workloadTriples(spans: DataFrame): DataFrame =
-    Extractors.workload(spans)
-      .select(col("doc_id"), col("pred"), col("obj"), col("score"), col("src_offset"))
+    workloads(Extractors.candidates(spans.where(col("text").contains("%")), Nil, Nil))
 
+  /** R8: the [[companies]] branch over the footer spans. */
   def companyTriples(spans: DataFrame, companiesGaz: DataFrame): DataFrame =
-    Extractors.company(spans, companiesGaz)
+    companies(kindCandidates(spans, "footer"), companiesGaz)
 
-  /** R12 — union of all predicate stages, deterministic dedup.
-    *
-    * Single-pass design: ONE scan+explode of the corpus emits every
-    * candidate row (title candidates, workload literals, company candidates,
-    * uppercase-filtered grams) as a small typed relation, which is persisted
-    * (it is ~10 rows/doc of short strings — orders of magnitude smaller than
-    * the span corpus) and then routed to the per-predicate
-    * joins/aggregations. The corpus is read exactly once however many
-    * predicates are extracted — the only shape that holds at 10^12 docs.
+  /** R12 — the union of all predicate branches ([[allTriplesRaw]]),
+    * deduplicated deterministically ([[dedupTriples]]).
     */
   def allTriples(postings: DataFrame, gaz: Gazetteers): DataFrame =
     dedupTriples(allTriplesRaw(postings, gaz))
@@ -194,13 +238,21 @@ object Pipeline {
     * branches emit DISJOINT predicates, so this only merges repeated mentions
     * of one entity within a doc (max score, min evidence offset).
     */
-  def dedupTriples(raw: DataFrame): DataFrame =
+  def dedupTriples(raw: DataFrame): DataFrame = dedupOn("subj", raw)
+
+  private def dedupOn(subj: String, raw: DataFrame): DataFrame =
     raw
-      .groupBy(col("subj"), col("pred"), col("obj"))
+      .groupBy(col(subj), col("pred"), col("obj"))
       .agg(max(col("score")).as("score"), min(col("src_offset")).cast("int").as("src_offset"))
 
-  /** Pre-dedup union of all predicate branches (single corpus scan; see
-    * [[allTriples]]). The hot write path feeds this STRAIGHT into
+  /** Pre-dedup union of all predicate branches, single pass: ONE scan and
+    * explode of the corpus emits every candidate row (title candidates,
+    * workload literals, company candidates, upper-first grams) as a small
+    * typed relation, which is pinned (it is ~10 rows/doc of short strings —
+    * orders of magnitude smaller than the span corpus) and then routed to
+    * the four branches. The corpus is read exactly once however many
+    * predicates are extracted — the only shape that holds at 10^12 docs.
+    * The hot write path feeds this STRAIGHT into
     * `TableIO.writeTriplesDeduped`, which fuses the dedup aggregation with
     * the (pred, bucket) layout shuffle — one exchange instead of two.
     */
@@ -218,70 +270,10 @@ object Pipeline {
     // LogicalRDD (small closures for every consumer and every follow-up
     // action) and costs one eager job over the same ~10-short-rows/doc
     // relation the cache held anyway.
-
-    val workload = cands.where(col("ctype") === "workload")
-      .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), col("payload").as("obj"),
-        lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
-
-    val fusedDim = gaz.mentionDims.map { case (kind, g, pred) =>
-      g.select(lit(kind).as("gkind"), col("surface"), col("entity_id"), lit(pred).as("pred"))
-    }.reduce(_ unionByName _)
-    val mentions = cands.where(col("ctype") === "gram")
-      .join(broadcast(fusedDim),
-        col("payload") === col("surface") && col("kind") === col("gkind"))
-      .select(col("doc_id"), col("pred"), col("entity_id").as("obj"),
-        lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
-
-    val titles = bestTitle(Linking.linkCandidates(
-      cands.where(col("ctype") === "title")
-        .select(col("doc_id"), col("payload").as("candidate"), col("offset")),
-      gaz.titles))
-
-    val companies = {
-      val cc = cands.where(col("ctype") === "company")
-        .groupBy(col("doc_id"), col("payload").as("candidate"))
-        .agg(count(lit(1)).as("freq"), min(col("offset")).as("src_offset"))
-      cc.groupBy(col("doc_id"))
-        .agg(min_by(struct(col("candidate"), col("freq"), col("src_offset")),
-          struct((-col("freq")).as("nf"), col("candidate"))).as("best"))
-        .select(col("doc_id"), col("best.candidate").as("candidate"),
-          col("best.freq").as("freq"), col("best.src_offset").as("src_offset"))
-        .join(broadcast(gaz.companies), col("candidate") === col("surface"))
-        .select(col("doc_id"), lit(Pred.postedBy).as("pred"), col("entity_id").as("obj"),
-          col("freq").cast("double").as("score"), col("src_offset").cast("int").as("src_offset"))
-    }
-
-    Seq(workload, mentions, titles, companies).reduce(_.unionByName(_))
+    Seq(workloads(cands), mentions(cands, gaz.mentionDims), titles(cands, gaz.titles),
+      companies(cands, gaz.companies)).reduce(_.unionByName(_))
       .select(col("doc_id").as("subj"), col("pred"), col("obj"), col("score"),
         col("src_offset").cast("int").as("src_offset"))
-  }
-
-  /** Pre-single-pass reference wiring (kept for A/B comparison in tests:
-    * must produce identical triples to [[allTriples]]).
-    */
-  def allTriplesMultiPass(postings: DataFrame, gaz: Gazetteers): DataFrame = {
-    // spans are a cheap posexplode of the postings scan (derivation is
-    // corpus prep) — re-reading the parquet per branch is cheaper and scales
-    // better than caching 10s of millions of deserialized rows, and the
-    // branches prune to disjoint span kinds at the scan
-    val spans = Extractors.textSpans(postings)
-    // skills/languages/locations share one gram pass + one broadcast join
-    // (fusedMentions); results are identical to the per-predicate paths the
-    // individual harness queries run (same oracles check both). Mention rows
-    // flow straight into the final (subj, pred, obj) agg — no intermediate
-    // per-predicate shuffle.
-    val fused = Extractors.fusedMentions(spans, gaz.mentionDims, gaz.prep.mentionTwoGramKinds)
-      .select(col("doc_id"), col("pred"), col("entity_id").as("obj"),
-        lit(1.0).as("score"), col("offset").cast("int").as("src_offset"))
-    val parts = Seq(
-      titleTriples(spans, gaz.titles),
-      fused,
-      workloadTriples(spans),
-      companyTriples(spans, gaz.companies))
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("doc_id"), col("pred"), col("obj"))
-      .agg(max(col("score")).as("score"), min(col("src_offset")).cast("int").as("src_offset"))
-      .select(col("doc_id").as("subj"), col("pred"), col("obj"), col("score"), col("src_offset"))
   }
 
   /** R13 — canonicalization: cluster gazetteer surfaces with the fuzzy-linked

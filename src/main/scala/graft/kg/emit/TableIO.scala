@@ -117,15 +117,6 @@ object TableIO {
     Files.deleteIfExists(p)
   }
 
-  /** Write (or resume-write) the triples table. Returns per-partition metrics
-    * of THIS run's newly committed partitions.
-    */
-  def writeTriples(spark: SparkSession, triples: DataFrame, root: String,
-      buckets: Int = BucketsDefault, inputLineage: String = ""): Seq[PartitionManifest] = {
-    val pending = layout(resumeFilter(spark, triples, root, buckets))
-    commitPending(spark, pending, root)(inputLineage)
-  }
-
   /** The write layout: hash-distribute by (pred, bucket), so each partition
     * dir gets exactly one output file (this keeps the file count bounded at
     * high bucket counts; at cluster scale raise buckets, not files/bucket).
@@ -139,16 +130,20 @@ object TableIO {
     df.repartition(np, col("pred"), col("bucket"))
   }
 
-  /** Fused dedup + layout for PRE-AGGREGATION triple rows (the hot write
-    * path): because `bucket` is a pure function of `subj`, hash-distributing
-    * by (pred, bucket) already co-locates every (subj, pred, obj) group, so
-    * the dedup aggregation after the [[layout]] exchange needs NO second
-    * exchange (HashPartitioning(pred, bucket) satisfies the agg's clustered
-    * distribution as a key subset) and its output partitioning feeds
-    * `partitionBy(pred, bucket)` directly — ONE shuffle of the triple
-    * relation where aggregate-then-[[writeTriples]] pays two. PlanShapeSpec
-    * asserts the single-exchange plan; ResumeSpec asserts result equality
-    * with the two-step path.
+  /** Write (or resume-write) the triples table from PRE-AGGREGATION triple
+    * rows, deduplicated on (subj, pred, obj) as `Pipeline.dedupTriples` does
+    * (on rows that are already unique the aggregation is the identity).
+    * Returns per-partition metrics of THIS run's newly committed partitions.
+    * Fused dedup + layout: because `bucket` is a pure function of `subj`,
+    * hash-distributing by (pred, bucket) already co-locates every (subj,
+    * pred, obj) group, so the dedup aggregation after the [[layout]]
+    * exchange needs NO second exchange (HashPartitioning(pred, bucket)
+    * satisfies the agg's clustered distribution as a key subset) and its
+    * output partitioning feeds `partitionBy(pred, bucket)` directly — ONE
+    * shuffle of the triple relation where aggregating first and then
+    * writing pays two.
+    * PlanShapeSpec asserts the single-exchange plan; ResumeSpec asserts the
+    * table of raw rows equals the table of `Pipeline.allTriples`.
     */
   def writeTriplesDeduped(spark: SparkSession, rawTriples: DataFrame, root: String,
       buckets: Int = BucketsDefault, inputLineage: String = ""): Seq[PartitionManifest] =

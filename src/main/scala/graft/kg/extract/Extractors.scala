@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.kg.expr.TokenGrams
 import graft.kg.io.GazetteerIO
-import graft.kg.schema.Schemas.Pred
 
-/** Span-level extraction stages (SURVEY.md §2.1 R2–R9). All pure
+/** Span-level extraction stages (SURVEY.md §2.1 R2–R9). [[candidates]] is
+  * the one spelling of the title (R3), gram (R4/R6/R9), workload (R5) and
+  * company (R8) span rules and [[mentionJoin]] the one gazetteer join;
+  * `graft.kg.Pipeline`'s branches consume them, for the single-pass
+  * `allTriplesRaw` and for every per-predicate entry alike. All pure
   * org.apache.spark.sql.functions built-ins — codegen'd, no UDFs — except
   * where a custom Catalyst expression is explicitly the point (Jaro-Winkler,
   * Aho-Corasick, and the R4 gram kernel [[TokenGrams]]; see graft.kg.expr).
@@ -44,40 +47,9 @@ object Extractors {
   private val SingleRe = "(\\d{1,3})\\s*%"
   private val KeywordRe = "Pensum|Teilzeit|Vollzeit|Arbeitspensum|Workload"
 
-  /** R5: (doc_id, pred=hasWorkload, obj="lo-hi", score, src_offset). */
-  def workload(spans: DataFrame): DataFrame = {
-    val lo = regexp_extract(col("text"), RangeRe, 1)
-    val hi = regexp_extract(col("text"), RangeRe, 2)
-    val single = regexp_extract(col("text"), SingleRe, 1)
-    val obj = when(lo =!= "",
-      format_string("%d-%d",
-        least(lo.cast("int"), hi.cast("int")), greatest(lo.cast("int"), hi.cast("int"))))
-      .when(single =!= "", format_string("%d-%d", single.cast("int"), single.cast("int")))
-      .otherwise(lit(null))
-    spans
-      // cheap contains() pre-filter before the regex: every workload form
-      // has a '%', and substring scan is far cheaper than regex over the
-      // full corpus
-      .where(col("text").contains("%") && col("text").rlike(KeywordRe))
-      .select(col("doc_id"), lit(Pred.hasWorkload).as("pred"), obj.as("obj"),
-        lit(1.0).as("score"), col("offset").as("src_offset"))
-      .where(col("obj").isNotNull)
-  }
-
-  /** R4 — gazetteer mention detection, n-gram broadcast-join plan: tokenize
-    * each span on single spaces, generate 1..maxN-token grams, broadcast
-    * hash-equi-join gram == gazetteer surface (case-sensitive). The
-    * interchangeable trie plan is [[graft.kg.expr.AhoCorasickMatches]].
-    * Output: (doc_id, surface, entity_id, canonical, offset).
-    */
-  def ngramMentions(spans: DataFrame, gaz: DataFrame, maxN: Int = 2): DataFrame =
-    gramRows(spans, maxN)
-      .join(broadcast(gaz), col("gram") === col("surface"))
-      .select(col("doc_id"), col("surface"), col("entity_id"), col("canonical"), col("offset"))
-
   /** (doc_id, offset, gram): every 1..maxN-token gram of each span's text,
-    * unfiltered — the gram side of [[ngramMentions]] and of the salted skill
-    * join ([[graft.kg.Pipeline.skillTriplesSalted]]).
+    * unfiltered — the gram side of the salted skill join
+    * ([[graft.kg.Pipeline.skillTriplesSalted]]).
     */
   private[graft] def gramRows(spans: DataFrame, maxN: Int): DataFrame =
     spans.select(col("doc_id"), col("offset"),
@@ -85,8 +57,7 @@ object Extractors {
 
   /** The grams of the span's `text` split on single spaces, through the one
     * codegen'd gram kernel ([[TokenGrams]]) every R4 path shares. `maxN` is
-    * per row: the mention paths emit 2-grams only for kinds whose gazetteer
-    * has multi-token surfaces.
+    * per row: [[candidates]] emits 2-grams only for its `twoGramKinds`.
     */
   private def spanGrams(maxN: Column, upperFirst: Boolean, tag: Option[String] = None): Column =
     TokenGrams.tokenGrams(split(col("text"), " "), maxN, upperFirst, tag)
@@ -95,20 +66,25 @@ object Extractors {
   private def gramWidth(twoGramKinds: Seq[String]): Column =
     when(col("kind").isin(twoGramKinds.map(x => x: Any): _*), 2).otherwise(1)
 
-  /** Single-pass candidate generation (the scan-once hot path of
-    * Pipeline.allTriples): one projection over the exploded spans emits every
-    * extraction candidate as (doc_id, ctype, payload, kind, offset):
+  /** Candidate generation, the one spelling of the R3/R4/R5/R8 span rules:
+    * one projection over the exploded spans emits every extraction candidate
+    * as (doc_id, ctype, payload, kind, offset), which the branches of
+    * [[graft.kg.Pipeline]] link, join and aggregate:
     *   - ctype='title'    payload = gender-suffix-stripped h1 text (R3)
     *   - ctype='workload' payload = normalized "lo-hi" literal (R5)
     *   - ctype='company'  payload = legal-suffix footer candidate (R8)
-    *   - ctype='gram'     payload = uppercase-first 1/2-gram for the fused
-    *                      gazetteer join (R4/R6/R9); kind routes the join
-    * Cheap pre-filters keep the emitted relation ~10 rows/doc.
+    *   - ctype='gram'     payload = uppercase-first 1/2-gram for the
+    *                      [[mentionJoin]] (R4/R6/R9); kind routes the join
+    * Cheap pre-filters keep the emitted relation ~10 rows/doc. Every
+    * gazetteer surface starts with [A-Z0-9] (the prep-pass contract of
+    * GazetteerIO.validated) while body filler is lowercase, so only
+    * upper-first grams are emitted: ~95% fewer gram rows, same mentions.
     * `twoGramKinds`: span kinds whose gazetteer contains multi-token surfaces
-    * (a prep-pass fact — Pipeline derives it from the gazetteers via
-    * GazetteerIO.hasMultiTokenSurface; hardcoding it would silently miss
-    * mentions if a multi-token surface were added to another kind's
-    * gazetteer). `mentionKinds`: the span kinds that have ANY mention
+    * (a prep-pass fact — Pipeline.allTriplesRaw derives it from the
+    * gazetteers via GazetteerIO.hasMultiTokenSurface; hardcoding it would
+    * silently miss mentions if a multi-token surface were added to another
+    * kind's gazetteer; callers without a prep pass name every mention kind,
+    * which costs only unmatched 2-grams). `mentionKinds`: the span kinds that have ANY mention
     * gazetteer (also derived from the dims — a hardcoded list would silently
     * emit zero mentions for a newly added dimension's kind).
     */
@@ -118,8 +94,7 @@ object Extractors {
     def cand(ctype: String, payload: Column): Column =
       struct(lit(ctype).as("ctype"), payload.as("payload"))
 
-    val title = when(col("kind") === "h1",
-      array(cand("title", trim(regexp_replace(col("text"), GenderSuffixRe, "")))))
+    val title = when(col("kind") === "h1", array(cand("title", titleSurface)))
       .otherwise(emptyCands)
 
     val lo = regexp_extract(col("text"), RangeRe, 1)
@@ -152,69 +127,31 @@ object Extractors {
         col("kind"), col("offset"))
   }
 
+  /** The span text with the reference's gender-form suffixes stripped
+    * ("(m/w)", "(m/w/d)", "/-in" — SURVEY.md §2.1 R3): the title surface
+    * every title path links.
+    */
   private val GenderSuffixRe = "\\s*\\((?:m/w(?:/d)?|w/m)\\)|\\s*/-in\\b"
+  private val titleSurface: Column = trim(regexp_replace(col("text"), GenderSuffixRe, ""))
 
   private def emptyCands: Column =
     expr("cast(array() as array<struct<ctype:string,payload:string>>)")
 
-  /** Fused mention detection for several gazetteers in ONE pass: the
-    * per-kind gazetteers (skills→li, languages→p, locations→footer) are
-    * unioned into a single broadcast dimension keyed by (kind, surface), so
-    * the expensive gram generation over the span corpus runs once instead of
-    * once per predicate — at 10^12 spans the gram explode dominates, so this
-    * is a ~3x cut of the hot path. 2-grams are generated only for kinds whose
-    * gazetteer contains multi-token surfaces (`multiTokenKinds` — a prep-pass
-    * fact from GazetteerIO.hasMultiTokenSurface; validation that every
-    * surface starts with [A-Z0-9], the contract behind the uppercase-first
-    * token pre-filter below, also lives in the prep pass:
-    * GazetteerIO.validated — never inside plan construction, where it would
-    * fire a driver-blocking action on every build).
-    * `gazByKind`: (kind, gazetteer, pred). Output: (doc_id, pred, entity_id, offset).
+  /** R4 — gazetteer mentions: the `gram` [[candidates]] joined to the union
+    * of the per-kind gazetteers, ONE broadcast dimension keyed by (kind,
+    * surface), so each span kind meets only its own gazetteer and the gram
+    * explode runs once however many gazetteers there are. The
+    * interchangeable trie plan is [[graft.kg.expr.AhoCorasickMatches]].
+    * `dims`: (span kind, gazetteer, predicate). Output: the candidate
+    * columns plus (gkind, surface, entity_id, pred).
     */
-  def fusedMentions(spans: DataFrame, gazByKind: Seq[(String, DataFrame, String)],
-      multiTokenKinds: Seq[String]): DataFrame = {
-    val dim = gazByKind.map { case (kind, gaz, pred) =>
-      gaz.select(lit(kind).as("gkind"), col("surface"), col("entity_id"),
-        lit(pred).as("pred"))
+  private[graft] def mentionJoin(cands: DataFrame,
+      dims: Seq[(String, DataFrame, String)]): DataFrame = {
+    val dim = dims.map { case (kind, g, pred) =>
+      g.select(lit(kind).as("gkind"), col("surface"), col("entity_id"), lit(pred).as("pred"))
     }.reduce(_ unionByName _)
-    // Every gazetteer surface starts with an uppercase letter or a digit
-    // (prep-pass contract, GazetteerIO.validated), while body filler is
-    // lowercase — filtering tokens by first char before the gram explode
-    // drops ~95% of gram rows (and the memory traffic that dominates this
-    // stage) without changing results.
-    spans
-      .where(col("kind").isin(gazByKind.map(_._1: Any): _*))
-      .select(col("doc_id"), col("kind"), col("offset"),
-        explode(spanGrams(gramWidth(multiTokenKinds), upperFirst = true)).as("gram"))
-      .join(broadcast(dim),
-        col("gram") === col("surface") && col("kind") === col("gkind"))
-      .select(col("doc_id"), col("pred"), col("entity_id"), col("offset"))
-  }
-
-  /** R8 — organisation extraction: footer spans ending in a legal-form suffix
-    * (AG/GmbH/SA) are candidates; candidates are frequency-scored per doc and
-    * the winner linked (exact, broadcast) to the canonical company table.
-    * Output: (doc_id, pred=postedBy, obj=entity_id, score, src_offset).
-    */
-  def company(spans: DataFrame, companies: DataFrame): DataFrame = {
-    val cands = spans
-      .where(col("kind") === "footer" && col("text").rlike("\\b(AG|GmbH|SA)$"))
-      .select(col("doc_id"), trim(col("text")).as("candidate"), col("offset"))
-    val scored = cands
-      .groupBy(col("doc_id"), col("candidate"))
-      .agg(count(lit(1)).as("freq"), min(col("offset")).as("src_offset"))
-    // argmax by (freq desc, candidate asc) as a single hash-agg via min_by on
-    // (-freq, candidate) — avoids a second shuffle + sort that a ranking
-    // window would cost (R11 top-1 doesn't need full ranking)
-    scored
-      .groupBy(col("doc_id"))
-      .agg(min_by(struct(col("candidate"), col("freq"), col("src_offset")),
-        struct((-col("freq")).as("nf"), col("candidate"))).as("best"))
-      .select(col("doc_id"), col("best.candidate").as("candidate"),
-        col("best.freq").as("freq"), col("best.src_offset").as("src_offset"))
-      .join(broadcast(companies), col("candidate") === col("surface"))
-      .select(col("doc_id"), lit(Pred.postedBy).as("pred"), col("entity_id").as("obj"),
-        col("freq").cast("double").as("score"), col("src_offset").cast("int").as("src_offset"))
+    cands.where(col("ctype") === "gram")
+      .join(broadcast(dim), col("payload") === col("surface") && col("kind") === col("gkind"))
   }
 
   /** R7 — heading-proximity mention detection: restrict gazetteer mentions to
@@ -222,7 +159,9 @@ object Extractors {
     * reference: list items near "Anforderungen"/"Kenntnisse" headings). The
     * join is equi on doc_id with a range residual |offset - anchor| <= k —
     * the range-join shape of SURVEY.md §2.2 — with the anchor side reduced
-    * (one row per doc via min) and broadcast when small.
+    * (one row per doc via min) and broadcast when small. The near spans then
+    * run the [[mentionJoin]] over their own [[candidates]] (2-grams for
+    * every mention kind). Output: (doc_id, surface, entity_id, offset).
     */
   def proximityMentions(
       spans: DataFrame,
@@ -239,19 +178,20 @@ object Extractors {
           abs(col("offset") - col("a_off")) <= k)
       .select(col("doc_id"), col("kind"), col("text"), col("offset"))
       .distinct()
-    ngramMentions(near, gaz)
+    // the predicate slot of the dimension is not read: these rows are
+    // mentions, not triples
+    mentionJoin(candidates(near, mentionKinds, mentionKinds), mentionKinds.map((_, gaz, "")))
+      .select(col("doc_id"), col("surface"), col("entity_id"), col("offset"))
   }
 
-  /** Title candidate surfaces from h1 spans with the reference's gender-form
-    * suffixes stripped ("(m/w)", "/-in" — SURVEY.md §2.1 R3).
+  /** Title candidate surfaces ([[titleSurface]]) from h1 spans, for the
+    * Levenshtein title path and R13's typo edges.
     * Output: (doc_id, candidate, offset).
     */
   def titleCandidates(spans: DataFrame): DataFrame =
     spans
       .where(col("kind") === "h1")
-      .select(col("doc_id"),
-        trim(regexp_replace(col("text"), GenderSuffixRe, "")).as("candidate"),
-        col("offset"))
+      .select(col("doc_id"), titleSurface.as("candidate"), col("offset"))
 
   /** R3 with the reference's tag-weight + position features (SURVEY.md §2.1
     * R3 [PK-med]): candidates from h1/h2/title spans, feature weight =
@@ -264,9 +204,7 @@ object Extractors {
   def titleCandidatesScored(spans: DataFrame): DataFrame =
     spans
       .where(col("kind").isin("h1", "h2", "title"))
-      .select(col("doc_id"),
-        trim(regexp_replace(col("text"), GenderSuffixRe, "")).as("candidate"),
-        col("offset"),
+      .select(col("doc_id"), titleSurface.as("candidate"), col("offset"),
         (when(col("kind") === "h1", 1.0)
           .when(col("kind") === "title", 0.8)
           .otherwise(0.6) / (lit(1.0) + col("offset"))).as("w"))

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.kg.Pipeline
+import graft.kg.extract.Extractors
 import graft.kg.schema.{PostingDoc, Span}
 import graft.kg.schema.Schemas.Pred
 
@@ -140,15 +143,30 @@ class GoldenFixturesSpec extends SparkTestBase {
       winners(Pipeline.titleTriples(spans, gaz)))
   }
 
+  /** The six per-predicate entries, each over the spans on its own (no
+    * pin), unioned and deduplicated as [[Pipeline.allTriples]] is.
+    */
+  private def perPredicate(postings: DataFrame, gaz: Pipeline.Gazetteers): DataFrame = {
+    val spans = Extractors.textSpans(postings)
+    Pipeline.dedupTriples(Seq(
+      Pipeline.titleTriples(spans, gaz.titles),
+      Pipeline.workloadTriples(spans),
+      Pipeline.companyTriples(spans, gaz.companies),
+      Pipeline.skillTriples(spans, gaz.skills),
+      Pipeline.languageTriples(spans, gaz.languages),
+      Pipeline.locationTriples(spans, gaz.locations)).reduce(_ unionByName _)
+      .withColumnRenamed("doc_id", "subj"))
+  }
+
   test("single-pass pipeline == multi-pass reference wiring") {
     val postings = graft.kg.io.SyntheticCorpus.postings(spark, "/root/testdata/sf0.001")
     val gaz = Pipeline.defaultGazetteers(spark)
-    def norm(df: org.apache.spark.sql.DataFrame) =
+    def norm(df: DataFrame) =
       df.select("subj", "pred", "obj", "score", "src_offset").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4)))
         .toSet
     val single = norm(Pipeline.allTriples(postings, gaz))
-    val multi = norm(Pipeline.allTriplesMultiPass(postings, gaz))
+    val multi = norm(perPredicate(postings, gaz))
     assert(single == multi,
       s"missing=${(multi -- single).take(5)} spurious=${(single -- multi).take(5)}")
   }
@@ -177,12 +195,12 @@ class GoldenFixturesSpec extends SparkTestBase {
     }
     val postings = spark.createDataset(docs).toDF()
     val gaz = Pipeline.defaultGazetteers(spark)
-    def norm(df: org.apache.spark.sql.DataFrame) =
+    def norm(df: DataFrame) =
       df.select("subj", "pred", "obj", "score", "src_offset").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4)))
         .toSet
     val single = norm(Pipeline.allTriples(postings, gaz))
-    val multi = norm(Pipeline.allTriplesMultiPass(postings, gaz))
+    val multi = norm(perPredicate(postings, gaz))
     assert(single == multi,
       s"missing=${(multi -- single).take(5)} spurious=${(single -- multi).take(5)}")
     assert(single.nonEmpty)

@@ -180,7 +180,10 @@ class GramKernelSpec extends SparkTestBase {
       ("p", gaz("Java", "Über", "BI", "0"), "requiresLanguage"),
       ("footer", gaz("9000", "9000 St.", "St. Gallen", "AG"), "locatedIn"))
     for (multi <- Seq(Seq("li"), Seq("li", "footer"), Seq.empty[String])) {
-      val kernel = rows(Extractors.fusedMentions(spans, gazByKind, multi)).sortBy(_.toString)
+      val kernel = rows(Extractors.mentionJoin(
+        Extractors.candidates(spans, multi, gazByKind.map(_._1)), gazByKind)
+        .select(col("doc_id"), col("pred"), col("entity_id"), col("offset")))
+        .sortBy(_.toString)
       val lambda = rows(lambdaFusedMentions(spans, gazByKind, multi)).sortBy(_.toString)
       assert(kernel == lambda, s"multi-token kinds $multi")
       assert(kernel.nonEmpty)

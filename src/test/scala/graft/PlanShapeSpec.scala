@@ -121,6 +121,24 @@ class PlanShapeSpec extends SparkTestBase {
       s"write stage task counts: $tasks (one coalesced task writes every file)")
   }
 
+  test("kg_build's path starts at most 32 jobs at sf0.001") {
+    // the kg_build operation: raw triples -> fused dedup write with
+    // manifests -> CC canonicalization. 29 jobs in each of 24 runs; AQE
+    // moves other operators' job counts from run to run, hence the slack.
+    val postings = graft.kg.io.SyntheticCorpus.materializedPostings(spark, sf)
+    val gaz = graft.kg.Pipeline.defaultGazetteers(spark)
+    gaz.prep // the prep pass is setup, once per gazetteer set
+    val root = java.nio.file.Files.createTempDirectory("graft-kg-jobs").toString
+    val (_, rec) = JobRecord(spark) {
+      graft.kg.emit.TableIO.writeTriplesDeduped(spark,
+        graft.kg.Pipeline.allTriplesRaw(postings, gaz), root)
+      graft.kg.Pipeline.canonicalSurfaces(
+        graft.kg.extract.Extractors.textSpans(postings), gaz.titles).collect()
+    }
+    info(s"kg_build: ${rec.jobs} jobs")
+    assert(rec.jobs <= 32, s"kg_build started ${rec.jobs} jobs")
+  }
+
   test("dedup shingle relation is computed once and SHARED by all consumers") {
     // each pair operator's multiply-consumed relation (shingles for
     // minhash/ngram, simhash signatures) is pinned once (graft.Pin — see

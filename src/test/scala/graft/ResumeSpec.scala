@@ -30,11 +30,11 @@ class ResumeSpec extends SparkTestBase {
     val resumed = tmpDir("resumed")
     val t = triples().cache()
 
-    val m1 = TableIO.writeTriples(spark, t, full, inputLineage = "sf0.001")
+    val m1 = TableIO.writeTriplesDeduped(spark, t, full, inputLineage = "sf0.001")
     assert(m1.nonEmpty)
 
     // "crash" mid-run: only two predicates' partitions got committed...
-    TableIO.writeTriples(spark,
+    TableIO.writeTriplesDeduped(spark,
       t.where(col("pred").isin("hasTitle", "requiresSkill")), resumed)
     // ...plus an uncommitted leftover partition dir (data written, manifest
     // not) that the resume must drop, not double-append
@@ -46,7 +46,7 @@ class ResumeSpec extends SparkTestBase {
 
     val committedBefore = TableIO.committed(resumed).size
     // resume with the FULL triple set
-    val m2 = TableIO.writeTriples(spark, t, resumed, inputLineage = "sf0.001")
+    val m2 = TableIO.writeTriplesDeduped(spark, t, resumed, inputLineage = "sf0.001")
     assert(m2.nonEmpty)
     assert(TableIO.committed(resumed).size > committedBefore)
 
@@ -57,7 +57,7 @@ class ResumeSpec extends SparkTestBase {
     assert(TableIO.readTriples(spark, resumed).count() == t.count())
 
     // second resume is a no-op (nothing pending)
-    val m3 = TableIO.writeTriples(spark, t, resumed)
+    val m3 = TableIO.writeTriplesDeduped(spark, t, resumed)
     assert(m3.isEmpty)
     assert(readSet(resumed) == readSet(full))
     t.unpersist()
@@ -68,7 +68,7 @@ class ResumeSpec extends SparkTestBase {
     val root = tmpDir("prune")
     val t = triples().cache()
     // run 1: commit only hasTitle
-    val m1 = TableIO.writeTriples(spark, t.where(col("pred") === "hasTitle"), root)
+    val m1 = TableIO.writeTriplesDeduped(spark, t.where(col("pred") === "hasTitle"), root)
     assert(m1.nonEmpty && m1.forall(_.pred == "hasTitle"))
     // corrupt EVERY committed data file: any read touching them now throws,
     // so a successful resume run proves its stats scan pruned them away
@@ -79,7 +79,7 @@ class ResumeSpec extends SparkTestBase {
       .toList
     assert(corrupted.nonEmpty)
     // resume with the full triple set — writes + stats only the fresh preds
-    val m2 = TableIO.writeTriples(spark, t, root, inputLineage = "resume \"quoted\"")
+    val m2 = TableIO.writeTriplesDeduped(spark, t, root, inputLineage = "resume \"quoted\"")
     assert(m2.nonEmpty)
     assert(m2.forall(_.pred != "hasTitle"), "resume re-manifested a committed partition")
     // lineage with quotes is escaped into valid JSON
@@ -99,7 +99,7 @@ class ResumeSpec extends SparkTestBase {
     val a = tmpDir("fused")
     val b = tmpDir("twostep")
     TableIO.writeTriplesDeduped(spark, Pipeline.allTriplesRaw(postings, gaz), a)
-    TableIO.writeTriples(spark, Pipeline.allTriples(postings, gaz), b)
+    TableIO.writeTriplesDeduped(spark, Pipeline.allTriples(postings, gaz), b)
     def full(root: String) = TableIO.readTriples(spark, root)
       .select("subj", "pred", "obj", "score", "src_offset").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4)))
@@ -124,7 +124,7 @@ class ResumeSpec extends SparkTestBase {
   test("manifests carry lineage and row counts that match the data") {
     val root = tmpDir("manifest")
     val t = triples()
-    val ms = TableIO.writeTriples(spark, t, root, inputLineage = "sf0.001/documents")
+    val ms = TableIO.writeTriplesDeduped(spark, t, root, inputLineage = "sf0.001/documents")
     val byPartition = TableIO.readTriples(spark, root)
       .groupBy(col("pred"), col("bucket")).count().collect()
       .map(r => ((r.getString(0), r.getInt(1)), r.getLong(2))).toMap
