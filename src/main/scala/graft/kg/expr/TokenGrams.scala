@@ -1,6 +1,7 @@
 package graft.kg.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
   GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -9,7 +10,9 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Token n-grams of a split span (R4 mention detection's gram explode). */
+/** Token n-grams of a split text: R4 mention detection's gram explode, the
+  * dedup shingles and passage windows, and the text operators' bigrams.
+  */
 object TokenGramsAlgo {
   private val Space = UTF8String.fromString(" ")
 
@@ -23,19 +26,22 @@ object TokenGramsAlgo {
       (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
     }
 
-  /** Every n-gram of `ts` for n = 1..maxN, all 1-grams first, each gram
-    * its tokens joined by one space (`array_join(slice(ts, k, n), ' ')`:
-    * null tokens are skipped). `upperFirst` keeps only [[upperStart]]
-    * grams. A non-null `tag` wraps each gram as the struct (tag, gram).
+  /** Every n-gram of `ts` for n = minN..maxN in position order, all
+    * minN-grams first, each gram its tokens joined by one space
+    * (`array_join(slice(ts, k, n), ' ')`: null tokens are skipped). A text
+    * shorter than minN tokens has none: the array is empty, never null.
+    * `upperFirst` keeps only [[upperStart]] grams. A non-null `tag` wraps
+    * each gram as the struct (tag, gram).
     */
-  def grams(ts: ArrayData, maxN: Int, upperFirst: Boolean, tag: UTF8String): ArrayData = {
+  def grams(ts: ArrayData, minN: Int, maxN: Int, upperFirst: Boolean,
+      tag: UTF8String): ArrayData = {
     val len = ts.numElements()
     var cap = 0
-    var n = 1
+    var n = minN
     while (n <= maxN && n <= len) { cap += len - n + 1; n += 1 }
     val out = new Array[Any](cap)
     var m = 0
-    n = 1
+    n = minN
     while (n <= maxN && n <= len) {
       var k = 0
       while (k + n <= len) {
@@ -63,14 +69,17 @@ object TokenGramsAlgo {
 }
 
 /** token_grams(ts: array<string>, maxN: int): the [[TokenGramsAlgo.grams]]
-  * of each row, as `array<string>` or, with a `tag`, as
-  * `array<struct<ctype, payload>>`. Null `ts` or null `maxN` gives null.
+  * of widths `minN`..maxN of each row, as `array<string>` or, with a `tag`,
+  * as `array<struct<ctype, payload>>`. Null `ts` or null `maxN` gives null.
   *
-  * Codegen'd: the `transform`/`filter` lambda spelling of the same grams is
-  * `CodegenFallback`, which drops the whole Generate that explodes it (and
-  * every regex, CASE and IN beside it) out of whole-stage codegen.
+  * The one gram spelling of the library: no gram is spelled with
+  * `transform`/`filter` lambdas. Those are `CodegenFallback`: they evaluate
+  * interpreted, with no hoisting of a `split` out of the lambda body, and
+  * drop the operator that carries them (the Generate that explodes them,
+  * the Project of a shingle set, and every regex, CASE and IN beside it)
+  * out of whole-stage codegen.
   */
-case class TokenGrams(left: Expression, right: Expression, upperFirst: Boolean,
+case class TokenGrams(left: Expression, right: Expression, minN: Int, upperFirst: Boolean,
     tag: Option[String]) extends BinaryExpression {
   override def dataType: DataType = ArrayType(tag match {
     case Some(_) => StructType(Seq(
@@ -84,12 +93,13 @@ case class TokenGrams(left: Expression, right: Expression, upperFirst: Boolean,
   @transient private lazy val tagUtf8 = tag.map(UTF8String.fromString).orNull
 
   override protected def nullSafeEval(ts: Any, maxN: Any): Any =
-    TokenGramsAlgo.grams(ts.asInstanceOf[ArrayData], maxN.asInstanceOf[Int], upperFirst, tagUtf8)
+    TokenGramsAlgo.grams(ts.asInstanceOf[ArrayData], minN, maxN.asInstanceOf[Int], upperFirst,
+      tagUtf8)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tagRef = tag.fold("null")(t => ctx.addReferenceObj("tag", UTF8String.fromString(t)))
     defineCodeGen(ctx, ev, (ts, n) =>
-      s"graft.kg.expr.TokenGramsAlgo.grams($ts, $n, $upperFirst, $tagRef)")
+      s"graft.kg.expr.TokenGramsAlgo.grams($ts, $minN, $n, $upperFirst, $tagRef)")
   }
 
   override protected def withNewChildrenInternal(
@@ -99,8 +109,11 @@ case class TokenGrams(left: Expression, right: Expression, upperFirst: Boolean,
 
 object TokenGrams {
   /** Column-API entry point (`maxN` is cast to int). */
-  def tokenGrams(ts: Column, maxN: Column, upperFirst: Boolean,
+  def tokenGrams(ts: Column, minN: Int, maxN: Column, upperFirst: Boolean,
       tag: Option[String] = None): Column =
     Bridge.column(TokenGrams(Bridge.expression(ts), Bridge.expression(maxN.cast("int")),
-      upperFirst, tag))
+      minN, upperFirst, tag))
+
+  /** The n-grams of exactly `n` tokens of `ts`, unfiltered and untagged. */
+  def exact(ts: Column, n: Int): Column = tokenGrams(ts, n, lit(n), upperFirst = false)
 }

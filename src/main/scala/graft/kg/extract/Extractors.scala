@@ -13,10 +13,7 @@ import graft.kg.io.GazetteerIO
   * `allTriplesRaw` and for every per-predicate entry alike. All pure
   * org.apache.spark.sql.functions built-ins — codegen'd, no UDFs — except
   * where a custom Catalyst expression is explicitly the point (Jaro-Winkler,
-  * Aho-Corasick, and the R4 gram kernel [[TokenGrams]]; see graft.kg.expr).
-  * No gram is spelled with `transform`/`filter` lambdas: those evaluate
-  * interpreted and pull the Generate that explodes them out of whole-stage
-  * codegen.
+  * Aho-Corasick, and the gram kernel [[TokenGrams]]; see graft.kg.expr).
   */
 object Extractors {
 
@@ -55,12 +52,12 @@ object Extractors {
     spans.select(col("doc_id"), col("offset"),
       explode(spanGrams(lit(maxN), upperFirst = false)).as("gram"))
 
-  /** The grams of the span's `text` split on single spaces, through the one
-    * codegen'd gram kernel ([[TokenGrams]]) every R4 path shares. `maxN` is
-    * per row: [[candidates]] emits 2-grams only for its `twoGramKinds`.
+  /** The 1..maxN-grams of the span's `text` split on single spaces, through
+    * the one codegen'd gram kernel ([[TokenGrams]]). `maxN` is per row:
+    * [[candidates]] emits 2-grams only for its `twoGramKinds`.
     */
   private def spanGrams(maxN: Column, upperFirst: Boolean, tag: Option[String] = None): Column =
-    TokenGrams.tokenGrams(split(col("text"), " "), maxN, upperFirst, tag)
+    TokenGrams.tokenGrams(split(col("text"), " "), 1, maxN, upperFirst, tag)
 
   /** 2 for the `twoGramKinds`, else 1 (also for a null kind). */
   private def gramWidth(twoGramKinds: Seq[String]): Column =

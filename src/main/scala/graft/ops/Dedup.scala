@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Pin
+import graft.kg.expr.TokenGrams
 import graft.kg.expr.SignBands.signBands
 import graft.kg.expr.SignBandsAlgo
 import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
@@ -149,26 +150,8 @@ object Dedup {
     (reps.select(col("rep_id"), col("text")), members)
   }
 
-  /** The n-gram token shingles of the token-array column `ts`, one per
-    * position (duplicates kept). Docs shorter than n tokens yield none — the
-    * size guard matters because `sequence(1, size-n+1)` DESCENDS when
-    * size < n (Spark defaults to step -1 when start > stop) and the slice at
-    * index 0 then throws INVALID_PARAMETER_VALUE.START.
-    *
-    * `ts` is PROJECTED by the caller so the lambda slices a bound column:
-    * higher-order functions evaluate interpreted with no loop-invariant
-    * hoisting, so a `split(text, ' ')` INSIDE the lambda body re-splits the
-    * document once per shingle position — O(tokens²) work per row (guide
-    * §1.2 step 2 / §4: fix the per-task expression work).
-    */
-  private def grams(n: Int): Column =
-    when(size(col("ts")) >= n, expr(
-      s"transform(sequence(1, size(ts) - ${n - 1}), " +
-        s"i -> array_join(slice(ts, i, $n), ' '))"))
-      .otherwise(expr("cast(array() as array<string>)"))
-
-  /** Distinct n-gram token shingles: (doc_id, s) ([[grams]] of the text's
-    * space-split tokens).
+  /** Distinct n-gram token shingles: (doc_id, s), the [[TokenGrams]]
+    * kernel's exact-n grams of the text's space-split tokens.
     *
     * Partitioned BY doc_id before the distinct: HashPartitioning(doc_id)
     * satisfies the clustered distributions of the distinct (keys doc_id, s),
@@ -179,8 +162,7 @@ object Dedup {
     */
   def shingles(corpus: DataFrame, n: Int = 3): DataFrame = {
     val np = corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    corpus.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode(grams(n)).as("s"))
+    corpus.select(col("doc_id"), explode(TokenGrams.exact(split(col("text"), " "), n)).as("s"))
       // explicit np: same rationale as exactCollapse — AQE would coalesce
       // the small-input exchange to one partition and serialize the
       // signature/verify consumers hanging off this ONE shared exchange
@@ -322,36 +304,28 @@ object Dedup {
   private def portableBaseHash(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long") % PortableP
 
-  /** MinHash signatures: k independent permutations, one hash-agg per doc
-    * (no per-doc loops). Default hashing is xxhash64 (fast, Spark-only);
-    * `portable = true` switches to the md5-seeded universal-hash family above
-    * so a SQL oracle can replicate the exact signatures.
+  /** The uncapped (doc_id, band, bucket) relation behind [[lshCandidates]]
+    * — also the signature STATE a committed corpus persists for
+    * [[IncrementalDedup]] (new shards band-join against it instead of
+    * re-signaturing the committed corpus). The MinHash signatures are
+    * bands × rows independent permutations, one hash-agg per doc (no
+    * per-doc loops). Default hashing is xxhash64 (fast, Spark-only);
+    * `portable = true` switches to the md5-seeded universal-hash family
+    * above so a SQL oracle can replicate the exact signatures.
     */
-  def minhashSignatures(corpus: DataFrame, k: Int = 32,
-      portable: Boolean = false): DataFrame =
-    minhashSignaturesFrom(shingles(corpus), k, portable)
-
-  private def minhashSignaturesFrom(sh: DataFrame, k: Int, portable: Boolean): DataFrame =
-    if (portable) {
-      val params = portableHashParams(k)
-      val based = sh.select(col("doc_id"), portableBaseHash(col("s")).as("hb"))
-      val aggs = params.zipWithIndex.map { case ((a, b), j) =>
+  private[graft] def bandBuckets(sh: DataFrame, bands: Int, rows: Int,
+      portable: Boolean): DataFrame = {
+    val k = bands * rows
+    val sigs = if (portable) {
+      val aggs = portableHashParams(k).zipWithIndex.map { case ((a, b), j) =>
         min((lit(a) * col("hb") + lit(b)) % PortableP).as(s"h$j")
       }
-      based.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+      sh.select(col("doc_id"), portableBaseHash(col("s")).as("hb"))
+        .groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     } else {
       val aggs = (0 until k).map(j => min(xxhash64(col("s"), lit(j))).as(s"h$j"))
       sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     }
-
-  /** The uncapped (doc_id, band, bucket) relation behind [[lshCandidates]]
-    * — also the signature STATE a committed corpus persists for
-    * [[IncrementalDedup]] (new shards band-join against it instead of
-    * re-signaturing the committed corpus).
-    */
-  private[graft] def bandBuckets(sh: DataFrame, bands: Int, rows: Int,
-      portable: Boolean): DataFrame = {
-    val sigs = minhashSignaturesFrom(sh, bands * rows, portable)
     val bandCols: Seq[Column] = (0 until bands).map { b =>
       val slots = (0 until rows).map(r => col(s"h${rows * b + r}"))
       // portable bucket key = the raw slot values (DuckDB-reproducible);
@@ -610,13 +584,17 @@ object Dedup {
         when(col("vec_id") =!= col("keep_id"), 1L).otherwise(0L).as("is_dup"))
   }
 
-  /** The DISTINCT 3-gram shingles of the token column `ts`, as one array. */
-  private def shingleSet: Column = array_distinct(grams(3))
+  /** The DISTINCT 3-gram shingles of the token array `ts`, as one array:
+    * empty for fewer than 3 tokens, null only for a null `ts`.
+    */
+  private def shingleSet(ts: Column): Column = array_distinct(TokenGrams.exact(ts, 3))
 
-  /** (doc_id, ss): the [[shingleSet]] of each (doc_id, text) row. */
+  /** (doc_id, ss): the [[shingleSet]] of each (doc_id, text) row. Its one
+    * caller passes committed representatives, whose text is non-null
+    * ([[decisionBase]] drops null text), so `ss` is never null.
+    */
   private[graft] def shingleArrays(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), shingleSet.as("ss"))
+    docs.select(col("doc_id"), shingleSet(split(col("text"), " ")).as("ss"))
 
   /** The one per-doc relation every dedup decision derives from — the batch
     * [[dupClusters]] and both [[IncrementalDedup]] writers. The corpus is
@@ -644,7 +622,7 @@ object Dedup {
       .select(col("doc_id"), split(col("text"), " ").as("ts"),
         min(col("doc_id")).over(Window.partitionBy(col("gh"))).as("rep_id"))
       .select(col("doc_id"), col("rep_id"), (size(col("ts")) >= 3).as("has_sh"),
-        when(col("doc_id") === col("rep_id"), shingleSet).as("ss"))
+        when(col("doc_id") === col("rep_id"), shingleSet(col("ts"))).as("ss"))
   }
 
   /** (doc_id, ss) of a [[decisionBase]]'s representative rows. */
@@ -781,17 +759,7 @@ object Dedup {
     * how many duplicated windows merged into it.
     */
   def duplicatePassages(corpus: DataFrame, w: Int = 8): DataFrame = {
-    // `ts` projected first (same rationale as [[shingles]]): the interpreted
-    // lambda otherwise re-splits the document once per window position
-    val winHashes = when(size(col("ts")) >= w, expr(
-      s"""transform(sequence(1, size(ts) - ${w - 1}),
-         |  i -> cast(conv(substring(md5(array_join(slice(ts, i, $w), ' ')),
-         |                 1, 15), 16, 10) as bigint))""".stripMargin))
-      .otherwise(expr("cast(array() as array<bigint>)"))
-    val wins = corpus
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), posexplode(winHashes).as(Seq("pos", "h")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("start"), col("h"))
+    val wins = passageWindows(corpus, w)
     val dupKeys = wins.groupBy(col("h"))
       .agg(count_distinct(col("doc_id")).as("nd"))
       .where(col("nd") >= 2)
@@ -810,6 +778,17 @@ object Dedup {
         count(lit(1)).as("n_windows"))
       .select(col("doc_id"), col("span_start"), col("span_end"), col("n_windows"))
   }
+
+  /** Step 1 of [[duplicatePassages]]: (doc_id, start, h), one row per
+    * w-token window of each text — its 1-based start token and the 60-bit
+    * md5 fingerprint of the window's tokens joined by single spaces.
+    */
+  private[graft] def passageWindows(corpus: DataFrame, w: Int): DataFrame =
+    corpus
+      .select(col("doc_id"),
+        posexplode(TokenGrams.exact(split(col("text"), " "), w)).as(Seq("pos", "g")))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("start"),
+        conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("h"))
 
   /** The CUT that [[duplicatePassages]] exists for — Lee et al.'s actual
     * transformation: every doc re-emitted with its cross-document-duplicated

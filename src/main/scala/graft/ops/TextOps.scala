@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.kg.expr.TokenGrams
+
 /** Text-analysis operators for a large-scale training-data pipeline, over the
   * `documents` table. All pure built-ins (codegen'd); outputs are strings /
   * bigints (scaled by 1e4 where fractional) so the DuckDB oracles compare
@@ -151,10 +153,9 @@ object TextOps {
     * degenerate repetition before any pairwise dedup runs. Fixed-point e4
     * like [[quality]] (single exact-integer division per ratio — the
     * cross-engine-safe pattern). Shape: distinct-token stats are per-row
-    * expressions (no shuffle); the top-bigram count is explode → two
-    * hash-aggs keyed by (doc_id, bigram) — fully partial-aggregatable, the
-    * same shape as [[predLang]]. Docs with < 2 tokens have no bigram: left
-    * join, ratio 0.
+    * expressions (no shuffle); the top-bigram count is [[topBigramCounts]],
+    * the same shape as [[predLang]]. Docs with < 2 tokens have no bigram:
+    * left join, ratio 0.
     * Output: (doc_id, n_tokens, dup_token_ratio_e4, top_bigram_n,
     * top_bigram_ratio_e4).
     */
@@ -163,13 +164,7 @@ object TextOps {
       split(col("text"), " ").as("ts"))
     val st = base.select(col("doc_id"), size(col("ts")).cast("long").as("nt"),
       size(array_distinct(col("ts"))).cast("long").as("nd"))
-    val bigrams = base.select(col("doc_id"),
-      explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("b"))
-    val top = bigrams.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(max(col("c")).as("top_n"))
-    st.join(top, Seq("doc_id"), "left")
+    st.join(topBigramCounts(base), Seq("doc_id"), "left")
       .select(col("doc_id"), col("nt").as("n_tokens"),
         floor(lit(10000.0) * (col("nt") - col("nd")) / col("nt"))
           .cast("long").as("dup_token_ratio_e4"),
@@ -178,6 +173,16 @@ object TextOps {
           floor(lit(10000.0) * coalesce(col("top_n"), lit(0L)) / (col("nt") - 1)))
           .otherwise(lit(0L)).cast("long").as("top_bigram_ratio_e4"))
   }
+
+  /** (doc_id, top_n): the count of each doc's most frequent bigram over a
+    * (doc_id, ts) relation, for [[repetition]] and [[gopherFilter]]: the
+    * [[TokenGrams]] kernel's bigrams exploded, then two partial-aggregatable
+    * hash-aggs keyed by (doc_id, bigram). Docs with < 2 tokens have no row.
+    */
+  private def topBigramCounts(base: DataFrame): DataFrame =
+    base.select(col("doc_id"), explode(TokenGrams.exact(col("ts"), 2)).as("b"))
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id")).agg(max(col("c")).as("top_n"))
 
   /** CCNet-style LANGUAGE-MODEL quality scoring (Wenzek et al. 2020, public
     * construction: rank web documents by the perplexity of an LM trained on
@@ -202,10 +207,7 @@ object TextOps {
     */
   def lmQuality(docs: DataFrame, refMod: Long = 10L): DataFrame = {
     val bigrams = docs.select(col("doc_id").cast("long").as("doc_id"),
-      split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode(expr(
-        "zip_with(slice(ts, 1, size(ts) - 1), slice(ts, 2, size(ts) - 1), " +
-          "(a, b) -> concat(a, ' ', b))")).as("bg"))
+      explode(TokenGrams.exact(split(col("text"), " "), 2)).as("bg"))
     val ref = bigrams.where(col("doc_id") % refMod === 0)
       .groupBy(col("bg")).agg(count(lit(1)).as("c"))
     bigrams.join(ref, Seq("bg"), "left")
@@ -232,8 +234,8 @@ object TextOps {
     *   f_dup    — duplicate-token fraction > 0.65
     *   f_bigram — most-frequent-bigram fraction > 0.08
     * Shape: ONE corpus scan; every signal except the bigram top is a per-row
-    * expression (no shuffle); the bigram top is the [[repetition]] explode →
-    * two partial-aggregatable hash-aggs. At 10^12 docs this is scan-bound —
+    * expression (no shuffle); the bigram top is [[repetition]]'s
+    * [[topBigramCounts]]. At 10^12 docs this is scan-bound —
     * exactly what a first-stage gate must be.
     * Output: (doc_id, n_tokens, f_len, f_mwl, f_stop, f_dup, f_bigram, kept).
     */
@@ -247,17 +249,11 @@ object TextOps {
         t => t.isin(stopwords.map(lit): _*)))).cast("long").as("ndstop"),
       expr("aggregate(transform(ts, t -> cast(length(t) as bigint)), " +
         "cast(0 as bigint), (acc, x) -> acc + x)").as("sumlen"))
-    val top = base.select(col("doc_id"),
-      explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(max(col("c")).as("top_n"))
     val mwlE4 = floor(lit(10000.0) * col("sumlen") / col("nt")).cast("long")
     val dupE4 = floor(lit(10000.0) * (col("nt") - col("nd")) / col("nt")).cast("long")
     val bigE4 = when(col("nt") > 1, floor(lit(10000.0) *
       coalesce(col("top_n"), lit(0L)) / (col("nt") - 1))).otherwise(lit(0L)).cast("long")
-    val flagged = st.join(top, Seq("doc_id"), "left").select(
+    val flagged = st.join(topBigramCounts(base), Seq("doc_id"), "left").select(
       col("doc_id"), col("nt").as("n_tokens"),
       when(col("nt") < 40 || col("nt") > 10000, 1L).otherwise(0L).as("f_len"),
       when(mwlE4 < 30000L || mwlE4 > 100000L, 1L).otherwise(0L).as("f_mwl"),
@@ -308,10 +304,7 @@ object TextOps {
     * Output: top-`k` (pair, cnt).
     */
   def bpePairs(docs: DataFrame, k: Int = 30): DataFrame =
-    docs.select(split(col("text"), " ").as("ts"))
-      .select(explode(when(size(col("ts")) >= 2, expr(
-        "transform(sequence(1, size(ts) - 1), i -> array_join(slice(ts, i, 2), ' '))"))
-        .otherwise(expr("cast(array() as array<string>)"))).as("pair"))
+    docs.select(explode(TokenGrams.exact(split(col("text"), " "), 2)).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc)
       .limit(k)

@@ -109,6 +109,21 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!own.toLowerCase.contains("lambdafunction"), s"lambda in the plan:\n${own.take(3000)}")
   }
 
+  test("decision base compiles: its shingle-set projection sits in whole-stage codegen, no lambda") {
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val df = graft.ops.Dedup.decisionBase(docs)
+    df.collect() // the final (adaptive) plan carries the codegen stage ids
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val proj = p.linesIterator.filter(_.contains("token_grams(")).toSeq
+    assert(proj.size == 1, s"shingle-set projection not found:\n${p.take(3000)}")
+    // `*(n) Project` = inside WholeStageCodegen stage n
+    assert(proj.head.matches(".*\\*\\(\\d+\\) Project .*"),
+      s"shingle-set projection runs interpreted:\n${proj.head.take(300)}")
+    assert(!p.toLowerCase.contains("lambdafunction"), s"lambda in the plan:\n${p.take(3000)}")
+  }
+
   test("fused dedup write runs on more than one task: the layout exchange is not coalesced") {
     val postings = graft.kg.io.SyntheticCorpus.postings(spark, sf)
     // pinned input: the only stage that reads a shuffle is the write stage
@@ -147,11 +162,10 @@ class PlanShapeSpec extends SparkTestBase {
     // RDD: the plan shows multiple ExistingRDD scans and ZERO re-derivations
     // of the relation (its derivation marker appears nowhere in the plan;
     // the band-key Generate is a different, legitimate explode). The
-    // shingle marker is the gram lambda's body: `split` is projected out
-    // of the lambda, so the plan renders `array_join(slice(ts, ...))`.
+    // shingle marker is the gram kernel's plan name, `token_grams(`.
     for ((query, marker) <- Seq(
-        "dedup_minhash_lsh" -> "array_join(slice(",
-        "dedup_ngram_jaccard" -> "array_join(slice(",
+        "dedup_minhash_lsh" -> "token_grams(",
+        "dedup_ngram_jaccard" -> "token_grams(",
         "dedup_simhash" -> "md5(")) {
       spark.sharedState.cacheManager.clearCache()
       val df = SparkEntry.queries(query)(spark, sf)
@@ -172,7 +186,7 @@ class PlanShapeSpec extends SparkTestBase {
     val df = graft.ops.Dedup.dupClusters(corpus, bands = 16, rows = 2)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    for (rederived <- Seq("Scan parquet", "sha2(", "slice(split(", "array_join(slice("))
+    for (rederived <- Seq("Scan parquet", "sha2(", "slice(split(", "token_grams("))
       assert(!p.contains(rederived),
         s"decision action re-derives the collapse or shingles ($rederived):\n${p.take(4000)}")
   }
