@@ -20,7 +20,7 @@ object OpsEntries {
     * incremental-dedup base state) ahead of timing — [[graft.Bench]] calls
     * this so query rows measure the steady-state operator, not a
     * first-touch state build: at production these are standing tables a
-    * pipeline maintains across runs, and in-JVM they are TrieMap-cached
+    * pipeline maintains across runs, and in-JVM they are [[Standing]]
     * one-time builds that would otherwise land entirely on whichever query
     * touches them first (measured: the base commit was ~16 s of the 25.8 s
     * `dedup_incremental` row).
@@ -219,7 +219,7 @@ object OpsEntries {
 
   /** First 15 hex digits of md5(expr) packed into a 60-bit integer (hex
     * digits via strpos, packed with integer shifts — no precision-losing
-    * float pow). Identical to Spark's `conv(substring(md5(x),1,15),16,10)`.
+    * float pow). Identical to [[graft.kg.expr.functions.hash60]].
     */
   private[graft] def duckHash60(sExpr: String): String =
     s"""CAST(list_sum(list_transform(generate_series(1, 15), k ->

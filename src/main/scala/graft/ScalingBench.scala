@@ -126,9 +126,38 @@ object ScalingBench {
         s"ELSE concat('E', pmod(doc_id * 31 + j * 7919, ${nEnt}L)) END AS obj")
   }
 
+  /** Prep-table publication shared by the three phases: a derived input is
+    * deterministic in its path, so it is written ONCE and shared across
+    * bench invocations (every parallelism level reads the IDENTICAL files).
+    * `write` fills a private directory IN THE TARGET'S PARENT (same
+    * filesystem — staging in java.io.tmpdir would make ATOMIC_MOVE throw
+    * when TMPDIR points elsewhere), published with an atomic rename: a
+    * concurrent bench either wins the rename or reads the winner's table —
+    * never a half-written directory. Only the lost-the-race shapes are
+    * swallowed; any other move failure (permissions, cross-device, IO)
+    * surfaces, else the later read of a nonexistent target fails
+    * confusingly.
+    */
+  private def publishOnce(dir: String)(write: String => Unit): String = {
+    val target = java.nio.file.Paths.get(dir)
+    if (!Files.exists(target.resolve("_SUCCESS"))) {
+      val tmp = Files.createTempDirectory(target.getParent, s"${target.getFileName}-build")
+      write(tmp.toString)
+      try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException |
+             _: java.nio.file.DirectoryNotEmptyException
+            if Files.exists(target) =>
+          TableIO.deleteTree(tmp.toString)
+      }
+    }
+    dir
+  }
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val repl = sys.env.getOrElse("SPARK_GRAFT_REPL", "20").toInt
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val phase = sys.env.getOrElse("SPARK_GRAFT_PHASE", "kg")
@@ -166,24 +195,10 @@ object ScalingBench {
       // skewed co-occurrence graph — the iterated-operator evidence the
       // kg/dedup phases don't cover. Same two-parallelism methodology,
       // same cached deterministic input files at both levels.
-      def mentionsDirFor(r: Int): String = {
-        val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-        val dir = s"/tmp/graft-graphmentions-$tag-x$r-v1"
-        val target = java.nio.file.Paths.get(dir)
-        if (!Files.exists(target.resolve("_SUCCESS"))) {
-          val tmp = Files.createTempDirectory(target.getParent, "graft-graphmentions-build")
-          graphMentions(spark, sfDir, r, 64)
-            .write.mode("overwrite").parquet(tmp.toString)
-          try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.DirectoryNotEmptyException
-                if Files.exists(target) =>
-              graft.kg.emit.TableIO.deleteTree(tmp.toString)
-          }
+      def mentionsDirFor(r: Int): String =
+        publishOnce(s"/tmp/graft-graphmentions-$sfTag-x$r-v1") { tmp =>
+          graphMentions(spark, sfDir, r, 64).write.mode("overwrite").parquet(tmp)
         }
-        dir
-      }
       val mentionsDir = mentionsDirFor(repl)
       // one timed run = derive co-occurrence edges -> write them as the
       // PRODUCTION layout (64-bucket sorted-by-x parquet table — 64 at BOTH
@@ -211,11 +226,8 @@ object ScalingBench {
         val tbl = s"graft_scaling_edges_$tag"
         val out = Files.createTempDirectory("graft-edges").toString
         val t0 = System.nanoTime()
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        graft.kg.graph.GraphOps.coocEdges(encoded)
-          .repartition(64, col("x"))
-          .write.bucketBy(64, "x").sortBy("x")
-          .option("path", s"$out/edges").format("parquet").saveAsTable(tbl)
+        graft.kg.graph.GraphOps.writeEdgeTable(
+          graft.kg.graph.GraphOps.coocEdges(encoded), tbl, 64, s"$out/edges")
         val edges = spark.table(tbl)
         val t1 = System.nanoTime()
         val ranks = graft.kg.graph.GraphOps.pagerankOnEdges(edges, iters = 3)
@@ -253,26 +265,12 @@ object ScalingBench {
       // dupClusters = exact-collapse + minhash-LSH + connected components in
       // one operator — the compound 100 TB dedup path. Same two-parallelism
       // methodology as the KG phase; same cached deterministic input.
-      def corpusDirFor(r: Int): String = {
-        val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-        // v4: family-block structure (constant cluster sizes under repl
-        // growth) + near-dup index cap — older caches must not be reused
-        val dir = s"/tmp/graft-dedupcorpus-$tag-x$r-v4"
-        val target = java.nio.file.Paths.get(dir)
-        if (!Files.exists(target.resolve("_SUCCESS"))) {
-          val tmp = Files.createTempDirectory(target.getParent, "graft-dedupcorpus-build")
-          dedupStressCorpus(spark, sfDir, r, 64)
-            .write.mode("overwrite").parquet(tmp.toString)
-          try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException |
-                 _: java.nio.file.DirectoryNotEmptyException
-                if Files.exists(target) =>
-              graft.kg.emit.TableIO.deleteTree(tmp.toString)
-          }
+      // v4: family-block structure (constant cluster sizes under repl
+      // growth) + near-dup index cap — older caches must not be reused
+      def corpusDirFor(r: Int): String =
+        publishOnce(s"/tmp/graft-dedupcorpus-$sfTag-x$r-v4") { tmp =>
+          dedupStressCorpus(spark, sfDir, r, 64).write.mode("overwrite").parquet(tmp)
         }
-        dir
-      }
       val corpusDir = corpusDirFor(repl)
       def oneRun(dir: String): (Long, Long, Double) = {
         val t0 = System.nanoTime()
@@ -310,38 +308,14 @@ object ScalingBench {
     // corpus PREP (untimed): the span derivation stands in for the upstream
     // HTML→spans flattening (SURVEY.md §2.1 R1) — the pipeline's input is the
     // postings TABLE (input_hint), so the timed job starts at its scan
-    // The derived table is deterministic in (sfDir, repl), so it is written
-    // ONCE to a deterministic path and shared across bench invocations:
-    // every parallelism level reads the IDENTICAL files (64 fixed prep
-    // partitions — file layout independent of cpus keeps the comparison fair).
-    val postingsDir = {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      // keyed by the derivation VERSION too: a cache written by older code
-      // must never be silently reused after the derivation changes
-      val dir = s"/tmp/graft-postings-$tag-x$repl-v${SyntheticCorpus.DerivationVersion}"
-      val target = java.nio.file.Paths.get(dir)
-      if (!Files.exists(target.resolve("_SUCCESS"))) {
-        // write to a private dir IN THE TARGET'S PARENT (same filesystem —
-        // staging in java.io.tmpdir would make ATOMIC_MOVE throw when TMPDIR
-        // points elsewhere), publish with an atomic rename: a concurrent
-        // bench either wins the rename or reads the winner's table — never a
-        // half-written directory
-        val tmp = Files.createTempDirectory(target.getParent, "graft-postings-build")
-        val docs = replicatedDocs(spark, sfDir, repl, 64)
-        SyntheticCorpus.fromDocuments(docs).write.mode("overwrite").parquet(tmp.toString)
-        try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // ONLY the lost-the-race shapes are swallowed; any other move
-          // failure (permissions, cross-device, IO) must surface, else the
-          // subsequent read of a nonexistent target fails confusingly
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.DirectoryNotEmptyException
-              if Files.exists(target.resolve("_SUCCESS")) ||
-                 Files.exists(target) =>
-            graft.kg.emit.TableIO.deleteTree(tmp.toString)
-        }
-      }
-      dir
+    // The derived table is deterministic in (sfDir, repl): published once
+    // (64 fixed prep partitions — file layout independent of cpus keeps the
+    // comparison fair), keyed by the derivation VERSION too, so a cache
+    // written by older code is never reused after the derivation changes.
+    val postingsDir = publishOnce(
+        s"/tmp/graft-postings-$sfTag-x$repl-v${SyntheticCorpus.DerivationVersion}") { tmp =>
+      SyntheticCorpus.fromDocuments(replicatedDocs(spark, sfDir, repl, 64))
+        .write.mode("overwrite").parquet(tmp)
     }
     val rowsIn = spark.read.parquet(postingsDir).count()
     val gaz = Pipeline.defaultGazetteers(spark)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.kg.Pipeline
 import graft.kg.expr.AhoCorasickMatches
+import graft.kg.expr.functions.hash60
 import graft.kg.extract.{Extractors, Media}
 import graft.kg.io.{Dictionaries, GazetteerIO, SyntheticCorpus}
 import graft.kg.schema.Schemas.Pred
@@ -27,6 +28,22 @@ object SparkEntry {
   private def spans(s: SparkSession, dir: String): DataFrame =
     Extractors.textSpans(SyntheticCorpus.materializedPostings(s, dir))
 
+  /** The deduplicated KG triples (subj, pred, obj) of `dir`'s postings. */
+  private def kgTriples(s: SparkSession, dir: String): DataFrame =
+    Pipeline.allTriples(
+      SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
+      .select(col("subj"), col("pred"), col("obj"))
+
+  /** The committed (pred, bucket)-partitioned triple store of `dir`'s
+    * postings ([[graft.kg.query.TripleStore.materializedTripleTable]]),
+    * read back with `pred`/`bucket` as partition columns.
+    */
+  private def committedTriples(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(graft.kg.query.TripleStore.materializedTripleTable(
+      s, Pipeline.allTriplesRaw(
+        SyntheticCorpus.materializedPostings(s, dir),
+        Pipeline.defaultGazetteers(s)), tag = dir))
+
   /** The committed (pred, bucket)-partitioned store unioned with the
     * metadata-sized is_a taxonomy — the input chain3, kg_describe,
     * kg_construct and kg_ask consume (the read path and the is_a
@@ -34,14 +51,10 @@ object SparkEntry {
     */
   private def committedTriplesWithOntology(s: SparkSession,
       dir: String): DataFrame = {
-    import graft.kg.query.{Ontology, TripleStore}
-    val root = TripleStore.materializedTripleTable(
-      s, Pipeline.allTriplesRaw(
-        SyntheticCorpus.materializedPostings(s, dir),
-        Pipeline.defaultGazetteers(s)), tag = dir)
+    import graft.kg.query.Ontology
     val ont = Ontology.taxonomyDf(s).select(col("child").as("subj"),
       lit("is_a").as("pred"), col("parent").as("obj"))
-    s.read.parquet(root).select(col("subj"), col("pred"), col("obj"))
+    committedTriples(s, dir).select(col("subj"), col("pred"), col("obj"))
       .union(ont)
   }
   /** The 3-hop chain over committed store (hop 1, partition-pruned) +
@@ -73,18 +86,14 @@ object SparkEntry {
     */
   private def entityEdges(s: SparkSession, dir: String): DataFrame =
     s.table(graft.kg.graph.GraphOps.materializedEdgeTable(
-      s, Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")), tag = dir))
+      s, kgTriples(s, dir), tag = dir))
 
   /** The WEIGHTED bucketed edge table — same production entry for the
     * weighted iterated consumers (weighted rank, shortest paths).
     */
   private def entityWeightedEdges(s: SparkSession, dir: String): DataFrame =
     s.table(graft.kg.graph.GraphOps.materializedWeightedEdgeTable(
-      s, Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")), tag = dir))
+      s, kgTriples(s, dir), tag = dir))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -202,10 +211,7 @@ object SparkEntry {
           GazetteerIO.fromText(s, GazetteerIO.materializedSkillsTsv()), "skills tsv"))
         .select(col("doc_id").as("subj"), col("pred"), col("obj"))),
     // -- R12 full union, dedup ----------------------------------------------
-    "kg_all_triples" -> ((s, dir) =>
-      Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))),
+    "kg_all_triples" -> ((s, dir) => kgTriples(s, dir)),
     // -- full-fidelity triples incl. score + evidence offset (rows-only) -----
     "kg_triples_full" -> ((s, dir) =>
       Pipeline.allTriples(
@@ -221,17 +227,11 @@ object SparkEntry {
       Pipeline.canonicalSurfacesIncremental(spans(s, dir), Dictionaries.titlesDf(s))),
     // -- graph analytics over the emitted KG: entity co-occurrence graph -----
     "kg_entity_pagerank" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerank(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.pagerank(kgTriples(s, dir))),
     "kg_entity_triangles" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.triangles(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.triangles(kgTriples(s, dir))),
     "kg_entity_components" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.components(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.components(kgTriples(s, dir))),
     // the PRODUCTION physical path for the same logical pagerank: edges
     // materialized once as a bucketed-by-x sorted table, iterations join
     // against the scan layout (no per-iteration edge exchange). Result-equal
@@ -239,9 +239,7 @@ object SparkEntry {
     // (the kg_skills / kg_skills_trie two-plans-one-oracle pattern).
     "kg_entity_pagerank_bucketed" -> ((s, dir) => {
       val tbl = graft.kg.graph.GraphOps.materializedEdgeTable(
-        s, Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")), tag = dir)
+        s, kgTriples(s, dir), tag = dir)
       graft.kg.graph.GraphOps.pagerankOnEdges(s.table(tbl))
     }),
     // -- KG consumption: subject-star BGP over the COMMITTED (pred, bucket)-
@@ -252,11 +250,7 @@ object SparkEntry {
     // chain on subj.
     "kg_star_query" -> ((s, dir) => {
       import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.starQuery(s.read.parquet(root), Seq(
+      TripleStore.starQuery(committedTriples(s, dir), Seq(
         TriplePattern("requiresSkill", obj = Some("S001")),
         TriplePattern("requiresLanguage", obj = Some("LANG00")),
         TriplePattern("hasTitle", bind = Some("title")),
@@ -266,11 +260,7 @@ object SparkEntry {
     // have no locatedIn triple — their rows keep a NULL loc)
     "kg_star_optional" -> ((s, dir) => {
       import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.starQuery(s.read.parquet(root), Seq(
+      TripleStore.starQuery(committedTriples(s, dir), Seq(
         TriplePattern("requiresSkill", obj = Some("S001")),
         TriplePattern("hasTitle", bind = Some("title")),
         TriplePattern("locatedIn", bind = Some("loc"), optional = true)))
@@ -278,62 +268,39 @@ object SparkEntry {
     // -- catalog stats: the selectivity numbers the BGP planner orders by
     "kg_predicate_stats" -> ((s, dir) => {
       import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.predicateStats(s.read.parquet(root))
+      TripleStore.predicateStats(committedTriples(s, dir))
     }),
     // -- KMV sketch: the 10^12-row path for the same catalog stats --
     "kg_predicate_card_sketch" -> ((s, dir) => {
       import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.predicateCardSketch(s.read.parquet(root))
+      TripleStore.predicateCardSketch(committedTriples(s, dir))
     }),
     // -- incremental sketch: shard sketches fold into stored state --
     "kg_card_sketch_increment" -> ((s, dir) => {
       import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      val t = s.read.parquet(root)
+      val t = committedTriples(s, dir)
       // deterministic doc split: base "corpus" vs daily "shard"
-      val side = pmod(
-        conv(substring(md5(col("subj")), 1, 15), 16, 10).cast("long"), lit(2L))
+      val side = pmod(hash60(col("subj")), lit(2L))
       TripleStore.estimateFromSketches(TripleStore.mergeKminSketches(
         TripleStore.predicateKminSketches(t.where(side === 0L)),
         TripleStore.predicateKminSketches(t.where(side === 1L))))
     }),
     // -- edge support/embeddedness: bridge-vs-clique edge classification --
     "kg_edge_support" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.edgeSupport(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.edgeSupport(kgTriples(s, dir))),
     // -- k-truss: edge-level community cores (k=3, convergence-checked) --
     "kg_entity_ktruss" -> ((s, dir) =>
       graft.kg.graph.GraphOps.ktrussOnEdges(entityEdges(s, dir))),
     // -- clustering coefficient: neighborhood interlinkedness per entity --
     "kg_clustering_coeff" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.clusteringCoefficient(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.clusteringCoefficient(kgTriples(s, dir))),
     // -- degree histogram: the hub-skew diagnostic for the entity graph --
     "kg_degree_hist" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.degreeHistogram(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.degreeHistogram(kgTriples(s, dir))),
     // -- sibling BGP: postings in the same city as S001-requiring postings
     "kg_sibling_query" -> ((s, dir) => {
       import graft.kg.query.TripleStore, TripleStore.TriplePattern
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.siblingQuery(s.read.parquet(root), via = "locatedIn",
+      TripleStore.siblingQuery(committedTriples(s, dir), via = "locatedIn",
         constraints = Seq(TriplePattern("requiresSkill", obj = Some("S001"))))
     }),
     // -- k-core: robustly-connected entities (k=2, convergence-checked) --
@@ -349,9 +316,7 @@ object SparkEntry {
       graft.kg.graph.GraphOps.harmonicCentralityOnEdges(entityEdges(s, dir))),
     // -- lift-scored edges: association strength for graph pruning --
     "kg_edge_lift" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.edgeLift(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.edgeLift(kgTriples(s, dir))),
     // -- weighted shortest paths: converged min-cost from the seed set --
     "kg_entity_wsp" -> ((s, dir) =>
       graft.kg.graph.GraphOps.shortestPathsOnWeightedEdges(
@@ -368,17 +333,13 @@ object SparkEntry {
       graft.kg.graph.GraphOps.pagerankWeightedOnEdges(
         entityWeightedEdges(s, dir))),
     "kg_entity_pagerank_weighted_pinned" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerankWeighted(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.pagerankWeighted(kgTriples(s, dir))),
     // incremental co-occurrence maintenance: base = docs with id%5 != 4
     // plays the committed half-edge state; the id%5 == 4 shard folds in via
     // shard-local pair derivation + ONE anti-join (base never rescanned at
     // the mention level — co-occurrence is per-doc)
     "kg_cooc_increment" -> ((s, dir) => {
-      val t = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
+      val t = kgTriples(s, dir)
       graft.kg.graph.GraphOps.incrementalCoocEdges(
         graft.kg.graph.GraphOps.halfCoocEdges(
           t.where(pmod(col("subj").cast("long"), lit(5)) =!= 4)),
@@ -405,9 +366,7 @@ object SparkEntry {
     "kg_entailed_triples" -> ((s, dir) => {
       import graft.kg.query.Ontology
       Ontology.entailTriples(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
+        kgTriples(s, dir),
         Ontology.transitiveClosure(Ontology.taxonomyDf(s)))
     }),
     // -- label propagation: density-respecting communities (vs CC's ---------
@@ -423,9 +382,7 @@ object SparkEntry {
     // -- KG-embedding training data: filtered negative samples (TransE-style)
     "kg_negative_samples" -> ((s, dir) =>
       graft.kg.train.EmbeddingData.negativeSamples(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
+        kgTriples(s, dir),
         pred = "requiresSkill",
         vocab = graft.kg.io.Dictionaries.gazSkills.map(_.entity_id).distinct.sorted)),
     // -- head-corruption half of the Bordes protocol: the subject domain is
@@ -434,9 +391,7 @@ object SparkEntry {
     "kg_negative_samples_subj" -> ((s, dir) => {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       graft.kg.train.EmbeddingData.negativeSamplesSubject(
-        Pipeline.allTriples(
-          SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-          .select(col("subj"), col("pred"), col("obj")),
+        kgTriples(s, dir),
         pred = "requiresSkill",
         subjVocab = s.range(n).select(col("id").as("vi"),
           col("id").cast("string").as("v")),
@@ -455,11 +410,7 @@ object SparkEntry {
     // store (single hash-agg of conditional aggregates, no per-column join)
     "kg_property_table" -> ((s, dir) => {
       import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      TripleStore.propertyTable(s.read.parquet(root))
+      TripleStore.propertyTable(committedTriples(s, dir))
     }),
     // incremental maintenance of the same view: base = docs with id%5 != 4
     // plays the committed state (wide table + store); the id%5 == 4 shard
@@ -467,11 +418,7 @@ object SparkEntry {
     // Shares kg_property_table's from-scratch oracle — the merge identity.
     "kg_property_increment" -> ((s, dir) => {
       import graft.kg.query.TripleStore
-      val root = TripleStore.materializedTripleTable(
-        s, Pipeline.allTriplesRaw(
-          SyntheticCorpus.materializedPostings(s, dir),
-          Pipeline.defaultGazetteers(s)), tag = dir)
-      val t = s.read.parquet(root).select(col("subj"), col("pred"), col("obj"))
+      val t = committedTriples(s, dir).select(col("subj"), col("pred"), col("obj"))
       val isShard = pmod(col("subj").cast("long"), lit(5)) === 4
       val base = t.where(!isShard)
       TripleStore.propertyTableIncrement(
@@ -481,12 +428,8 @@ object SparkEntry {
     // operator, scored on a deterministically-degraded predictor (10%
     // hash-dropped FNs + the negative sampler's guaranteed FPs)
     "kg_eval_pr" -> ((s, dir) => {
-      val gold = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
-      val keepH = conv(substring(md5(
-        concat_ws("|", col("subj"), col("pred"), col("obj"))), 1, 15), 16, 10)
-        .cast("long")
+      val gold = kgTriples(s, dir)
+      val keepH = hash60(concat_ws("|", col("subj"), col("pred"), col("obj")))
       val kept = gold.where(pmod(keepH, lit(10L)) =!= 0)
       val fps = graft.kg.train.EmbeddingData.negativeSamples(
         gold, pred = "requiresSkill",
@@ -496,16 +439,12 @@ object SparkEntry {
     }),
     // -- link prediction: resource-allocation scores for the missing edges
     "kg_link_prediction" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.linkPredictionRA(Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj")))),
+      graft.kg.graph.GraphOps.linkPredictionRA(kgTriples(s, dir))),
     // -- chain BGP through the ontology: each posting's skills WITH their
     // direct categories (?s requiresSkill ?o1 . ?o1 is_a ?o2)
     "kg_chain_query" -> ((s, dir) => {
       import graft.kg.query.{Ontology, TripleStore}
-      val t = Pipeline.allTriples(
-        SyntheticCorpus.materializedPostings(s, dir), Pipeline.defaultGazetteers(s))
-        .select(col("subj"), col("pred"), col("obj"))
+      val t = kgTriples(s, dir)
       val ont = Ontology.taxonomyDf(s).select(col("child").as("subj"),
         lit("is_a").as("pred"), col("parent").as("obj"))
       TripleStore.chainQuery(t.union(ont), "requiresSkill", "is_a")

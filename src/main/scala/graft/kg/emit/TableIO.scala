@@ -1,7 +1,7 @@
 package graft.kg.emit
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -55,10 +55,8 @@ object TableIO {
   private def manifestDir(root: String): Path = Paths.get(root, "_manifests")
 
   /** Committed (pred, bucket) pairs from existing manifests. */
-  def committed(root: String): Seq[(String, Int)] = {
-    val dir = manifestDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    Files.list(dir).iterator().asScala
+  def committed(root: String): Seq[(String, Int)] =
+    entries(manifestDir(root))
       .map(_.getFileName.toString)
       .filter(_.endsWith(".json"))
       .map { n =>
@@ -66,8 +64,17 @@ object TableIO {
         val i = stem.lastIndexOf('_')
         (stem.substring(0, i), stem.substring(i + 1).toInt)
       }
-      .toSeq
-  }
+
+  /** The entries of directory `dir` (none if it is absent). The listing's
+    * stream holds an open directory descriptor, so it is closed here, not
+    * left to the garbage collector.
+    */
+  private def entries(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toSeq finally s.close()
+    }
 
   /** Drop triples belonging to already-committed partitions (resume filter). */
   def resumeFilter(spark: SparkSession, triples: DataFrame, root: String,
@@ -87,34 +94,34 @@ object TableIO {
   /** (pred, bucket) partition dirs present on disk — committed or not.
     * Filesystem metadata only (never reads data files).
     */
-  private def dataPartitions(root: String): Seq[(String, Int)] = {
-    val rootPath = Paths.get(root)
-    if (!Files.isDirectory(rootPath)) return Seq.empty
-    Files.list(rootPath).iterator().asScala
+  private def dataPartitions(root: String): Seq[(String, Int)] =
+    entries(Paths.get(root))
       .filter(_.getFileName.toString.startsWith("pred="))
       .flatMap { predDir =>
         val pred = predDir.getFileName.toString.stripPrefix("pred=")
-        Files.list(predDir).iterator().asScala
+        entries(predDir)
           .filter(_.getFileName.toString.startsWith("bucket="))
           .map(b => (pred, b.getFileName.toString.stripPrefix("bucket=").toInt))
-          .toSeq
-      }.toSeq
-  }
+      }
 
   private def dropUncommitted(root: String): Unit = {
     val done = committed(root).toSet
     dataPartitions(root).filterNot(done).foreach { case (pred, bucket) =>
-      deleteRecursively(Paths.get(root, s"pred=$pred", s"bucket=$bucket"))
+      deleteTree(s"$root/pred=$pred/bucket=$bucket")
     }
   }
 
-  /** Recursive delete (bench cleanup). */
-  def deleteTree(root: String): Unit = deleteRecursively(Paths.get(root))
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+  /** Recursive delete of `root` (a no-op if it is absent): the cleanup of
+    * uncommitted partitions, compacted dedup state and bench output. The
+    * walk does not follow symbolic links, and its stream is closed.
+    */
+  def deleteTree(root: String): Unit = {
+    val p = Paths.get(root)
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val s = Files.walk(p)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally s.close()
+    }
   }
 
   /** The write layout: hash-distribute by (pred, bucket), so each partition

@@ -1,6 +1,7 @@
 package graft.kg.expr
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.Bridge
 
 /** Column-API + SQL surface for the custom Catalyst expressions. */
@@ -17,6 +18,15 @@ object functions {
     * path).
     */
   def kmin_values(h: Column, k: Int): Column = KMinValues.kminValues(h, k)
+
+  /** The portable 60-bit hash: the first 15 hex digits of `md5(c)` as a
+    * bigint. DuckDB computes the same value (`OpsEntries.duckHash60`), so
+    * every operator that hashes through it (sampling buckets, dedup
+    * fingerprints, walk and sketch hashes, negative sampling) has a
+    * bit-exact oracle. A change here must land in those oracles at once.
+    */
+  def hash60(c: Column): Column =
+    F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
   /** Hyperplane-LSH band keys (Column API only — the plane matrix is a
     * constructor parameter, not an expression, so no SQL registration).

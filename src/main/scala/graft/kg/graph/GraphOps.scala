@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{Fixpoint, Pin}
+import graft.kg.expr.functions.hash60
 
 /** Graph analytics over the MATERIALIZED knowledge graph — the consumption
   * side of KG construction (SURVEY.md §2: once (subj, pred, obj) triples are
@@ -450,9 +451,6 @@ object GraphOps {
       .select(col("n").as("entity"), col("d").as("dist_e6"))
   }
 
-  private val materializedEdgeTbl =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Materialize the symmetric co-occurrence edge relation as the
     * PRODUCTION layout: a parquet table bucketed AND sorted by `x`
     * (`buckets` files via the matching repartition), registered in the
@@ -461,8 +459,8 @@ object GraphOps {
     * of every per-iteration equi-join on `x` partitioned (and ordered)
     * FROM THE SCAN — no per-iteration edge exchange or sort; only the
     * node-cardinality rank relation moves. Build-once per (tag, buckets)
-    * with the [[graft.ops.Similarity.materializedIndex]] revalidation
-    * discipline; returns the catalog table name.
+    * as a [[graft.Standing]] table, checked on `edges/_SUCCESS` plus the
+    * catalog entry; returns the catalog table name.
     *
     * SCALING CONTRACT — what is measured vs what is inferred (BENCH.md
     * workload 3, 800-replica corpus, this single box):
@@ -484,47 +482,39 @@ object GraphOps {
     *    cluster ratio as an expectation, not a result.
     */
   def materializedEdgeTable(spark: org.apache.spark.sql.SparkSession,
-      triples: DataFrame, tag: String, buckets: Int = 64): String = {
-    val name = ("graft_cooc_edges_" + tag + "_b" + buckets)
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cooc-edges").toString
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      coocEdges(triples).repartition(buckets, col("x"))
-        .write.bucketBy(buckets, "x").sortBy("x")
-        .option("path", s"$dir/edges").format("parquet").saveAsTable(name)
-      name
-    }
-    val key = s"$tag/$buckets"
-    val cached = materializedEdgeTbl.getOrElseUpdate(key, build())
-    if (spark.catalog.tableExists(cached)) cached
-    else { val fresh = build(); materializedEdgeTbl.put(key, fresh); fresh }
-  }
-
-  private val materializedWeightedEdgeTbl =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+      triples: DataFrame, tag: String, buckets: Int = 64): String =
+    standingEdgeTable(spark, "cooc-edges", coocEdges(triples), tag, buckets)
 
   /** [[materializedEdgeTable]] for the WEIGHTED relation (x, y, w) — the
     * standing table the weighted iterated consumers
     * ([[pagerankWeightedOnEdges]], [[shortestPathsOnWeightedEdges]]) read;
-    * same bucketed+sorted-by-`x` layout and build-once revalidation.
+    * same bucketed+sorted-by-`x` layout and [[graft.Standing]] entry.
     */
   def materializedWeightedEdgeTable(spark: org.apache.spark.sql.SparkSession,
-      triples: DataFrame, tag: String, buckets: Int = 64): String = {
-    val name = ("graft_cooc_wedges_" + tag + "_b" + buckets)
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cooc-wedges").toString
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      coocEdgesWeighted(triples).repartition(buckets, col("x"))
-        .write.bucketBy(buckets, "x").sortBy("x")
-        .option("path", s"$dir/edges").format("parquet").saveAsTable(name)
+      triples: DataFrame, tag: String, buckets: Int = 64): String =
+    standingEdgeTable(spark, "cooc-wedges", coocEdgesWeighted(triples), tag, buckets)
+
+  private def standingEdgeTable(spark: org.apache.spark.sql.SparkSession,
+      kind: String, edges: => DataFrame, tag: String, buckets: Int): String = {
+    val name = s"graft_${kind}_${tag}_b$buckets".replaceAll("[^A-Za-z0-9_]", "_")
+    graft.Standing(kind, s"$tag/$buckets", dir =>
+        graft.Standing.committed(s"$dir/edges") && spark.catalog.tableExists(name)) { dir =>
+      writeEdgeTable(edges, name, buckets, s"$dir/edges")
       name
     }
-    val key = s"$tag/$buckets"
-    val cached = materializedWeightedEdgeTbl.getOrElseUpdate(key, build())
-    if (spark.catalog.tableExists(cached)) cached
-    else { val fresh = build(); materializedWeightedEdgeTbl.put(key, fresh); fresh }
+  }
+
+  /** Write `edges` as the catalog table `name` at `path`: `buckets` files
+    * (the matching repartition), bucketed AND sorted by `x` — the layout
+    * [[materializedEdgeTable]] and the graph scaling bench share. Replaces
+    * any table of that name.
+    */
+  private[graft] def writeEdgeTable(edges: DataFrame, name: String, buckets: Int,
+      path: String): Unit = {
+    edges.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
+    edges.repartition(buckets, col("x"))
+      .write.bucketBy(buckets, "x").sortBy("x")
+      .option("path", path).format("parquet").saveAsTable(name)
   }
 
   /** Entity COMMUNITIES: connected components over the co-occurrence graph
@@ -853,8 +843,6 @@ object GraphOps {
   /** [[randomWalks]] over an already-materialized symmetric edge relation. */
   def randomWalksOnEdges(edges: DataFrame, steps: Int = 3,
       walksPerNode: Int = 1): DataFrame = {
-    def hash60(s: Column): Column =
-      conv(substring(md5(s), 1, 15), 16, 10).cast("long")
     val init = edges.select(col("x")).distinct()
       .select(col("x"), explode(expr(s"sequence(0, ${walksPerNode - 1})")).as("r"))
       // length-prefixed walk id: injective over arbitrary string node ids
@@ -911,8 +899,6 @@ object GraphOps {
     */
   private def sketchRounds(edges: DataFrame, radius: Int, k: Int,
       salts: Int): Seq[DataFrame] = {
-    def hash60(c: Column): Column =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     def bottomK(rel: DataFrame): DataFrame =
       rel.groupBy(col("node"), pmod(col("h"), lit(salts)).as("s"))
         .agg(slice(array_sort(collect_set(col("h"))), 1, k).as("hs"))

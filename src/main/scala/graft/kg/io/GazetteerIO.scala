@@ -1,7 +1,7 @@
 package graft.kg.io
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,21 +73,19 @@ object GazetteerIO {
     (h >= "A" && h <= "Z") || (h >= "0" && h <= "9")
   }
 
-  private val written = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Harness helper: the in-code skills dictionary written once per JVM as a
     * TSV resource file, so a registered query exercises the full
     * file-load → validate → broadcast-join path against the same oracle as
-    * the in-code gazetteer.
+    * the in-code gazetteer. A [[graft.Standing]] artifact, checked on the
+    * file itself.
     */
-  def materializedSkillsTsv(): String =
-    written.getOrElseUpdate("skills", {
-      val dir = Files.createTempDirectory("graft-gazetteers")
-      val f = dir.resolve("skills.tsv")
+  def materializedSkillsTsv(): String = {
+    def tsv(dir: String) = Paths.get(dir, "skills.tsv")
+    graft.Standing("gazetteers", "skills", dir => Files.exists(tsv(dir))) { dir =>
       val lines = Dictionaries.gazSkills
         .map(g => s"${g.entity_id}\t${g.surface}\t${g.canonical}")
         .mkString("", "\n", "\n")
-      Files.write(f, lines.getBytes(StandardCharsets.UTF_8))
-      f.toString
-    })
+      Files.write(tsv(dir), lines.getBytes(StandardCharsets.UTF_8)).toString
+    }
+  }
 }

@@ -54,17 +54,15 @@ object SyntheticCorpus {
   def postings(spark: SparkSession, sfDir: String): DataFrame =
     fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
 
-  private val materialized = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The derivation above is *corpus prep* (SURVEY.md §2.1 R1: HTML→spans
     * flattening happens upstream; the pipeline's input IS the postings
     * table). This materializes the derived table to parquet once per JVM and
     * serves subsequent reads from it, so harness queries measure the
-    * pipeline over a real table scan instead of re-deriving per query.
+    * pipeline over a real table scan instead of re-deriving per query. A
+    * [[graft.Standing]] table: a deleted directory is rebuilt, not read.
     */
   def materializedPostings(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = materialized.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-postings").toString
+    val path = graft.Standing("postings", sfDir) { dir =>
       // File layout of the standing table (optimization guide §6): written
       // as session-parallelism many key-clustered files, NOT whatever the
       // derivation's partitioning happens to be. The derivation reads the
@@ -78,7 +76,7 @@ object SyntheticCorpus {
       postings(spark, sfDir).repartition(np, col("doc_id"))
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
     spark.read.parquet(path)
   }
 

@@ -185,13 +185,11 @@ object TripleStore {
     */
   def predicateKminSketches(triples: DataFrame, kSubj: Int = 64,
       kObj: Int = 8): DataFrame = {
-    def h60(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    import graft.kg.expr.functions.{hash60, kmin_values}
     triples
-      .select(col("pred"), h60(col("subj")).as("hs"), h60(col("obj")).as("ho"))
+      .select(col("pred"), hash60(col("subj")).as("hs"), hash60(col("obj")).as("ho"))
       .groupBy(col("pred"))
-      .agg(graft.kg.expr.functions.kmin_values(col("hs"), kSubj).as("ks"),
-        graft.kg.expr.functions.kmin_values(col("ho"), kObj).as("ko"))
+      .agg(kmin_values(col("hs"), kSubj).as("ks"), kmin_values(col("ho"), kObj).as("ko"))
   }
 
   /** The estimator over stored sketch state: exact COUNT below k,
@@ -235,30 +233,20 @@ object TripleStore {
         m("ko1", "ko2", kObj).as("ko"))
   }
 
-  private val materializedTbl =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Commit the raw (pre-dedup) triple relation once per `tag` as the
     * production `(pred, bucket)`-partitioned store
     * ([[graft.kg.emit.TableIO.writeTriplesDeduped]] — the fused
-    * single-exchange dedup+layout write) and return its root path; the
-    * same build-once / revalidate discipline as
-    * [[graft.kg.graph.GraphOps.materializedEdgeTable]]. `spark.read
-    * .parquet(root)` then carries `pred`/`bucket` as partition columns —
-    * what makes [[starQuery]]'s per-predicate selections prune.
+    * single-exchange dedup+layout write) and return its root path; a
+    * [[graft.Standing]] table. `spark.read.parquet(root)` then carries
+    * `pred`/`bucket` as partition columns — what makes [[starQuery]]'s
+    * per-predicate selections prune.
     */
   def materializedTripleTable(spark: SparkSession, rawTriples: DataFrame,
-      tag: String): String = {
-    def build(): String = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-triplestore").toString
+      tag: String): String =
+    graft.Standing("triplestore", tag) { root =>
       graft.kg.emit.TableIO.writeTriplesDeduped(spark, rawTriples, root)
       root
     }
-    val cached = materializedTbl.getOrElseUpdate(tag, build())
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(cached))) cached
-    else { val fresh = build(); materializedTbl.put(tag, fresh); fresh }
-  }
 
   /** CHAIN BGP — `?s p1 ?o1 . ?o1 p2 ?o2`: the object→SUBJECT join a star
     * or sibling query can't express (the path shape SPARQL planners order

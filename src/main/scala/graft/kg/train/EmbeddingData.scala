@@ -1,7 +1,9 @@
 package graft.kg.train
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.kg.expr.functions.hash60
 
 /** KG-embedding training-data generation — the step between the committed
   * triple store and a TransE/DistMult-style trainer (Bordes et al. 2013):
@@ -25,9 +27,6 @@ import org.apache.spark.sql.functions._
   * some true (s, p, o') drops out there — including o itself.
   */
 object EmbeddingData {
-
-  private def hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** Filtered negative samples for one predicate's triples. `vocab` is the
     * object vocabulary to corrupt into (size |vocab|, broadcast); emits

@@ -9,6 +9,7 @@ import graft.kg.expr.TokenGrams
 import graft.kg.expr.SignBands.signBands
 import graft.kg.expr.SignBandsAlgo
 import graft.kg.expr.VectorExprs.{dotProduct, l2Norm}
+import graft.kg.expr.functions.hash60
 
 /** Deduplication operators for a large-scale training-data pipeline: exact
   * (hash key), n-gram Jaccard (DF-capped shingle self-join + exact verify),
@@ -302,7 +303,7 @@ object Dedup {
     * measured ~2.5x cheaper at k=32).
     */
   private def portableBaseHash(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long") % PortableP
+    hash60(s) % PortableP
 
   /** The uncapped (doc_id, band, bucket) relation behind [[lshCandidates]]
     * — also the signature STATE a committed corpus persists for
@@ -461,7 +462,7 @@ object Dedup {
     val tok = corpus.select(col("doc_id"),
       explode(split(col("text"), " ")).as("t"))
       .select(col("doc_id"),
-        conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("hb"))
+        hash60(col("t")).as("hb"))
     val bitSums = (0 until 60).map { j =>
       sum(shiftright(col("hb"), 4 * (14 - j / 4) + j % 4).bitwiseAND(1L) * 2 - 1).as(s"b$j")
     }
@@ -788,7 +789,7 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(TokenGrams.exact(split(col("text"), " "), w)).as(Seq("pos", "g")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("start"),
-        conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("h"))
+        hash60(col("g")).as("h"))
 
   /** The CUT that [[duplicatePassages]] exists for — Lee et al.'s actual
     * transformation: every doc re-emitted with its cross-document-duplicated

@@ -152,12 +152,6 @@ object IncrementalDedup {
       .write.mode("overwrite").parquet(s"$stateDir/comps")
   }
 
-  /** The four state relations as of now: the base tables ∪ every COMMITTED
-    * increment. An increment is visible ONLY once its `_COMMITTED` marker
-    * exists — a crashed half-written `increments/<tag>/` is ignored by every
-    * reader, which is what makes [[commitIncrement]] crash-safe. Tag order is
-    * irrelevant to the relations (unions), so listing order doesn't matter.
-    */
   /** The active BASE root: `stateDir/_GENERATION` (written atomically by
     * [[compact]]) names the generation directory holding the folded base;
     * absent, the base is the original [[commitState]] layout at the root.
@@ -257,6 +251,12 @@ object IncrementalDedup {
         "fresh directory; on-disk state is not migrated in place")
   }
 
+  /** The four state relations as of now: the base tables ∪ every COMMITTED
+    * increment. An increment is visible ONLY once its `_COMMITTED` marker
+    * exists — a crashed half-written `increments/<tag>/` is ignored by every
+    * reader, which is what makes [[commitIncrement]] crash-safe. Tag order is
+    * irrelevant to the relations (unions), so listing order doesn't matter.
+    */
   private def stateRelations(spark: SparkSession, stateDir: String,
       asOf: Option[String] = None): State = {
     checkVersion(stateDir)
@@ -297,6 +297,7 @@ object IncrementalDedup {
   def compact(spark: SparkSession, stateDir: String): Unit = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
+    import graft.kg.emit.TableIO.deleteTree
     checkVersion(stateDir)
     val oldBase = baseRoot(stateDir)
     val prevFolded = foldedTagsOf(stateDir)
@@ -346,22 +347,16 @@ object IncrementalDedup {
     Files.move(tmp, Paths.get(stateDir, "_GENERATION"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally s.close()
-      }
-    folded.foreach(rmTree)
+    folded.foreach(p => deleteTree(p.toString))
     // crash-after-swap garbage from EARLIER compactions: increment dirs
     // whose tags were already retired are dead weight every reader skips —
     // sweep them here (the re-run-compact cleanup the docstring promises)
     visibleIncrements(stateDir, Set.empty)
       .filter(p => prevFolded.contains(p.getFileName.toString))
-      .foreach(rmTree)
-    if (oldBase != stateDir) rmTree(Paths.get(oldBase))
+      .foreach(p => deleteTree(p.toString))
+    if (oldBase != stateDir) deleteTree(oldBase)
     else Seq("reps", "members", "buckets", "pairs", "comps")
-      .foreach(sub => rmTree(Paths.get(stateDir, sub)))
+      .foreach(sub => deleteTree(s"$stateDir/$sub"))
   }
 
   /** Fold a shard INTO the committed state: after this, the state covers
@@ -601,28 +596,15 @@ object IncrementalDedup {
   /** Bump when the state layout or mechanics change. */
   val StateVersion: Int = 2
 
-  private val materializedStates = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Build-once committed state for a base corpus (per JVM, keyed by `tag` +
-    * [[StateVersion]], revalidated like the ANN indexes — the registered
-    * query commits the base ONCE and every run afterwards pays only the
-    * incremental cost).
+    * [[StateVersion]]; a [[graft.Standing]] table checked on `comps/_SUCCESS`,
+    * which [[commitState]] writes last — the registered query commits the
+    * base ONCE and every run afterwards pays only the incremental cost).
     */
-  def materializedState(spark: SparkSession, base: DataFrame, tag: String): String = {
-    def valid(dir: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "comps", "_SUCCESS"))
-    def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-dedup-state").toString
+  def materializedState(spark: SparkSession, base: DataFrame, tag: String): String =
+    graft.Standing("dedup-state", s"$tag/v$StateVersion",
+        dir => graft.Standing.committed(s"$dir/comps")) { dir =>
       commitState(spark, base, dir)
       dir
     }
-    val key = s"$tag/v$StateVersion"
-    val cached = materializedStates.getOrElseUpdate(key, build())
-    if (valid(cached)) cached
-    else {
-      val fresh = build()
-      materializedStates.put(key, fresh)
-      fresh
-    }
-  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.kg.expr.functions.hash60
+
 /** Deterministic corpus sampling — the data-mixing step of a training-data
   * pipeline (per-language / per-source mixture weights, held-out split
   * carving, downsampling boilerplate-heavy strata). Sampling at 100 TB must
@@ -33,8 +35,7 @@ object Sampling {
     * operators (and must land in the DuckDB oracles) at once.
     */
   private def saltedBucket(salt: String)(docId: Column): Column =
-    conv(substring(md5(concat(lit(salt), docId.cast("string"))), 1, 15), 16, 10)
-      .cast("long") % 10000L
+    hash60(concat(lit(salt), docId.cast("string"))) % 10000L
 
   /** Null-safe whitespace token count: NULL text → NULL tokens (matching
     * DuckDB's len(string_split(NULL))), independent of the session's

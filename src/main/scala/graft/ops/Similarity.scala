@@ -165,66 +165,36 @@ object Similarity {
     */
   val IndexVersion: Int = 2
 
-  private val materializedIdx = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Build-once IVF index: [[ivfAssign]] written as parquet PARTITIONED BY
     * cell_id (per JVM, keyed by `tag` + [[IndexVersion]]). At cluster scale
     * this is a real materialized index table (TableIO/Iceberg layout);
     * queries never rebuild the assignment, and the probe scan
-    * partition-prunes to the probed cells. The cached entry is REVALIDATED on
-    * every lookup (`_SUCCESS` must still exist — long-lived JVMs outlive tmp
-    * cleaners) and rebuilt if stale.
+    * partition-prunes to the probed cells. A [[graft.Standing]] table:
+    * revalidated on every lookup and rebuilt if stale.
     */
   def materializedIndex(spark: SparkSession, embeddings: DataFrame, tag: String,
-      nCells: Int = 16): String = {
-    def valid(dir: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
+      nCells: Int = 16): String =
+    graft.Standing("ivf-index", s"$tag/$nCells/v$IndexVersion") { dir =>
       ivfAssign(embeddings, nCells).write.mode("overwrite")
         .partitionBy("cell_id").parquet(dir)
       dir
     }
-    val key = s"$tag/$nCells/v$IndexVersion"
-    val cached = materializedIdx.getOrElseUpdate(key, build())
-    if (valid(cached)) cached
-    else {
-      val fresh = build()
-      materializedIdx.put(key, fresh)
-      fresh
-    }
-  }
-
-  private val materializedKmIdx =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[(Int, Seq[Long])])]
 
   /** Build-once k-means IVF index: centroids trained by [[KMeans.train]]
     * (integer Lloyd, driver-held k·d state), every vector assigned to its
     * nearest centroid by integer squared-Euclidean distance in ONE
     * broadcast+min_by pass, written partitioned by cell_id. Returns
     * (indexDir, centroids) — the centroids are the probe structure, so
-    * probing is a pure driver computation (zero Spark jobs). Same
-    * revalidation discipline as [[materializedIndex]].
+    * probing is a pure driver computation (zero Spark jobs). A
+    * [[graft.Standing]] table, like [[materializedIndex]].
     */
   def materializedKmeansIndex(spark: SparkSession, embeddings: DataFrame,
-      tag: String, nCells: Int = 16, iters: Int = 3): (String, Seq[(Int, Seq[Long])]) = {
-    def valid(dir: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    def build(): (String, Seq[(Int, Seq[Long])]) = {
+      tag: String, nCells: Int = 16, iters: Int = 3): (String, Seq[(Int, Seq[Long])]) =
+    graft.Standing("ivf-km-index", s"$tag/$nCells/$iters/km-v$IndexVersion") { dir =>
       val cents = KMeans.train(embeddings, nCells, iters)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-km-index").toString
       writeAssigned(embeddings, cents, dir, "overwrite")
       (dir, cents)
     }
-    val key = s"$tag/$nCells/$iters/km-v$IndexVersion"
-    val cached = materializedKmIdx.getOrElseUpdate(key, build())
-    if (valid(cached._1)) cached
-    else {
-      val fresh = build()
-      materializedKmIdx.put(key, fresh)
-      fresh
-    }
-  }
 
   /** Assign `embeddings` to FROZEN `cents` (one broadcast + min_by pass) and
     * write the (vec_id, emb, norm, cell_id) rows to `dir` partitioned by
@@ -269,9 +239,6 @@ object Similarity {
       StructField("cell_id", IntegerType, nullable = false)))
   }
 
-  private val materializedSqIdx =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Seq[(Int, Seq[Long])], Long)]
-
   /** Build-once scalar-quantized (int8-residual) IVF index — the compressed
     * variant of [[materializedKmeansIndex]], the standard public
     * IVF+quantized-residual construction: coarse centroids from the integer
@@ -282,14 +249,12 @@ object Similarity {
     * partitioned by cell_id. Everything that decides a code is integer
     * arithmetic, so the DuckDB oracle reproduces the index bit-exactly (same
     * rationale as [[KMeans]]). Returns (indexDir, centroids, s); centroids +
-    * s are the driver-held probe/decode structure (k·d + 1 longs). Same
-    * revalidation discipline as [[materializedIndex]].
+    * s are the driver-held probe/decode structure (k·d + 1 longs). A
+    * [[graft.Standing]] table, like [[materializedIndex]].
     */
   def materializedSqIndex(spark: SparkSession, embeddings: DataFrame,
-      tag: String, nCells: Int = 16, iters: Int = 3): (String, Seq[(Int, Seq[Long])], Long) = {
-    def valid(dir: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    def build(): (String, Seq[(Int, Seq[Long])], Long) = {
+      tag: String, nCells: Int = 16, iters: Int = 3): (String, Seq[(Int, Seq[Long])], Long) =
+    graft.Standing("ivf-sq-index", s"$tag/$nCells/$iters/sq-v$IndexVersion") { dir =>
       val session = spark
       import session.implicits._
       val cents = KMeans.train(embeddings, nCells, iters)
@@ -303,7 +268,6 @@ object Similarity {
         .select(expr("aggregate(rv, 0L, (acc, x) -> greatest(acc, abs(x)))").as("m"))
         .agg(max(col("m"))).head().getLong(0)
       val s = math.max(1L, (maxAbs + 126L) / 127L)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-sq-index").toString
       assigned
         // floor division via pmod (exact-multiple dividend), matching the
         // oracle's ((r % s) + s) % s construction; |r| <= 127*s makes the
@@ -314,15 +278,6 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
       (dir, cents, s)
     }
-    val key = s"$tag/$nCells/$iters/sq-v$IndexVersion"
-    val cached = materializedSqIdx.getOrElseUpdate(key, build())
-    if (valid(cached._1)) cached
-    else {
-      val fresh = build()
-      materializedSqIdx.put(key, fresh)
-      fresh
-    }
-  }
 
   /** ANN top-k over the compressed index: driver-side integer probe (zero
     * Spark jobs, as [[ivfKmeansTopK]]), a partition-pruned scan of the CODES
@@ -366,9 +321,6 @@ object Similarity {
         .withColumn("cos", dotProduct(col("emb"), col("qvv")) / (col("norm") * lit(qn))), k)
   }
 
-  private val materializedPqIdx = scala.collection.concurrent.TrieMap
-    .empty[String, (String, Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])]
-
   /** Build-once PRODUCT-QUANTIZED IVF index (Jégou et al. 2011, "Product
     * Quantization for Nearest Neighbor Search" — the construction behind
     * FAISS's IVFPQ): the residual space is split into `m` subspaces of
@@ -389,16 +341,14 @@ object Similarity {
     * integer distances — the published encode cost. Everything deciding a
     * code is integer arithmetic → the DuckDB oracle rebuilds the index
     * bit-exactly. Returns (indexDir, centroids, codebook) with codebook
-    * rows (u, cid, codeword). Same revalidation discipline as
+    * rows (u, cid, codeword). A [[graft.Standing]] table, like
     * [[materializedIndex]]; stored rows follow [[sqIndexSchema]] (codes are
     * an array<tinyint> of length m).
     */
   def materializedPqIndex(spark: SparkSession, embeddings: DataFrame,
       tag: String, nCells: Int = 16, iters: Int = 3, m: Int = 8,
-      nCode: Int = 16): (String, Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])]) = {
-    def valid(dir: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    def build(): (String, Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])]) = {
+      nCode: Int = 16): (String, Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])]) =
+    graft.Standing("ivf-pq-index", s"$tag/$nCells/$iters/$m/$nCode/pq-v$IndexVersion") { dir =>
       val session = spark
       import session.implicits._
       val cents = KMeans.train(embeddings, nCells, iters)
@@ -417,7 +367,6 @@ object Similarity {
         u <- 0 until m
       } yield (u, cid, rv.slice(u * sub, (u + 1) * sub))
       val cbDf = cb.toDF("u", "cid", "cw")
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-pq-index").toString
       assigned
         .select(col("vec_id"), col("cell_id"),
           posexplode(expr(
@@ -435,15 +384,6 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
       (dir, cents, cb)
     }
-    val key = s"$tag/$nCells/$iters/$m/$nCode/pq-v$IndexVersion"
-    val cached = materializedPqIdx.getOrElseUpdate(key, build())
-    if (valid(cached._1)) cached
-    else {
-      val fresh = build()
-      materializedPqIdx.put(key, fresh)
-      fresh
-    }
-  }
 
   /** ANN top-k over the product-quantized index via ASYMMETRIC DISTANCE
     * COMPUTATION — the published IVFPQ probe: because the query is not
