@@ -227,9 +227,11 @@ object SparkEntry {
       Pipeline.canonicalSurfacesIncremental(spans(s, dir), Dictionaries.titlesDf(s))),
     // -- graph analytics over the emitted KG: entity co-occurrence graph -----
     "kg_entity_pagerank" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerank(kgTriples(s, dir))),
+      graft.kg.graph.GraphOps.pagerankOnEdges(
+        graft.kg.graph.GraphOps.pinnedEdges(kgTriples(s, dir)))),
     "kg_entity_triangles" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.triangles(kgTriples(s, dir))),
+      graft.kg.graph.GraphOps.trianglesOnEdges(
+        graft.kg.graph.GraphOps.pinnedEdges(kgTriples(s, dir)))),
     "kg_entity_components" -> ((s, dir) =>
       graft.kg.graph.GraphOps.components(kgTriples(s, dir))),
     // the PRODUCTION physical path for the same logical pagerank: edges
@@ -287,7 +289,8 @@ object SparkEntry {
     }),
     // -- edge support/embeddedness: bridge-vs-clique edge classification --
     "kg_edge_support" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.edgeSupport(kgTriples(s, dir))),
+      graft.kg.graph.GraphOps.edgeSupportOnEdges(
+        graft.kg.graph.GraphOps.pinnedEdges(kgTriples(s, dir)))),
     // -- k-truss: edge-level community cores (k=3, convergence-checked) --
     "kg_entity_ktruss" -> ((s, dir) =>
       graft.kg.graph.GraphOps.ktrussOnEdges(entityEdges(s, dir))),
@@ -333,7 +336,8 @@ object SparkEntry {
       graft.kg.graph.GraphOps.pagerankWeightedOnEdges(
         entityWeightedEdges(s, dir))),
     "kg_entity_pagerank_weighted_pinned" -> ((s, dir) =>
-      graft.kg.graph.GraphOps.pagerankWeighted(kgTriples(s, dir))),
+      graft.kg.graph.GraphOps.pagerankWeightedOnEdges(
+        Pin(graft.kg.graph.GraphOps.coocEdgesWeighted(kgTriples(s, dir))))),
     // incremental co-occurrence maintenance: base = docs with id%5 != 4
     // plays the committed half-edge state; the id%5 == 4 shard folds in via
     // shard-local pair derivation + ONE anti-join (base never rescanned at
@@ -628,7 +632,8 @@ object SparkEntry {
        |deg AS (SELECT x, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1)""".stripMargin
 
   /** Integer PageRank, the SAME three iterations unrolled (damping 85/100,
-    * jump 150000, floor-div contributions) — bit-exact vs GraphOps.pagerank.
+    * jump 150000, floor-div contributions) — bit-exact vs
+    * GraphOps.pagerankOnEdges.
     */
   private val entityPagerankOracle: String = {
     def step(prev: String, out: String) =
@@ -687,7 +692,7 @@ object SparkEntry {
   /** Personalized integer PageRank — the SAME unrolled iterations as
     * [[entityPagerankOracle]] with the teleport term restricted to the seed
     * IN-list (init 1e6 on seeds, per-round jump 150000 on seeds) — bit-exact
-    * vs GraphOps.pagerankPersonalized.
+    * vs GraphOps.pagerankPersonalizedOnEdges.
     */
   private val entityPagerankSeededOracle: String = {
     val seedsIn = "('S001', 'LANG00')"
@@ -879,8 +884,8 @@ object SparkEntry {
        |CROSS JOIN n""".stripMargin
 
   /** Multi-source BFS, the SAME 4 statically-unrolled frontier rounds as
-    * GraphOps.bfs (frontier = nodes at d = round-1; least() skips NULL on both
-    * engines) — bit-exact.
+    * GraphOps.bfsOnEdges (frontier = nodes at d = round-1; least() skips
+    * NULL on both engines) — bit-exact.
     */
   private val entityBfsOracle: String = {
     val seedsIn = "('S001', 'LANG00')"
@@ -1109,8 +1114,8 @@ object SparkEntry {
        |FROM triples t JOIN reach r ON t.obj = r.child""".stripMargin
 
   /** Label propagation, the SAME 3 statically-unrolled synchronous rounds
-    * as GraphOps.labelPropagation (neighbor-label count → max count → min
-    * label among ties) — bit-exact. MATERIALIZED on the per-round CTEs:
+    * as GraphOps.labelPropagationOnEdges (neighbor-label count → max count
+    * → min label among ties) — bit-exact. MATERIALIZED on the per-round CTEs:
     * each is referenced twice by the next round; un-hinted, DuckDB
     * re-inlines the upstream chain per reference (the ktruss/kcore
     * lesson).
@@ -1262,7 +1267,7 @@ object SparkEntry {
   }
 
   /** Deterministic random walks, the SAME 3 statically-unrolled hash-argmin
-    * steps as GraphOps.randomWalks (min 60-bit hash per walk → min
+    * steps as GraphOps.randomWalksOnEdges (min 60-bit hash per walk → min
     * neighbor among ties) — bit-exact. Split as CTE chain + final select so
     * [[walkPairsOracle]] reuses the identical walk derivation.
     */
@@ -1299,7 +1304,7 @@ object SparkEntry {
 
   /** Skip-gram pair counts over the identical walk derivation: one
     * self-join on walk_id within ±2 positions + count — bit-exact vs
-    * EmbeddingData.skipGramPairs(GraphOps.randomWalks(...)).
+    * EmbeddingData.skipGramPairs(GraphOps.randomWalksOnEdges(...)).
     */
   private val walkPairsOracle: String =
     s"""$randomWalksCtes

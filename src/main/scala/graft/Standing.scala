@@ -4,6 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.sql.graft.Bridge
+
+import graft.kg.emit.TableIO
+
 /** The one cache of the library's STANDING tables: artifacts built once per
   * JVM and then read by many queries (the ANN indexes, the committed dedup
   * state and triple store, the bucketed edge tables, the derived postings
@@ -14,7 +18,10 @@ import scala.collection.concurrent.TrieMap
   * One revalidation rule: every later lookup re-checks `valid` over the
   * cached directory (by default [[committed]], `<dir>/_SUCCESS` exists)
   * and rebuilds into a NEW directory when the check fails — a long-lived
-  * JVM outlives tmp cleaners, and a dead path must never be returned.
+  * JVM outlives tmp cleaners, and a dead path must never be returned. The
+  * lookup that drops a failed entry deletes what is left of its
+  * directory, and every directory built here is deleted when the JVM
+  * exits ([[Bridge.tempDir]]), so no run leaves its tables behind.
   *
   * `site` names the builder: it prefixes the key (so two sites never share
   * an entry) and the temp directory. A site's key carries every input that
@@ -32,13 +39,16 @@ private[graft] object Standing {
   def apply[A](site: String, key: String, valid: String => Boolean = committed)(
       build: String => A): A = {
     val k = s"$site/$key"
-    val (_, result) = tables.get(k).filter { case (dir, _) => valid(dir) }.getOrElse {
-      val dir = Files.createTempDirectory(s"graft-$site").toString
-      val built = (dir, build(dir))
-      tables.put(k, built)
-      built
+    tables.get(k) match {
+      case Some((dir, result)) if valid(dir) => result.asInstanceOf[A]
+      case failed =>
+        // only the lookup that unmaps the failed entry deletes its directory
+        failed.foreach(e => if (tables.remove(k, e)) TableIO.deleteTree(e._1))
+        val dir = Bridge.tempDir(s"graft-$site")
+        val built = build(dir)
+        tables.put(k, (dir, built))
+        built
     }
-    result.asInstanceOf[A]
   }
 
   /** A Spark write into `dir` committed: its `_SUCCESS` marker exists. */

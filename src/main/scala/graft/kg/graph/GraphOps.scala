@@ -9,12 +9,19 @@ import graft.kg.expr.functions.hash60
 /** Graph analytics over the MATERIALIZED knowledge graph — the consumption
   * side of KG construction (SURVEY.md §2: once (subj, pred, obj) triples are
   * emitted, ranking/structure queries over the entity graph are what users
-  * run on them). Both operators work on the entity CO-OCCURRENCE graph:
+  * run on them). Every operator works on the entity CO-OCCURRENCE graph:
   * entities are linked when they appear in the same posting (the classic
   * bipartite-projection construction — doc→entity triples projected onto the
   * entity side). All arithmetic is exact integer fixed-point (e6) so the
   * DuckDB oracles compare bit-identically, and every iteration is unrolled
   * identically on both sides.
+  *
+  * The edge-consuming operators take their edge relation as an argument
+  * (the `OnEdges` entries): [[pinnedEdges]] or `Pin(coocEdgesWeighted(…))`
+  * in an exploration session, [[materializedEdgeTable]] /
+  * [[materializedWeightedEdgeTable]] at production. So the pinned and
+  * bucketed twins of a query differ only in the relation their caller
+  * passes.
   */
 object GraphOps {
 
@@ -32,27 +39,27 @@ object GraphOps {
     * DUPLICATE pairs, not heavy groups; the distinct's partial aggregation
     * collapses them map-side before the shuffle.
     */
-  def coocEdges(triples: DataFrame): DataFrame = {
-    val half = halfCoocEdges(triples)
-    half.union(half.select(col("y").as("x"), col("x").as("y")))
-  }
+  def coocEdges(triples: DataFrame): DataFrame = mirror(halfCoocEdges(triples))
+
+  /** The symmetric closure of an x < y half relation: every row once more
+    * with `x` and `y` swapped; any other column rides along.
+    */
+  private def mirror(half: DataFrame): DataFrame =
+    half.union(half.select(half.columns.toSeq.map {
+      case "x" => col("y").as("x")
+      case "y" => col("x").as("y")
+      case c => col(c)
+    }: _*))
 
   /** The x < y HALF of [[coocEdges]] — the canonical STORED form of the
     * graph (each undirected edge once; TableIO-bucket it by `x` at scale
     * and mirror on read). Also the state relation of
-    * [[incrementalCoocEdges]].
+    * [[incrementalCoocEdges]]. It is [[halfCoocEdgesWeighted]] without
+    * `w`: column pruning drops the unused count, so the plan keeps a
+    * plain cross-doc distinct.
     */
   def halfCoocEdges(triples: DataFrame): DataFrame =
-    triples.select(col("subj").as("d"), col("obj").as("e"))
-      .groupBy(col("d")).agg(collect_set(col("e")).as("es"))
-      // value-ordered (least, greatest) pairs over distinct set elements:
-      // position pairs i < j map 1:1 to unique unordered value pairs
-      .select(explode(expr(
-        "flatten(transform(es, (a, i) -> " +
-          "transform(slice(es, i + 2, size(es)), b -> " +
-          "struct(least(a, b) AS x, greatest(a, b) AS y))))")).as("p"))
-      .select(col("p.x").as("x"), col("p.y").as("y"))
-      .distinct()
+    halfCoocEdgesWeighted(triples).select(col("x"), col("y"))
 
   /** Incremental edge maintenance — the daily-shard path of the graph
     * family (the [[graft.ops.IncrementalDedup]] discipline applied to the
@@ -70,21 +77,22 @@ object GraphOps {
 
   /** Weighted co-occurrence edges (x, y, w): w = number of distinct docs
     * co-mentioning the pair — the edge-strength signal consumers rank by.
-    * Same derivation as [[halfCoocEdges]] with the cross-doc distinct
-    * replaced by a count (still partial-aggregatable map-side), mirrored
-    * after so both directions carry the weight.
+    * The per-doc pairs are counted across docs by [[halfCoocEdgesWeighted]]
+    * (partial-aggregatable map-side, like the distinct of [[coocEdges]])
+    * and mirrored after, so both directions carry the weight.
     */
-  def coocEdgesWeighted(triples: DataFrame): DataFrame = {
-    val half = halfCoocEdgesWeighted(triples)
-    half.union(half.select(col("y").as("x"), col("x").as("y"), col("w")))
-  }
+  def coocEdgesWeighted(triples: DataFrame): DataFrame =
+    mirror(halfCoocEdgesWeighted(triples))
 
   /** The x < y HALF of [[coocEdgesWeighted]] — the canonical stored form
-    * (each undirected edge once with its co-mention count).
+    * (each undirected edge once with its co-mention count), and the one
+    * per-doc pair derivation of the graph family.
     */
   def halfCoocEdgesWeighted(triples: DataFrame): DataFrame =
     triples.select(col("subj").as("d"), col("obj").as("e"))
       .groupBy(col("d")).agg(collect_set(col("e")).as("es"))
+      // value-ordered (least, greatest) pairs over distinct set elements:
+      // position pairs i < j map 1:1 to unique unordered value pairs
       .select(explode(expr(
         "flatten(transform(es, (a, i) -> " +
           "transform(slice(es, i + 2, size(es)), b -> " +
@@ -102,8 +110,8 @@ object GraphOps {
     * order under log is unchanged, and the integer discipline beats a
     * float log at oracle parity). The classic use is PRUNING the graph
     * before the iterated analytics: hub-entity edges with lift ≤ 1e6
-    * carry no signal and are the exact edges that make [[pagerank]] /
-    * [[triangles]] expensive.
+    * carry no signal and are the exact edges that make
+    * [[pagerankOnEdges]] / [[trianglesOnEdges]] expensive.
     *
     * Shape: per-entity doc counts and the total are one hash-agg each
     * over the distinct (doc, entity) relation; the scalar total joins by
@@ -127,39 +135,7 @@ object GraphOps {
         expr("(nd * w * 1000000L) div (mx * my)").as("lift_e6"))
   }
 
-  /** WEIGHTED integer PageRank: per-edge contribution
-    * (85 · r_src · w) div (100 · wdeg_src), wdeg = Σ w over the source's
-    * edges — rank flows proportionally to co-occurrence strength. Same
-    * static unrolling, same single pinned action, same bit-exact integer
-    * oracle discipline as [[pagerank]]; hub entities (huge wdeg) are
-    * plain hash-agg groups, never driver state. Long-arithmetic envelope
-    * (ANSI mode throws on overflow rather than corrupting): safe while
-    * max(r)·max(w) < 2^63/85 ≈ 1.1e17 — e.g. ranks ≤ 1e9 (total mass of a
-    * 1000-node community) × weights ≤ 1e8; past that promote the
-    * contribution expression to DECIMAL(38,0) on both engine and oracle.
-    * Output: (entity, rank_e6).
-    */
-  def pagerankWeighted(triples: DataFrame, iters: Int = 3): DataFrame =
-    pagerankWeightedOnEdges(Pin(coocEdgesWeighted(triples)), iters)
-
-  /** [[pagerankWeighted]] over an already-materialized symmetric weighted
-    * edge relation (x, y, w) — the [[materializedWeightedEdgeTable]]
-    * production entry.
-    */
-  def pagerankWeightedOnEdges(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val wdeg = edges.groupBy(col("x")).agg(sum(col("w")).as("wdeg"))
-    val ed = edges.join(wdeg, "x")
-    val init = wdeg.select(col("x").as("n"), lit(1000000L).as("r"))
-    val fin = (1 to iters).foldLeft(init) { (ranks, _) =>
-      ed.join(ranks, col("x") === col("n"))
-        .select(col("y"), expr("(85 * r * w) div (100 * wdeg)").as("c"))
-        .groupBy(col("y")).agg((sum(col("c")) + lit(150000L)).as("r"))
-        .select(col("y").as("n"), col("r"))
-    }
-    fin.select(col("n").as("entity"), col("r").as("rank_e6"))
-  }
-
-  /** Both analytics consume the edge set MANY times (once per rank
+  /** The graph analytics consume the edge set MANY times (once per rank
     * iteration / three times in the triangle join). Without pinning, every
     * consumer re-derives edges from the corpus-sized triple relation —
     * measured on the unpinned plan: 1080 physical nodes, the triple
@@ -179,7 +155,15 @@ object GraphOps {
     */
   def pinnedEdges(triples: DataFrame): DataFrame = Pin(coocEdges(triples))
 
-  /** Integer PageRank over the co-occurrence graph, `iters` synchronous
+  /** The one degree aggregate: (x, deg), deg = `agg` over x's edges — the
+    * edge count unless the caller passes another aggregate.
+    */
+  private def degrees(edges: DataFrame, agg: Column = count(lit(1))): DataFrame =
+    edges.groupBy(col("x")).agg(agg.as("deg"))
+
+  /** Integer PageRank over a symmetric co-occurrence edge relation (x, y)
+    * — [[pinnedEdges]] in a session, or [[materializedEdgeTable]] (the
+    * production shape: TableIO bucketed by `x`). `iters` synchronous
     * iterations statically unrolled (damping 85/100, jump mass 0.15e6;
     * rank_e6 starts at 1e6 per node). Per-edge contribution is the exact
     * floor (85·r_src) div (100·deg_src) — deterministic, so the oracle's
@@ -195,64 +179,67 @@ object GraphOps {
     * next to edges) are what move each round. Static unrolling needs no
     * per-iteration driver round-trip ([[graft.kg.canon.ConnectedComponents]]
     * pays one per round only for its convergence test; a fixed-K rank loop
-    * does not) — the whole computation is the one [[pinnedEdges]] action
-    * plus one final action.
+    * does not) — the whole computation is the one edge pin plus one final
+    * action.
     * Output: (entity, rank_e6).
     */
-  def pagerank(triples: DataFrame, iters: Int = 3): DataFrame =
-    pagerankOnEdges(pinnedEdges(triples), iters)
-
-  /** [[pagerank]] over an already-materialized symmetric edge relation
-    * (x, y) — for callers that maintain the co-occurrence graph as a table
-    * (the production shape: TableIO bucketed by `x`) or need to time /
-    * reuse the derivation separately.
-    */
-  def pagerankOnEdges(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-    val ed = edges.join(deg, "x")
-    val init = deg.select(col("x").as("n"), lit(1000000L).as("r"))
-    val fin = (1 to iters).foldLeft(init) { (ranks, _) =>
-      ed.join(ranks, col("x") === col("n"))
-        .select(col("y"), expr("(85 * r) div (100 * deg)").as("c"))
-        .groupBy(col("y")).agg((sum(col("c")) + lit(150000L)).as("r"))
-        .select(col("y").as("n"), col("r"))
-    }
-    fin.select(col("n").as("entity"), col("r").as("rank_e6"))
-  }
+  def pagerankOnEdges(edges: DataFrame, iters: Int = 3): DataFrame =
+    rank(edges, lit(1L), iters, _ => lit(true))
 
   /** PERSONALIZED integer PageRank (random walk with restart): teleport
     * mass returns ONLY to the `seeds` — the "entities related to X" ranking
     * consumers ask of a KG (seed a skill, get the skills/titles/locations
     * its postings gravitate around). Same statically-unrolled bit-exact
-    * integer discipline as [[pagerank]]: r0 = 1e6 on seeds / 0 elsewhere,
-    * per-iteration r(n) = seedJump(n) + Σ (85·r_src) div (100·deg_src)
-    * with seedJump = 150000 on seeds / 0 elsewhere (0.15 of the |S|·1e6
-    * total mass split equally over the seed set). The seed set is a
-    * driver-held literal IN-list — seeds are a user query parameter
+    * integer discipline as [[pagerankOnEdges]]: r0 = 1e6 on seeds / 0
+    * elsewhere, per-iteration r(n) = seedJump(n) + Σ (85·r_src) div
+    * (100·deg_src) with seedJump = 150000 on seeds / 0 elsewhere (0.15 of
+    * the |S|·1e6 total mass split equally over the seed set). The seed set
+    * is a driver-held literal IN-list — seeds are a user query parameter
     * (metadata-scale), never a relation. Output: (entity, rank_e6); rank 0
     * marks nodes unreached within `iters` hops.
-    */
-  def pagerankPersonalized(triples: DataFrame, seeds: Seq[String],
-      iters: Int = 3): DataFrame =
-    pagerankPersonalizedOnEdges(pinnedEdges(triples), seeds, iters)
-
-  /** [[pagerankPersonalized]] over an already-materialized symmetric edge
-    * relation — same table-backed production entry as [[pagerankOnEdges]].
     */
   def pagerankPersonalizedOnEdges(edges: DataFrame, seeds: Seq[String],
       iters: Int = 3): DataFrame = {
     require(seeds.nonEmpty, "personalized pagerank needs a seed set")
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    rank(edges, lit(1L), iters, _.isin(seeds: _*))
+  }
+
+  /** WEIGHTED integer PageRank over a symmetric weighted edge relation
+    * (x, y, w) — `Pin(coocEdgesWeighted(…))` in a session, or
+    * [[materializedWeightedEdgeTable]] at production: per-edge contribution
+    * (85 · r_src · w) div (100 · wdeg_src), wdeg = Σ w over the source's
+    * edges — rank flows proportionally to co-occurrence strength. Same
+    * static unrolling and bit-exact integer oracle discipline as
+    * [[pagerankOnEdges]]; hub entities (huge wdeg) are plain hash-agg
+    * groups, never driver state. Long-arithmetic envelope (ANSI mode
+    * throws on overflow rather than corrupting): safe while max(r)·max(w)
+    * < 2^63/85 ≈ 1.1e17 — e.g. ranks ≤ 1e9 (total mass of a 1000-node
+    * community) × weights ≤ 1e8; past that promote the contribution
+    * expression to DECIMAL(38,0) on both engine and oracle.
+    * Output: (entity, rank_e6).
+    */
+  def pagerankWeightedOnEdges(edges: DataFrame, iters: Int = 3): DataFrame =
+    rank(edges, col("w"), iters, _ => lit(true))
+
+  /** The one rank loop of the three PageRank entries: edge weight `w` (a
+    * Column over the edge relation), wdeg = Σ w per source, r0 = 1e6 on
+    * the nodes `seed` accepts and 0 elsewhere, and per iteration
+    * r(n) = jump(n) + Σ (85·r_src·w) div (100·wdeg_src), jump = 150000 on
+    * seed nodes and 0 elsewhere. With w = 1 and every node a seed this is
+    * plain PageRank to the integer.
+    */
+  private def rank(edges: DataFrame, w: Column, iters: Int,
+      seed: Column => Column): DataFrame = {
+    def onSeeds(n: Column, v: Long) = when(seed(n), lit(v)).otherwise(lit(0L))
+    val deg = degrees(edges, sum(w))
     val ed = edges.join(deg, "x")
-    def onSeeds(n: org.apache.spark.sql.Column, v: Long) =
-      when(n.isin(seeds: _*), lit(v)).otherwise(lit(0L))
     val init = deg.select(col("x").as("n"), onSeeds(col("x"), 1000000L).as("r"))
     val fin = (1 to iters).foldLeft(init) { (ranks, _) =>
       ed.join(ranks, col("x") === col("n"))
-        .select(col("y"), expr("(85 * r) div (100 * deg)").as("c"))
+        .select(col("y"),
+          call_function("div", lit(85) * col("r") * w, lit(100) * col("deg")).as("c"))
         .groupBy(col("y")).agg(sum(col("c")).as("flow"))
-        .select(col("y").as("n"),
-          (col("flow") + onSeeds(col("y"), 150000L)).as("r"))
+        .select(col("y").as("n"), (col("flow") + onSeeds(col("y"), 150000L)).as("r"))
     }
     fin.select(col("n").as("entity"), col("r").as("rank_e6"))
   }
@@ -278,33 +265,30 @@ object GraphOps {
     * Shape per round: one hash-agg (degrees ≥ k → survivors) + two LEFT
     * SEMI joins restricting edges to surviving endpoints — all equi-keyed,
     * hub nodes are ordinary hash-agg groups.
+    *
+    * The edge relation is a bucketed table scan or an already-pinned
+    * relation, deliberately NOT re-pinned here: that would copy a whole
+    * bucketed table per run and discard its scan layout; round 1 re-reads
+    * it 2–3×, every later round reads the pinned survivor set. An empty
+    * survivor set converges in the round that finds it (the empty core is
+    * fully determined — never a runaway throw).
     * Output: (entity, deg_in_core) for k-core members at the fixpoint.
-    */
-  def kcore(triples: DataFrame, k: Int = 2, maxRounds: Int = 1024): DataFrame =
-    kcoreOnEdges(pinnedEdges(triples), k, maxRounds)
-
-  /** [[kcore]] over an already-materialized symmetric edge relation (the
-    * OnEdges contract: a bucketed table scan or an already-pinned
-    * relation — the input is deliberately NOT re-pinned, which would copy
-    * a whole bucketed table per run and discard its scan layout; round 1
-    * re-reads it 2–3×, every later round reads the pinned survivor set).
-    * An empty survivor set converges in the round that finds it (the
-    * empty core is fully determined — never a runaway throw).
     */
   def kcoreOnEdges(edges: DataFrame, k: Int = 2, maxRounds: Int = 1024): DataFrame =
     peel("k-core peel", maxRounds, edges.select(col("x"), col("y"))) { e =>
-      val surv = e.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+      val surv = degrees(e)
         .where(col("deg") >= k).select(col("x"), lit(true).as("kx"))
       e.join(surv, Seq("x"), "left")
         .join(surv.select(col("x").as("y"), col("kx").as("ky")), Seq("y"), "left")
         .select(col("x"), col("y"), (col("kx").isNotNull && col("ky").isNotNull).as("keep"))
-    }.groupBy(col("x")).agg(count(lit(1)).as("deg_in_core"))
-      .select(col("x").as("entity"), col("deg_in_core"))
+    }.transform(degrees(_))
+      .select(col("x").as("entity"), col("deg").as("deg_in_core"))
 
-  /** The [[kcore]] / [[ktruss]] peel loop: round i pins `step` over the
-    * edges kept by round i−1 (round 1: all of `edges`), each flagged
-    * `keep`, and the [[graft.Fixpoint]] test reads (edges, kept edges) off
-    * the pin's job — all kept is the fixpoint, none kept the empty result.
+  /** The [[kcoreOnEdges]] / [[ktrussOnEdges]] peel loop: round i pins
+    * `step` over the edges kept by round i−1 (round 1: all of `edges`),
+    * each flagged `keep`, and the [[graft.Fixpoint]] test reads (edges,
+    * kept edges) off the pin's job — all kept is the fixpoint, none kept
+    * the empty result.
     * Returns the kept rows of the last round.
     */
   private def peel(what: String, maxRounds: Int, edges: DataFrame)(
@@ -324,7 +308,7 @@ object GraphOps {
     * range. Output: (bucket, n_entities, min_deg, max_deg).
     */
   def degreeHistogram(triples: DataFrame): DataFrame =
-    pinnedEdges(triples).groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    degrees(pinnedEdges(triples))
       .select(col("deg"), (length(bin(col("deg"))) - 1).cast("bigint").as("bucket"))
       .groupBy(col("bucket")).agg(
         count(lit(1)).as("n_entities"),
@@ -333,12 +317,12 @@ object GraphOps {
   /** Multi-source BFS hop distance from a seed entity set — the
     * "how far is every entity from X" neighborhood query consumers run on
     * a KG (seed a skill, get its 1-hop/2-hop halo; the exploration dual of
-    * [[pagerankPersonalized]]'s soft ranking). `rounds` rounds statically
-    * unrolled under the [[pagerank]] discipline: no per-round driver
-    * round-trip, and the oracle unrolls the identical rounds so the hash
-    * match is exact; entities unreached within `rounds` hops are absent
-    * (an R-round BFS is the honest semantics — it IS the radius-R
-    * neighborhood).
+    * [[pagerankPersonalizedOnEdges]]'s soft ranking). `rounds` rounds
+    * statically unrolled under the [[pagerankOnEdges]] discipline: no
+    * per-round driver round-trip, and the oracle unrolls the identical
+    * rounds so the hash match is exact; entities unreached within `rounds`
+    * hops are absent (an R-round BFS is the honest semantics — it IS the
+    * radius-R neighborhood).
     *
     * Shape per round: the unrolling makes the FRONTIER a static predicate
     * (`d = round − 1` — BFS discovers a node only from distance-(i−1)
@@ -350,16 +334,10 @@ object GraphOps {
     * [[materializedEdgeTable]]); only distances move.
     * Output: (entity, dist), seeds at 0, reached entities only.
     */
-  def bfs(triples: DataFrame, seeds: Seq[String], rounds: Int = 4): DataFrame =
-    bfsOnEdges(pinnedEdges(triples), seeds, rounds)
-
-  /** [[bfs]] over an already-materialized symmetric edge relation. */
   def bfsOnEdges(edges: DataFrame, seeds: Seq[String],
       rounds: Int = 4): DataFrame = {
     require(seeds.nonEmpty, "bfs needs a seed set")
-    val init = edges.select(col("x").as("n")).distinct()
-      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d"))
-    val fin = (1 to rounds).foldLeft(init) { (dist, i) =>
+    val fin = (1 to rounds).foldLeft(seeded(edges, seeds)) { (dist, i) =>
       val frontier = dist.where(col("d") === lit((i - 1).toLong))
       val prop = edges.join(frontier, col("x") === col("n"))
         .groupBy(col("y")).agg(min(col("d") + 1).as("nd"))
@@ -373,81 +351,87 @@ object GraphOps {
       .select(col("n").as("entity"), col("d").as("dist"))
   }
 
-  /** WEIGHTED shortest paths from a seed set — [[bfs]]'s weighted dual:
-    * hop cost = 1e6 div w (stronger co-occurrence = cheaper hop, exact
-    * integer floor; w ≥ 1e6 co-mentions → cost 0 is fine for a
-    * nonnegative relaxation), dist = min cost over ALL paths.
-    * CONVERGENCE-CHECKED Bellman–Ford (the [[kcore]]/CC discipline):
-    * relaxation rounds run until none improves any node's distance — true
-    * shortest paths at any graph diameter, with `maxRounds` a THROWING
-    * runaway bound, never a silent hop truncation (the radius-limited
-    * semantics lives in [[hopBoundedShortestPaths]] under its honest
-    * name). Distances are monotone nonincreasing and bounded, so an
-    * unchanged (reached-count, distance-SUM) signature is a sound
-    * fixpoint test — any improvement strictly grows the count or shrinks
-    * the sum (a hash-based signature would not be: colliding or
+  /** The distance relation before round 1 of the seeded traversals: every
+    * node of `edges` as (n, d), d = 0 on the seeds and null elsewhere.
+    */
+  private def seeded(edges: DataFrame, seeds: Seq[String]): DataFrame =
+    edges.select(col("x").as("n")).distinct()
+      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d"))
+
+  /** Hop costs (x, y, c) of a weighted edge relation: c = 1e6 div w. */
+  private def hopCosts(wEdges: DataFrame): DataFrame =
+    wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
+
+  /** The one relaxation step of the weighted traversals: every reached
+    * node offers d + c to its neighbors, and each node keeps the least of
+    * its distance and its best offer (least() skips nulls on both
+    * engines, so an unreached node without an offer stays null). The
+    * round's input distance rides along as `p`.
+    */
+  private def relax(edges: DataFrame, dist: DataFrame): DataFrame = {
+    val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
+      .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
+    dist.join(prop, col("n") === col("y"), "left")
+      .select(col("n"), least(col("d"), col("nd")).as("d"), col("d").as("p"))
+  }
+
+  /** WEIGHTED shortest paths from a seed set over a symmetric weighted
+    * edge relation (x, y, w) — `Pin(coocEdgesWeighted(…))` in a session,
+    * or [[materializedWeightedEdgeTable]] at production — and
+    * [[bfsOnEdges]]'s weighted dual: hop cost = 1e6 div w (stronger
+    * co-occurrence = cheaper hop, exact integer floor; w ≥ 1e6
+    * co-mentions → cost 0 is fine for a nonnegative relaxation), dist =
+    * min cost over ALL paths.
+    * CONVERGENCE-CHECKED Bellman–Ford (the [[kcoreOnEdges]]/CC
+    * discipline): relaxation rounds run until none improves any node's
+    * distance — true shortest paths at any graph diameter, with
+    * `maxRounds` a THROWING runaway bound, never a silent hop truncation
+    * (the radius-limited semantics lives in [[hopBoundedShortestPaths]]
+    * under its honest name). Distances are monotone nonincreasing and
+    * bounded, so an unchanged (reached-count, distance-SUM) signature is a
+    * sound fixpoint test — any improvement strictly grows the count or
+    * shrinks the sum (a hash-based signature would not be: colliding or
     * cancelling hash deltas could declare convergence mid-relaxation);
     * the sum is DECIMAL(38,0) so no distance scale can overflow it.
     * The node-cardinality distance relation is pinned per round to cut
     * the iterated lineage ([[graft.Fixpoint]]); the pin keeps the round's
-    * input distances next to its output, so both signatures are observed
-    * on the pin's own job (no extra action). Unlike BFS there is no static frontier predicate —
-    * a cheaper path can re-relax an already-reached node, so each round
-    * joins edges against the full reached set: one equi-join + min
-    * hash-agg + left join, edges loop-invariant
-    * ([[materializedEdgeTable]] layout at production).
+    * input distances (`p`) next to its output, so both signatures are
+    * observed on the pin's own job (no extra action). Unlike BFS there is
+    * no static frontier predicate — a cheaper path can re-relax an
+    * already-reached node, so each round ([[relax]]) joins edges against
+    * the full reached set: one equi-join + min hash-agg + left join,
+    * edges loop-invariant ([[materializedEdgeTable]] layout at
+    * production).
     * Output: (entity, dist_e6), seeds at 0, reached entities only.
-    */
-  def shortestPaths(triples: DataFrame, seeds: Seq[String],
-      maxRounds: Int = 1024): DataFrame =
-    shortestPathsOnWeightedEdges(Pin(coocEdgesWeighted(triples)), seeds, maxRounds)
-
-  /** [[shortestPaths]] over an already-materialized symmetric weighted
-    * edge relation (x, y, w) — the [[materializedWeightedEdgeTable]]
-    * production entry (hop costs derived from w inside).
     */
   def shortestPathsOnWeightedEdges(wEdges: DataFrame, seeds: Seq[String],
       maxRounds: Int = 1024): DataFrame = {
     require(seeds.nonEmpty, "shortestPaths needs a seed set")
-    val edges = wEdges.select(col("x"), col("y"), expr("1000000 div w").as("c"))
+    val edges = hopCosts(wEdges)
     // (reached count, distance sum) of a distance column
     def signature(d: Column) = Seq(count(d), sum(d.cast("decimal(38,0)")))
-    // each round's pin carries the distances before the round (p) next to
-    // those after it (d), so its job observes both signatures
-    val dist = Fixpoint("shortest-path relaxation", maxRounds,
-      edges.select(col("x").as("n")).distinct()
-        .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d")),
-      signature(col("p")) ++ signature(col("d"))) { dist =>
-      val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
-        .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
-      dist.join(prop, col("n") === col("y"), "left")
-        .select(col("n"), least(col("d"), col("nd")).as("d"), col("d").as("p"))
-    } { r => r.getLong(0) == r.getLong(2) && r.get(1) == r.get(3) }
+    val dist = Fixpoint("shortest-path relaxation", maxRounds, seeded(edges, seeds),
+      signature(col("p")) ++ signature(col("d")))(relax(edges, _)) {
+      r => r.getLong(0) == r.getLong(2) && r.get(1) == r.get(3)
+    }
     dist.where(col("d").isNotNull)
       .select(col("n").as("entity"), col("d").as("dist_e6"))
   }
 
-  /** Min-cost paths WITHIN a hop radius — the radius-R semantics the
-    * fixed-unroll used to (mis)serve under the shortest-paths name: dist =
-    * min cost over paths of ≤ `rounds` hops, the weighted analog of
-    * [[bfs]]'s radius-R halo (and like it, honest fixed-R semantics: the
-    * rounds ARE the contract, statically unrolled with no per-round driver
-    * action). Use [[shortestPaths]] when you mean the true fixpoint.
+  /** Min-cost paths WITHIN a hop radius over a symmetric weighted edge
+    * relation (x, y, w) — the radius-R semantics the fixed-unroll used to
+    * (mis)serve under the shortest-paths name: dist = min cost over paths
+    * of ≤ `rounds` hops, the weighted analog of [[bfsOnEdges]]'s radius-R
+    * halo (and like it, honest fixed-R semantics: the rounds ARE the
+    * contract, statically unrolled with no per-round driver action). Use
+    * [[shortestPathsOnWeightedEdges]] when you mean the true fixpoint.
     */
-  def hopBoundedShortestPaths(triples: DataFrame, seeds: Seq[String],
+  def hopBoundedShortestPaths(wEdges: DataFrame, seeds: Seq[String],
       rounds: Int = 4): DataFrame = {
     require(seeds.nonEmpty, "hopBoundedShortestPaths needs a seed set")
-    val edges = Pin(coocEdgesWeighted(triples)
-      .select(col("x"), col("y"), expr("1000000 div w").as("c")))
-    val init = edges.select(col("x").as("n")).distinct()
-      .select(col("n"), when(col("n").isin(seeds: _*), lit(0L)).as("d"))
-    val fin = (1 to rounds).foldLeft(init) { (dist, _) =>
-      val prop = edges.join(dist.where(col("d").isNotNull), col("x") === col("n"))
-        .groupBy(col("y")).agg(min(col("d") + col("c")).as("nd"))
-      dist.join(prop, col("n") === col("y"), "left")
-        .select(col("n"), least(col("d"), col("nd")).as("d"))
-    }
-    fin.where(col("d").isNotNull)
+    val edges = hopCosts(wEdges)
+    (1 to rounds).foldLeft(seeded(edges, seeds))((dist, _) => relax(edges, dist))
+      .where(col("d").isNotNull)
       .select(col("n").as("entity"), col("d").as("dist_e6"))
   }
 
@@ -537,7 +521,8 @@ object GraphOps {
         coalesce(col("component"), col("entity")).as("component"))
   }
 
-  /** Per-entity triangle counts over the co-occurrence graph — the local
+  /** Per-entity triangle counts over a symmetric co-occurrence edge
+    * relation ([[pinnedEdges]] for the registered query) — the local
     * clustering signal (how interlinked an entity's neighborhood is).
     * Enumeration uses the DEGREE-ORDERED orientation (each undirected edge
     * points from its lower (deg, id) endpoint): every triangle is counted
@@ -550,8 +535,10 @@ object GraphOps {
     * orientation-independence the pairing verifies.
     * Output: (entity, n_tri) for entities in ≥ 1 triangle.
     */
-  def triangles(triples: DataFrame): DataFrame =
-    trianglesOnEdges(pinnedEdges(triples))
+  def trianglesOnEdges(edges: DataFrame): DataFrame =
+    triangleTriples(edges)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("entity"))
+      .groupBy(col("entity")).agg(count(lit(1)).as("n_tri"))
 
   /** The degree-ordered triangle enumeration shared by [[trianglesOnEdges]]
     * and [[edgeSupportOnEdges]]: every triangle exactly once as (a, b, c)
@@ -559,7 +546,7 @@ object GraphOps {
     * when value-ordered edges are needed).
     */
   private def triangleTriples(edges: DataFrame): DataFrame = {
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    val deg = degrees(edges)
     val und = edges.where(col("x") < col("y"))
     val ord = und
       .join(deg.select(col("x"), col("deg").as("dx")), "x")
@@ -576,13 +563,8 @@ object GraphOps {
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"))
   }
 
-  /** [[triangles]] over an already-materialized symmetric edge relation. */
-  def trianglesOnEdges(edges: DataFrame): DataFrame =
-    triangleTriples(edges)
-      .select(explode(array(col("a"), col("b"), col("c"))).as("entity"))
-      .groupBy(col("entity")).agg(count(lit(1)).as("n_tri"))
-
-  /** Per-edge triangle SUPPORT and EMBEDDEDNESS — the edge-strength dual
+  /** Per-edge triangle SUPPORT and EMBEDDEDNESS over a symmetric edge
+    * relation ([[pinnedEdges]] for the registered query) — the edge-strength dual
     * of [[clusteringCoefficient]] and the building block of k-truss
     * decompositions: supp = triangles through the edge (= common
     * neighbors of its endpoints), emb_e6 = supp·1e6 div
@@ -591,30 +573,13 @@ object GraphOps {
     * entirely inside a clique, 0 = a pure bridge. Bridges with high lift
     * but zero embeddedness are the classic "spurious co-occurrence"
     * signature. Enumeration is the same degree-ordered join as
-    * [[triangles]] (hot entities bounded at O(√m) join groups); each
+    * [[trianglesOnEdges]] (hot entities bounded at O(√m) join groups); each
     * triangle credits its three value-normalized edges through one
     * explode + hash-agg. Output: (x, y, supp, emb_e6) for every x < y
     * edge, zero-support edges included via left join.
     */
-  def edgeSupport(triples: DataFrame): DataFrame =
-    edgeSupportOnEdges(pinnedEdges(triples))
-
-  /** Per-(x<y)-edge triangle counts over a symmetric edge relation —
-    * shared by [[edgeSupportOnEdges]] and the [[ktruss]] peel rounds.
-    */
-  private def edgeTriangleSupport(edges: DataFrame): DataFrame =
-    triangleTriples(edges)
-      .select(explode(array(
-        struct(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y")),
-        struct(least(col("b"), col("c")).as("x"), greatest(col("b"), col("c")).as("y")),
-        struct(least(col("a"), col("c")).as("x"), greatest(col("a"), col("c")).as("y"))))
-        .as("e"))
-      .select(col("e.x").as("x"), col("e.y").as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("supp"))
-
-  /** [[edgeSupport]] over an already-materialized symmetric edge relation. */
   def edgeSupportOnEdges(edges: DataFrame): DataFrame = {
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+    val deg = degrees(edges)
     val supp = edgeTriangleSupport(edges)
     edges.where(col("x") < col("y"))
       .join(deg.select(col("x"), col("deg").as("dx")), "x")
@@ -627,11 +592,24 @@ object GraphOps {
           expr("(supp * 1000000) div (dx + dy - 2 - supp)")).as("emb_e6"))
   }
 
+  /** Per-(x<y)-edge triangle counts over a symmetric edge relation —
+    * shared by [[edgeSupportOnEdges]] and the [[ktrussOnEdges]] peel rounds.
+    */
+  private def edgeTriangleSupport(edges: DataFrame): DataFrame =
+    triangleTriples(edges)
+      .select(explode(array(
+        struct(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y")),
+        struct(least(col("b"), col("c")).as("x"), greatest(col("b"), col("c")).as("y")),
+        struct(least(col("a"), col("c")).as("x"), greatest(col("a"), col("c")).as("y"))))
+        .as("e"))
+      .select(col("e.x").as("x"), col("e.y").as("y"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("supp"))
+
   /** k-TRUSS peel — the edge-level dense-substructure filter one notch
-    * above [[kcore]] (every surviving edge sits in ≥ k−2 triangles WITHIN
+    * above [[kcoreOnEdges]] (every surviving edge sits in ≥ k−2 triangles WITHIN
     * the truss; a k-truss is the standard community-core definition that
     * a hub-spoke star can't fake, since spokes have zero support).
-    * CONVERGENCE-CHECKED like [[kcore]]: support-filter rounds run until
+    * CONVERGENCE-CHECKED like [[kcoreOnEdges]]: support-filter rounds run until
     * one removes no edge — the result IS the k-truss at any cascade depth,
     * never a fixed-round truncated superset; `maxRounds` is a runaway
     * bound that THROWS when exceeded. Each round pins its input edges
@@ -639,31 +617,25 @@ object GraphOps {
     * are the survivor labeling (the set didn't change, so its
     * within-truss supports are already computed).
     * Each round is one degree-ordered triangle enumeration over the
-    * surviving edges (the [[triangles]] join, O(√m)-bounded hot groups) +
-    * one explode/hash-agg + one left-join filter — all equi-keyed.
-    * Output: (x, y, supp) for x < y edges of the truss, supp counted
-    * within it.
-    */
-  def ktruss(triples: DataFrame, k: Int = 3, maxRounds: Int = 1024): DataFrame =
-    ktrussOnEdges(pinnedEdges(triples), k, maxRounds)
-
-  /** [[ktruss]] over an already-materialized symmetric edge relation.
+    * surviving edges (the [[trianglesOnEdges]] join, O(√m)-bounded hot
+    * groups) + one explode/hash-agg + one left-join filter — all
+    * equi-keyed.
     * Each round's half (with supports) is eagerly checkpointed
     * (graph-sized, the [[pinnedEdges]] discipline) — load-bearing, not
     * hygiene: the triangle enumeration self-joins its input 3×, so an
     * un-materialized round-i half would re-execute the whole round-(i−1)
     * computation per reference (3^rounds plan blow-up; measured 24 s →
     * ~7 s at sf0.1 when pinned).
+    * Output: (x, y, supp) for x < y edges of the truss, supp counted
+    * within it.
     */
   def ktrussOnEdges(edges: DataFrame, k: Int = 3, maxRounds: Int = 1024): DataFrame = {
-    def sym(half: DataFrame) =
-      half.union(half.select(col("y").as("x"), col("x").as("y")))
     // input deliberately not re-pinned (the kcoreOnEdges contract): round 1
     // re-reads the caller's materialized relation a few times, later rounds
     // read the pinned per-round relation
     val half = edges.where(col("x") < col("y")).select(col("x"), col("y"))
     peel("k-truss peel", maxRounds, half) { h =>
-      h.join(edgeTriangleSupport(sym(h)), Seq("x", "y"), "left")
+      h.join(edgeTriangleSupport(mirror(h)), Seq("x", "y"), "left")
         .select(col("x"), col("y"), coalesce(col("supp"), lit(0L)).as("supp"))
         .withColumn("keep", col("supp") >= k - 2)
     }.select(col("x"), col("y"), col("supp"))
@@ -673,7 +645,7 @@ object GraphOps {
     * neighborhood is, normalized: lcc = 2·tri / (deg·(deg−1)) in exact
     * integer fixed-point (e6, floor) — 1e6 means "my neighbors all know
     * each other" (a tight skill cluster), 0 a pure star hub. Composes the
-    * degree-ordered [[triangles]] enumeration with the degree agg over ONE
+    * degree-ordered [[trianglesOnEdges]] enumeration with the degree agg over ONE
     * pinned edge relation (no second derivation); entities in no triangle
     * left-join to 0. Long envelope: safe while n_tri < 2^63/2e6 ≈ 4.6e12
     * per entity (a degree-3e6 clique member) — DECIMAL past that.
@@ -681,8 +653,7 @@ object GraphOps {
     */
   def clusteringCoefficient(triples: DataFrame): DataFrame = {
     val edges = pinnedEdges(triples)
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-    deg.join(trianglesOnEdges(edges).withColumnRenamed("entity", "x"),
+    degrees(edges).join(trianglesOnEdges(edges).withColumnRenamed("entity", "x"),
         Seq("x"), "left")
       .select(col("x").as("entity"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
@@ -718,19 +689,15 @@ object GraphOps {
     * experiment REGRESSED the walk family (see [[randomWalksOnEdges]]);
     * contrast [[ktrussOnEdges]], whose rounds re-execute a triangle
     * SELF-JOIN and measured 24 → 4.6 s pinned.
-    * Output: (entity, label).
-    */
-  def labelPropagation(triples: DataFrame, rounds: Int = 3): DataFrame =
-    labelPropagationOnEdges(pinnedEdges(triples), rounds)
-
-  /** [[labelPropagation]] over an already-materialized symmetric edge
-    * relation. The ROUNDS ARE THE CONTRACT (the [[bfs]] radius
+    *
+    * The ROUNDS ARE THE CONTRACT (the [[bfsOnEdges]] radius
     * precedent, stated honestly): synchronous LPA can oscillate forever
     * between two label states (a single edge already 2-cycles), so an
     * unconditional run-to-fixpoint loop is not total — this operator is
     * the bounded fixed-R variant, and
     * [[labelPropagationConvergedOnEdges]] is the fixpoint variant with
     * the oscillation guard.
+    * Output: (entity, label).
     */
   def labelPropagationOnEdges(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val fin = (1 to rounds).foldLeft(lpaInit(edges))((labs, _) => lpaStep(edges, labs))
@@ -775,12 +742,6 @@ object GraphOps {
     * node-cardinality, whose own job counts the labels that differ from
     * each ([[graft.Fixpoint]]); no other action.
     * Output: (entity, label).
-    */
-  def labelPropagationConverged(triples: DataFrame, maxRounds: Int = 64): DataFrame =
-    labelPropagationConvergedOnEdges(pinnedEdges(triples), maxRounds)
-
-  /** [[labelPropagationConverged]] over a materialized symmetric edge
-    * relation.
     */
   def labelPropagationConvergedOnEdges(edges: DataFrame,
       maxRounds: Int = 64): DataFrame = {
@@ -836,11 +797,6 @@ object GraphOps {
     * not merely when it is referenced twice.
     * Output: (walk_id, step, node), steps+1 rows per walk.
     */
-  def randomWalks(triples: DataFrame, steps: Int = 3,
-      walksPerNode: Int = 1): DataFrame =
-    randomWalksOnEdges(pinnedEdges(triples), steps, walksPerNode)
-
-  /** [[randomWalks]] over an already-materialized symmetric edge relation. */
   def randomWalksOnEdges(edges: DataFrame, steps: Int = 3,
       walksPerNode: Int = 1): DataFrame = {
     val init = edges.select(col("x")).distinct()
@@ -886,13 +842,16 @@ object GraphOps {
     * is (d+1)·k/salts with NO adversarial skew possible; `salts` is the
     * knob that bounds per-group state at web scale. `radius` is a
     * semantic parameter (the r of the neighborhood function), not a
-    * convergence loop — radius-R is the contract, like [[bfs]].
+    * convergence loop — radius-R is the contract, like [[bfsOnEdges]].
     * Output: (entity, reach_est) — exact |N(v, radius)| below k, the KMV
     * estimate at ≥ k.
     */
-  def reachSketch(triples: DataFrame, radius: Int = 2, k: Int = 8,
-      salts: Int = 16): DataFrame =
-    reachSketchOnEdges(pinnedEdges(triples), radius, k, salts)
+  def reachSketchOnEdges(edges: DataFrame, radius: Int = 2, k: Int = 8,
+      salts: Int = 16): DataFrame = {
+    require(radius >= 1, s"reachSketch needs radius >= 1 (got $radius)")
+    sketchEstimate(sketchRounds(edges, radius, k, salts).last, k, "reach_est")
+      .withColumnRenamed("node", "entity")
+  }
 
   /** The pinned (node, h) sketch relations at radii 1..`radius` — shared
     * by [[reachSketchOnEdges]] and [[harmonicCentralityOnEdges]].
@@ -934,14 +893,6 @@ object GraphOps {
           expr(s"cast(${k - 1} as decimal(38,0)) * ${M60}L div greatest(hk, 1L)"))
           .as(name))
 
-  /** [[reachSketch]] over an already-materialized symmetric edge relation. */
-  def reachSketchOnEdges(edges: DataFrame, radius: Int = 2, k: Int = 8,
-      salts: Int = 16): DataFrame = {
-    require(radius >= 1, s"reachSketch needs radius >= 1 (got $radius)")
-    sketchEstimate(sketchRounds(edges, radius, k, salts).last, k, "reach_est")
-      .withColumnRenamed("node", "entity")
-  }
-
   /** HARMONIC CENTRALITY estimated from the neighborhood-function profile
     * — HyperBall's headline application (Boldi & Vigna 2013: centrality =
     * Σ_u 1/d(v,u), computed radius-by-radius as Σ_r (|N(v,r)| −
@@ -955,11 +906,6 @@ object GraphOps {
     * the effective diameter contribute ~0 mass).
     * Output: (entity, est_r1, est_r2, …, harm_e6).
     */
-  def harmonicCentrality(triples: DataFrame, radius: Int = 2, k: Int = 8,
-      salts: Int = 16): DataFrame =
-    harmonicCentralityOnEdges(pinnedEdges(triples), radius, k, salts)
-
-  /** [[harmonicCentrality]] over a materialized symmetric edge relation. */
   def harmonicCentralityOnEdges(edges: DataFrame, radius: Int = 2,
       k: Int = 8, salts: Int = 16): DataFrame = {
     require(radius >= 1, s"harmonicCentrality needs radius >= 1 (got $radius)")
@@ -998,9 +944,8 @@ object GraphOps {
     */
   def linkPredictionRA(triples: DataFrame, maxDeg: Long = 64): DataFrame = {
     val edges = pinnedEdges(triples)
-    val deg = edges.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val byZ = edges.select(col("x").as("z"), col("y").as("n"))
-      .join(deg.select(col("x").as("z"), col("deg")), "z")
+      .join(degrees(edges).select(col("x").as("z"), col("deg")), "z")
       .where(col("deg") <= maxDeg)
     val cand = byZ.select(col("z"), col("n").as("a"), col("deg"))
       .join(byZ.select(col("z"), col("n").as("b")), "z")

@@ -94,8 +94,8 @@ object EmbeddingData {
   }
 
   /** Skip-gram pair counts from a walk corpus — the step between
-    * [[graft.kg.graph.GraphOps.randomWalks]] and a word2vec-style entity
-    * embedding trainer (Mikolov et al. 2013): every ordered (center,
+    * [[graft.kg.graph.GraphOps.randomWalksOnEdges]] and a word2vec-style
+    * entity embedding trainer (Mikolov et al. 2013): every ordered (center,
     * context) co-occurrence within ±`window` walk positions, counted over
     * the whole corpus. The counted table IS the trainer input (and is
     * vocabulary²-BOUNDED regardless of corpus size — same envelope as

@@ -281,8 +281,7 @@ object Sampling {
     * codegen'd projection (no explode). Exposed so the spec's monotonicity
     * fixture exercises THIS expression, not a test-local reimplementation.
     */
-  private[graft] def wsmpKey: Column = expr(
-    """array_min(transform(sequence(1L, weight), r ->
-      |  cast(conv(substring(md5(concat('wsmp:', cast(doc_id as string),
-      |    ':', cast(r as string))), 1, 15), 16, 10) as bigint)))""".stripMargin)
+  private[graft] def wsmpKey: Column =
+    array_min(transform(sequence(lit(1L), col("weight")), r =>
+      hash60(concat(lit("wsmp:"), col("doc_id").cast("string"), lit(":"), r.cast("string")))))
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * is the standard extension-library pattern: one file inside the
   * `org.apache.spark.sql` package exposing exactly the private calls the
   * library needs: the two Column/Expression conversions our custom
-  * expressions use, function registration, and the listener-bus drain.
+  * expressions use, function registration, the listener-bus drain and
+  * shutdown-deleted temp directories.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -39,4 +40,11 @@ object Bridge {
     */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A fresh directory `<java.io.tmpdir>/<prefix>-<uuid>` that Spark's
+    * shutdown hook deletes with its contents when the JVM exits
+    * (`Utils.createTempDir` registers it with `ShutdownHookManager`).
+    */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
 }

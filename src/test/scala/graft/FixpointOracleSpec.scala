@@ -15,7 +15,11 @@ import graft.kg.query.Ontology
   * ids), k-core and k-truss vs an iterative peel, weighted shortest paths
   * vs Dijkstra over `1e6 div w` costs, converged label propagation vs
   * synchronous rounds (min-label ties, the 2-cycle rule), and the taxonomy
-  * closure vs depth-first search. The graphs have self-loops, duplicate
+  * closure vs depth-first search. The fixed-round graph kernels run on the
+  * same graphs: the three PageRank entries (one rank loop) vs integer
+  * rounds over co-mention weights, BFS vs frontier rounds, and hop-bounded
+  * shortest paths (the relaxation step weighted shortest paths shares) vs
+  * synchronous Bellman–Ford rounds. The graphs have self-loops, duplicate
   * edges, isolated pairs, and the first one is empty.
   *
   * An undirected edge (a, b) is one document mentioning a and b, so the
@@ -73,6 +77,23 @@ class FixpointOracleSpec extends SparkTestBase {
   private def pairs(df: DataFrame): Map[String, String] =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
+  private def longs(df: DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The edge relations the entries read in a session. */
+  private def pinned(t: DataFrame) = GraphOps.pinnedEdges(t)
+  private def weighted(t: DataFrame) = Pin(GraphOps.coocEdgesWeighted(t))
+
+  /** w of every ordered pair of distinct co-mentioned nodes: the number of
+    * generated (non-loop) edges between them, one document each.
+    */
+  private def weights(g: Graph): Map[(String, String), Long] =
+    g.filter(e => e._1 != e._2)
+      .flatMap { case (a, b) => Seq(v(a) -> v(b), v(b) -> v(a)) }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+
+  private def seedsOf(i: Int): Seq[String] = if (i % 2 == 0) Seq(v(0)) else Seq(v(1), v(3))
+
   test("the generated graphs have every adversarial feature") {
     def unordered(e: (Int, Int)) = (e._1 min e._2, e._1 max e._2)
     val isolatedPair = (g: Graph) => g.exists { case (a, b) =>
@@ -123,7 +144,7 @@ class FixpointOracleSpec extends SparkTestBase {
     val wants = graphs.zipWithIndex.map { case (g, i) =>
       val k = 2 + i % 2
       val want = peel(adjacency(g), k).map { case (n, ns) => n -> ns.size.toLong }
-      assert(GraphOps.kcore(triples(g), k).collect()
+      assert(GraphOps.kcoreOnEdges(pinned(triples(g)), k).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap === want, s"graph $i, k=$k")
       want
     }
@@ -145,7 +166,7 @@ class FixpointOracleSpec extends SparkTestBase {
       val k = 3 + i % 2
       val es = adjacency(g).toSeq.flatMap { case (a, ns) => ns.filter(a < _).map(a -> _) }.toSet
       val want = peel(es, k)
-      assert(GraphOps.ktruss(triples(g), k).collect()
+      assert(GraphOps.ktrussOnEdges(pinned(triples(g)), k).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap === want, s"graph $i, k=$k")
       want
     }
@@ -154,11 +175,7 @@ class FixpointOracleSpec extends SparkTestBase {
 
   test("shortestPaths == Dijkstra over 1e6 div w costs") {
     def dijkstra(g: Graph, seeds: Seq[String]): Map[String, Long] = {
-      // w = co-mentioning documents: one per generated (non-loop) edge
-      val cost = g.filter(e => e._1 != e._2)
-        .flatMap { case (a, b) => Seq(v(a) -> v(b), v(b) -> v(a)) }
-        .groupMapReduce(identity)(_ => 1L)(_ + _)
-        .map { case ((a, b), w) => (a, b, 1000000L / w) }
+      val cost = weights(g).map { case ((a, b), w) => (a, b, 1000000L / w) }
       @tailrec def settle(dist: Map[String, Long], done: Set[String]): Map[String, Long] =
         dist.filter(d => !done(d._1)).minByOption(_._2) match {
           case None => dist
@@ -170,10 +187,67 @@ class FixpointOracleSpec extends SparkTestBase {
       settle(seeds.filter(nodes).map(_ -> 0L).toMap, Set.empty)
     }
     graphs.zipWithIndex.foreach { case (g, i) =>
-      val seeds = if (i % 2 == 0) Seq(v(0)) else Seq(v(1), v(3))
-      val got = GraphOps.shortestPaths(triples(g), seeds).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val seeds = seedsOf(i)
+      val got = longs(GraphOps.shortestPathsOnWeightedEdges(weighted(triples(g)), seeds))
       assert(got === dijkstra(g, seeds), s"graph $i, seeds $seeds")
+    }
+  }
+
+  test("the three rank entries == integer rank rounds over co-mention weights, 1–3 iterations") {
+    // r0 = 1e6 on seeds, 0 elsewhere; r(y) = jump(y) + Σ (85·r(x)·w) div
+    // (100·Σw(x)), jump = 150000 on seeds
+    def rounds(w: Map[(String, String), Long], iters: Int, seed: String => Boolean) = {
+      val wdeg = w.groupMapReduce(_._1._1)(_._2)(_ + _)
+      def onSeeds(n: String, m: Long) = if (seed(n)) m else 0L
+      (1 to iters).foldLeft(wdeg.map { case (n, _) => n -> onSeeds(n, 1000000L) }) { (r, _) =>
+        w.toSeq.groupMapReduce(_._1._2) {
+          case ((x, _), wx) => 85 * r(x) * wx / (100 * wdeg(x))
+        }(_ + _)
+          .map { case (y, flow) => y -> (flow + onSeeds(y, 150000L)) }
+      }
+    }
+    graphs.zipWithIndex.foreach { case (g, i) =>
+      val w = weights(g)
+      val once = w.map { case (e, _) => e -> 1L }
+      val (edges, wEdges, seeds) = (pinned(triples(g)), weighted(triples(g)), seedsOf(i))
+      (1 to 3).foreach { iters =>
+        assert(longs(GraphOps.pagerankOnEdges(edges, iters)) === rounds(once, iters, _ => true),
+          s"graph $i, plain, $iters iterations")
+        assert(longs(GraphOps.pagerankPersonalizedOnEdges(edges, seeds, iters)) ===
+          rounds(once, iters, seeds.contains), s"graph $i, seeds $seeds, $iters iterations")
+        assert(longs(GraphOps.pagerankWeightedOnEdges(wEdges, iters)) ===
+          rounds(w, iters, _ => true), s"graph $i, weighted, $iters iterations")
+      }
+    }
+    assert(graphs.exists(g => weights(g).values.exists(_ > 1L)), "no edge of weight > 1")
+  }
+
+  test("bfs at radius 4 == frontier rounds") {
+    graphs.zipWithIndex.foreach { case (g, i) =>
+      val adj = adjacency(g)
+      val seeds = seedsOf(i)
+      val want = (1 to 4).foldLeft(seeds.filter(adj.contains).map(_ -> 0L).toMap) { (dist, r) =>
+        dist ++ dist.collect { case (n, d) if d == r - 1 => adj(n) }.flatten
+          .filterNot(dist.contains).map(_ -> r.toLong)
+      }
+      assert(longs(GraphOps.bfsOnEdges(pinned(triples(g)), seeds, rounds = 4)) === want,
+        s"graph $i, seeds $seeds")
+    }
+  }
+
+  test("hopBoundedShortestPaths at radius 3 == synchronous Bellman–Ford rounds") {
+    graphs.zipWithIndex.foreach { case (g, i) =>
+      val cost = weights(g).map { case (e, w) => e -> 1000000L / w }
+      val seeds = seedsOf(i)
+      val nodes = cost.keySet.map(_._1)
+      val want = (1 to 3).foldLeft(seeds.filter(nodes).map(_ -> 0L).toMap) { (dist, _) =>
+        val offers = cost.toSeq
+          .collect { case ((x, y), c) if dist.contains(x) => y -> (dist(x) + c) }
+          .groupMapReduce(_._1)(_._2)(math.min)
+        dist ++ offers.map { case (y, o) => y -> dist.get(y).fold(o)(math.min(_, o)) }
+      }
+      assert(longs(GraphOps.hopBoundedShortestPaths(weighted(triples(g)), seeds, rounds = 3)) ===
+        want, s"graph $i, seeds $seeds")
     }
   }
 
@@ -198,7 +272,7 @@ class FixpointOracleSpec extends SparkTestBase {
       go(None, adj.map { case (n, _) => n -> n }, 1)
     }
     graphs.zipWithIndex.foreach { case (g, i) =>
-      val op = GraphOps.labelPropagationConverged(triples(g), maxRounds)
+      val op = GraphOps.labelPropagationConvergedOnEdges(pinned(triples(g)), maxRounds)
       rounds(adjacency(g)) match {
         case Some(want) => assert(pairs(op) === want, s"graph $i")
         case None => intercept[IllegalStateException](op.collect())

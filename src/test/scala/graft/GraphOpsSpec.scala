@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.kg.graph.GraphOps
 
 /** Hand-computed coverage for the KG graph-analytics operators (their
@@ -18,6 +20,10 @@ class GraphOpsSpec extends SparkTestBase {
       ("D2", "m", "A"), ("D2", "m", "B"), ("D3", "m", "C"), ("D3", "m", "D"))
       .toDF("subj", "pred", "obj")
   }
+
+  /** The edge relations the entries read in a session. */
+  private def pinned(t: DataFrame) = GraphOps.pinnedEdges(t)
+  private def weighted(t: DataFrame) = Pin(GraphOps.coocEdgesWeighted(t))
 
   test("coocEdges: symmetric distinct pairs, duplicate co-occurrence collapses") {
     val e = GraphOps.coocEdges(triples).collect()
@@ -38,25 +44,34 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("materializedEdgeTable: bucketed-path pagerank equals the pinned path") {
-    val tbl = GraphOps.materializedEdgeTable(spark, triples, tag = "graphspec", buckets = 4)
-    val bucketed = GraphOps.pagerankOnEdges(spark.table(tbl), iters = 3).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val pinned = GraphOps.pagerank(triples, iters = 3).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(bucketed === pinned)
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
     // the production property: the table scan IS the bucketing — the plan
     // reads the edge side pre-partitioned (bucketed scan), so iterations
     // add no edge-side exchange
-    val plan = GraphOps.pagerankOnEdges(spark.table(tbl), iters = 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"expected a bucketed scan in:\n${plan.take(2000)}")
+    def assertBucketed(df: DataFrame) = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"),
+        s"expected a bucketed scan in:\n${plan.take(2000)}")
+    }
+    val tbl = spark.table(
+      GraphOps.materializedEdgeTable(spark, triples, tag = "graphspec", buckets = 4))
+    assert(rows(GraphOps.pagerankOnEdges(tbl, iters = 3)) ===
+      rows(GraphOps.pagerankOnEdges(pinned(triples), iters = 3)))
+    assertBucketed(GraphOps.pagerankOnEdges(tbl, iters = 3))
+    // the weighted table serves the weighted rank and the shortest paths
+    val wtbl = spark.table(
+      GraphOps.materializedWeightedEdgeTable(spark, triples, tag = "graphspec", buckets = 4))
+    assert(rows(GraphOps.pagerankWeightedOnEdges(wtbl, iters = 3)) ===
+      rows(GraphOps.pagerankWeightedOnEdges(weighted(triples), iters = 3)))
+    assert(rows(GraphOps.shortestPathsOnWeightedEdges(wtbl, Seq("A"))) ===
+      rows(GraphOps.shortestPathsOnWeightedEdges(weighted(triples), Seq("A"))))
+    assertBucketed(GraphOps.pagerankWeightedOnEdges(wtbl, iters = 3))
   }
 
   test("pagerankWeighted: one hand-unrolled weighted iteration") {
     // weights: A-B = 2 (D1, D2), A-C = B-C = C-D = 1; wdeg A=3 B=3 C=3 D=1
     // r1(A) = 150000 + (85e6·2) div 300 + (85e6) div 300 = 150000 + 566666 + 283333
-    val r = GraphOps.pagerankWeighted(triples, iters = 1).collect()
+    val r = GraphOps.pagerankWeightedOnEdges(weighted(triples), iters = 1).collect()
       .map(x => (x.getString(0), x.getLong(1))).toMap
     assert(r === Map("A" -> 999999L, "B" -> 999999L,
       "C" -> 1566666L, "D" -> 433333L))
@@ -80,7 +95,7 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("pagerank: one hand-unrolled integer iteration") {
-    val r = GraphOps.pagerank(triples, iters = 1).collect()
+    val r = GraphOps.pagerankOnEdges(pinned(triples), iters = 1).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // contributions: A,B floor(850000/2)=425000; C floor(850000/3)=283333;
     // D 850000. r1 = 150000 + sum(in-contributions)
@@ -89,8 +104,8 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("pagerankPersonalized: one hand-unrolled iteration, seed {A}") {
-    val r = GraphOps.pagerankPersonalized(triples, seeds = Seq("A"), iters = 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val r = GraphOps.pagerankPersonalizedOnEdges(pinned(triples), seeds = Seq("A"),
+      iters = 1).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // r0: A=1e6, rest 0. A's contribution floor(850000/2)=425000 to B and C;
     // every other contribution is 0. Jump 150000 lands on the seed only.
     // D is reached by an edge (from C) but carries zero flow -> rank 0.
@@ -99,7 +114,7 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("kcore: k=2 peel keeps the triangle, drops the tendril") {
-    val r = GraphOps.kcore(triples, k = 2).collect()
+    val r = GraphOps.kcoreOnEdges(pinned(triples), k = 2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // D (deg 1) peels in round 1; the {A,B,C} triangle is the 2-core
     assert(r === Map("A" -> 2L, "B" -> 2L, "C" -> 2L))
@@ -128,7 +143,7 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("ktruss: 3-truss keeps the triangle, drops the bridge") {
-    val r = GraphOps.ktruss(triples, k = 3).collect()
+    val r = GraphOps.ktrussOnEdges(pinned(triples), k = 3).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(r === Map(("A", "B") -> 1L, ("A", "C") -> 1L, ("B", "C") -> 1L))
   }
@@ -178,7 +193,7 @@ class GraphOpsSpec extends SparkTestBase {
     // A-B: supp 1 (C), denom 2+2-2-1=1 -> 1e6 (clique edge)
     // A-C / B-C: supp 1, denom 2+3-2-1=2 -> 500000
     // C-D: supp 0, denom 2 -> 0 (pure bridge)
-    val r = GraphOps.edgeSupport(triples).collect()
+    val r = GraphOps.edgeSupportOnEdges(pinned(triples)).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
       .toMap
     assert(r === Map(
@@ -218,18 +233,18 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("bfs: hop distances from a seed; radius bounds the reached set") {
-    val r = GraphOps.bfs(triples, seeds = Seq("A"), rounds = 4).collect()
+    val r = GraphOps.bfsOnEdges(pinned(triples), seeds = Seq("A"), rounds = 4).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(r === Map("A" -> 0L, "B" -> 1L, "C" -> 1L, "D" -> 2L))
     // radius 1: D (2 hops away) is not reached and is absent
-    val r1 = GraphOps.bfs(triples, seeds = Seq("A"), rounds = 1).collect()
+    val r1 = GraphOps.bfsOnEdges(pinned(triples), seeds = Seq("A"), rounds = 1).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(r1 === Map("A" -> 0L, "B" -> 1L, "C" -> 1L))
   }
 
   test("shortestPaths: weighted relaxation prefers the strong edge") {
     // costs: A-B = 1e6 div 2 = 500000; A-C, B-C, C-D = 1e6
-    val r = GraphOps.shortestPaths(triples, seeds = Seq("A"))
+    val r = GraphOps.shortestPathsOnWeightedEdges(weighted(triples), seeds = Seq("A"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(r === Map("A" -> 0L, "B" -> 500000L,
       "C" -> 1000000L, "D" -> 2000000L))
@@ -244,28 +259,29 @@ class GraphOpsSpec extends SparkTestBase {
     val t = (0 until 7).map(i => (s"d$i", "p", s"n$i")) ++
       (0 until 7).map(i => (s"d$i", "p", s"n${i + 1}"))
     val triples7 = t.toDF("subj", "pred", "obj")
-    val r = GraphOps.shortestPaths(triples7, seeds = Seq("n0")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val r = GraphOps.shortestPathsOnWeightedEdges(weighted(triples7), seeds = Seq("n0"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(r.size === 8 && r("n7") === 7000000L)
-    val hb = GraphOps.hopBoundedShortestPaths(triples7, seeds = Seq("n0"),
+    val hb = GraphOps.hopBoundedShortestPaths(weighted(triples7), seeds = Seq("n0"),
       rounds = 4).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(hb.size === 5 && !hb.contains("n7") && hb("n4") === 4000000L)
     // a cap below the diameter must THROW, never return truncated distances
     val ex = intercept[IllegalStateException] {
-      GraphOps.shortestPaths(triples7, seeds = Seq("n0"), maxRounds = 3).collect()
+      GraphOps.shortestPathsOnWeightedEdges(weighted(triples7), seeds = Seq("n0"),
+        maxRounds = 3).collect()
     }
     assert(ex.getMessage.contains("not converged"))
   }
 
   test("bfs: multi-source takes the min over seeds") {
-    val r = GraphOps.bfs(triples, seeds = Seq("B", "D"), rounds = 4).collect()
+    val r = GraphOps.bfsOnEdges(pinned(triples), seeds = Seq("B", "D"), rounds = 4).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // C is 1 hop from both B and D; A is 1 from B
     assert(r === Map("B" -> 0L, "D" -> 0L, "A" -> 1L, "C" -> 1L))
   }
 
   test("triangles: degree-ordered enumeration finds the one triangle, thrice") {
-    val t = GraphOps.triangles(triples).collect()
+    val t = GraphOps.trianglesOnEdges(pinned(triples)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(t === Map("A" -> 1L, "B" -> 1L, "C" -> 1L))
   }
@@ -280,7 +296,7 @@ class GraphOpsSpec extends SparkTestBase {
     val t = Seq(("D1", "m", "A"), ("D1", "m", "B"), ("D1", "m", "C"),
       ("D2", "m", "X"), ("D2", "m", "Y"), ("D2", "m", "Z"),
       ("D3", "m", "C"), ("D3", "m", "X")).toDF("subj", "pred", "obj")
-    val l = GraphOps.labelPropagation(t, rounds = 3).collect()
+    val l = GraphOps.labelPropagationOnEdges(pinned(t), rounds = 3).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(l === Map("A" -> "A", "B" -> "A", "C" -> "A",
       "X" -> "C", "Y" -> "C", "Z" -> "C"))
@@ -305,7 +321,7 @@ class GraphOpsSpec extends SparkTestBase {
     val t = Seq(("D1", "m", "A"), ("D1", "m", "B"), ("D1", "m", "C"),
       ("D2", "m", "X"), ("D2", "m", "Y"), ("D2", "m", "Z"),
       ("D3", "m", "C"), ("D3", "m", "X")).toDF("subj", "pred", "obj")
-    val conv = GraphOps.labelPropagationConverged(t).collect()
+    val conv = GraphOps.labelPropagationConvergedOnEdges(pinned(t)).collect()
       .map(x => x.getString(0) -> x.getString(1)).toMap
     assert(conv === Map("A" -> "A", "B" -> "A", "C" -> "A",
       "X" -> "C", "Y" -> "C", "Z" -> "C"))
@@ -332,9 +348,11 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("randomWalks: deterministic, edge-valid, walksPerNode walks per entity") {
-    val w1 = GraphOps.randomWalks(triples, steps = 3, walksPerNode = 2).collect()
+    val w1 = GraphOps.randomWalksOnEdges(pinned(triples), steps = 3, walksPerNode = 2)
+      .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    val w2 = GraphOps.randomWalks(triples, steps = 3, walksPerNode = 2).collect()
+    val w2 = GraphOps.randomWalksOnEdges(pinned(triples), steps = 3, walksPerNode = 2)
+      .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     assert(w1.toSet === w2.toSet, "hash-argmin walks must reproduce bit-exactly")
     // 4 entities × 2 walks × (steps+1) positions; step 0 = the seed itself
@@ -363,7 +381,7 @@ class GraphOpsSpec extends SparkTestBase {
     // degenerates to exact counts
     val t = (0 until 4).flatMap(i => Seq((s"d$i", "p", s"N${i}"), (s"d$i", "p", s"N${i + 1}")))
       .toDF("subj", "pred", "obj")
-    val exact = GraphOps.reachSketch(t).collect()
+    val exact = GraphOps.reachSketchOnEdges(pinned(t)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(exact === Map("N0" -> 3L, "N1" -> 4L, "N2" -> 5L, "N3" -> 4L, "N4" -> 3L))
     // k=2: the center's 5-node neighborhood estimates through the KMV
@@ -377,7 +395,7 @@ class GraphOpsSpec extends SparkTestBase {
       val h2 = nodes.map(hash60).sorted.apply(1)
       (BigInt(1152921504606846976L) / BigInt(h2)).toLong
     }
-    val est = GraphOps.reachSketch(t, k = 2).collect()
+    val est = GraphOps.reachSketchOnEdges(pinned(t), k = 2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est("N2") === estOf(Seq("N0", "N1", "N2", "N3", "N4")),
       "KMV estimator mismatch at the center")
@@ -387,7 +405,7 @@ class GraphOpsSpec extends SparkTestBase {
     // harmonic shell sum at exact (below-k) estimates: center N2 has
     // shells |N1|-1 = 2 at distance 1 and |N2|-|N1| = 2 at distance 2 ->
     // 2*1e6 + 2*1e6/2 = 3e6; endpoints 1e6 + 1e6/2
-    val harm = GraphOps.harmonicCentrality(t).collect()
+    val harm = GraphOps.harmonicCentralityOnEdges(pinned(t)).collect()
       .map(r => r.getString(0) -> r.getLong(3)).toMap
     assert(harm === Map("N0" -> 1500000L, "N1" -> 2500000L,
       "N2" -> 3000000L, "N3" -> 2500000L, "N4" -> 1500000L))
@@ -404,7 +422,8 @@ class GraphOpsSpec extends SparkTestBase {
     val triples = ids.combinations(2).flatMap(p =>
       Seq((s"doc-${p(0)}-${p(1)}", "p", p(0)), (s"doc-${p(0)}-${p(1)}", "p", p(1))))
       .toSeq.toDF("subj", "pred", "obj")
-    val w = GraphOps.randomWalks(triples, steps = 2, walksPerNode = 3).collect()
+    val w = GraphOps.randomWalksOnEdges(pinned(triples), steps = 2, walksPerNode = 3)
+      .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
     // every node is connected (pairwise docs), so: |ids| × 3 walks × 3 steps
     assert(w.length === ids.length * 3 * 3,

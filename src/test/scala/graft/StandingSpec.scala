@@ -8,8 +8,8 @@ import graft.kg.graph.GraphOps
 import graft.kg.io.{Dictionaries, GazetteerIO, SyntheticCorpus}
 
 /** The standing-table cache: one build per key, one revalidation rule (a
-  * lookup whose directory is gone rebuilds into a fresh one), and the two
-  * lookups that had no check before it.
+  * lookup whose directory is gone rebuilds into a fresh one and removes the
+  * one it abandons), and the two lookups that had no check before it.
   */
 class StandingSpec extends SparkTestBase {
 
@@ -41,6 +41,18 @@ class StandingSpec extends SparkTestBase {
     // the rebuilt entry is the cached one from then on
     assert(Standing("standing-spec", key)(marker(builds)) === fresh)
     assert(builds.get === 2)
+  }
+
+  test("a failed check removes the directory it abandons") {
+    val builds = new AtomicInteger()
+    val key = s"failed-${System.nanoTime()}"
+    val first = Standing("standing-spec", key)(marker(builds))
+    Files.write(Paths.get(first, "part-0"), Array[Byte](1, 2, 3))
+    Files.delete(Paths.get(first, "_SUCCESS"))
+    val fresh = Standing("standing-spec", key)(marker(builds))
+    assert(fresh !== first)
+    assert(!Files.exists(Paths.get(first)), s"$first was left behind")
+    assert(Standing.committed(fresh))
   }
 
   test("distinct keys, and one key under distinct sites, do not collide") {
